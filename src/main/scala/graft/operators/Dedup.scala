@@ -565,23 +565,12 @@ object Dedup {
     // bounded by doc length. df is corpus-derived (a 100 TB shingle
     // vocabulary is trillions of entries) — shuffle-hash-pinned as
     // the per-partition build side, never broadcast.
-    // r11 (VERDICT r10 #3, guide §2.4): docsets is consumed THREE
-    // times below (the prefix explode + both verification sides).
-    // Without the explicit repartition the three subtrees only share
-    // the exchange UNDER the aggregate, so the tok⋈df probe, the
-    // collect_list build and the per-doc sort_array ran 3×. The
-    // repartition plans ONE exchange of the finished doc-level rows
-    // (doc_id-keyed — exactly the distribution both verification
-    // joins need) that all three consumers reuse; the aggregate runs
-    // once. A/B'd at sf0.1 AND at the ≈sf1 10× full-referential set
-    // (the inversion guard the r10 deferral required).
     val docsets = tok.join(df.hint("shuffle_hash"), "token")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("token")))).as("ord"))
       .select(col("doc_id"),
         expr("transform(ord, s -> s.token)").as("toks"),
         size(col("ord")).cast("long").as("sz"))
-      .repartition(col("doc_id"))
     // prefix length p = sz − ⌈τ·sz⌉ + 1 with τ = 3/5, integer-exact
     val prefix = docsets
       .select(col("doc_id"), col("sz"),

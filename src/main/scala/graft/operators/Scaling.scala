@@ -45,6 +45,11 @@ object Scaling {
         expr(s"(size * ${Target}L) % total").as("frac"))
     val deficit = withTotal
       .agg((lit(Target) - sum(col("base"))).as("deficit"))
+    // Unpartitioned window by design: its input is one row per cell
+    // (event_type), so the single partition it moves holds |cells| rows
+    // (5 in the test data), whatever the event volume. Spark's "No
+    // Partition Defined for Window operation" warning on every daily
+    // run refers to this bounded relation.
     withTotal.crossJoin(broadcast(deficit))
       .withColumn("rnk", row_number().over(
         Window.orderBy(col("frac").desc, col("event_type").asc)))

@@ -106,8 +106,18 @@ object Pipeline {
 
   /** End-to-end daily run: events → NTL homes → interactions →
     * contact matrix → SBM network → SEIR — the whole reference handler
-    * chain (§3.2) as one lazy composition with two checkpoints
-    * (matrix collect for the generator; simulation output).
+    * chain (§3.2) as one lazy composition, materialized at four
+    * driver-side points, each bounded by the scaled network rather
+    * than by the events:
+    *  - the cached contact matrix (|cells|² rows), first computed by the
+    *    SBM edge collect;
+    *  - the scaled block sizes, collected (|cells| rows);
+    *  - the SBM edges, collected once for the adjacency (≤ V(V−1)/2 rows
+    *    for V ≤ Scaling.Target/100 + |cells| test-scale nodes); the
+    *    returned edges are a DataFrame over those rows, so the GraphML
+    *    sink never re-runs the cross join;
+    *  - the SEIR statuses, collected once by `Seir.runMany`
+    *    (seeds × V rows); both status writes read those rows.
     * Returns (matrix, networkVertices, networkEdges, seirStatus).
     */
   def dailyRun(spark: SparkSession, cfg: RunConfig, seeds: Range)
@@ -123,12 +133,14 @@ object Pipeline {
     val probs = matrix.select(col("a_home").as("block_a"),
       col("b_home").as("block_b"), col("prob"))
 
-    val (vertices, edges) = graft.graph.Sbm.generate(spark,
+    val (vertices, sbmEdges) = graft.graph.Sbm.generate(spark,
       sizes.map { case (b, n) => b -> math.max(1L, n / 100) }, // test-scale nodes
       probs, seed = 3696L)
+    val edgeRows = sbmEdges.collect()
+    val edges = spark.createDataFrame(java.util.Arrays.asList(edgeRows: _*), sbmEdges.schema)
 
     // adjacency (scaled networks are small by design — SURVEY §7.3)
-    val adj = edges.collect()
+    val adj = edgeRows
       .flatMap(r => Seq(
         r.getString(0).toLong -> r.getString(1).toLong,
         r.getString(1).toLong -> r.getString(0).toLong))

@@ -1,7 +1,7 @@
 package graft.sim
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import scala.collection.mutable
+import graft.operators.Scaling
 
 /** Gillespie SEIR simulation over a contact network
   * (/root/reference/scripts/SimulationManager.py:89-241,
@@ -11,9 +11,12 @@ import scala.collection.mutable
   *
   * A single epidemic trajectory is inherently sequential, so one run
   * executes on one core over the (scaled, ≤10⁴-node) network — exactly
-  * the reference's per-process design — and the 100-seeds-per-network
-  * fan-out distributes as one Spark task per seed with the adjacency
-  * broadcast (mirrors mp.Pool(10) at SimulationManager.py:371-372).
+  * the reference's per-process design. The 100-seeds-per-network
+  * fan-out (mp.Pool(10) at SimulationManager.py:371-372) runs as one
+  * Spark job of min(seeds, defaultParallelism) tasks over the
+  * broadcast network, and its statuses are collected once to the
+  * driver (≤ seeds × Scaling.Target rows), so every consumer reads the
+  * same materialized trajectories instead of re-simulating them.
   */
 object Seir {
 
@@ -23,76 +26,173 @@ object Seir {
     */
   final case class NodeStatus(seed: Long, nodeId: Long, tE: Double, tI: Double, tR: Double)
 
+  private final val S: Byte = 0
+  private final val E: Byte = 1
+  private final val I: Byte = 2
+  private final val R: Byte = 3
+
+  /** The contact network in array form. Nodes are dense indices in
+    * ascending id order, so "the k-th node of a set in index order" is
+    * "the k-th smallest id". Initial infected nodes outside the
+    * adjacency get an index too — they count in the I→R rate and the
+    * recovery pick — but no status row.
+    *
+    * @param ids     index → node id, ascending
+    * @param inGraph whether the index is an adjacency node (key or
+    *                neighbour) and so gets a status row
+    * @param off     CSR row offsets: the neighbours of i are
+    *                nbr(off(i) until off(i + 1)), in the caller's array
+    *                order, duplicates kept
+    * @param roff    reverse CSR: rnbr(roff(v) until roff(v + 1)) are the
+    *                u with v in adj(u), once per occurrence
+    * @param initial the initial infected nodes' indices
+    */
+  private[sim] final class Network(val ids: Array[Long], val inGraph: Array[Boolean],
+      val off: Array[Int], val nbr: Array[Int], val roff: Array[Int], val rnbr: Array[Int],
+      val initial: Array[Int]) extends Serializable {
+    def graphNodes: Int = inGraph.count(identity)
+  }
+
+  private[sim] def network(adj: Map[Long, Array[Long]], initialInfected: Seq[Long]): Network = {
+    val graph = (adj.keysIterator ++ adj.valuesIterator.flatMap(_.iterator)).toArray.distinct.sorted
+    val ids = (graph ++ initialInfected).distinct.sorted
+    def index(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val n = ids.length
+    val inGraph = ids.map(id => java.util.Arrays.binarySearch(graph, id) >= 0)
+    val rows = ids.map(id => adj.getOrElse(id, Array.emptyLongArray).map(index))
+    val off = rows.scanLeft(0)(_ + _.length)
+    val nbr = rows.flatten
+    val inDeg = new Array[Int](n)
+    nbr.foreach(v => inDeg(v) += 1)
+    val roff = inDeg.scanLeft(0)(_ + _)
+    val fill = roff.clone()
+    val rnbr = new Array[Int](nbr.length)
+    for (u <- 0 until n; k <- off(u) until off(u + 1)) {
+      val v = nbr(k)
+      rnbr(fill(v)) = u
+      fill(v) += 1
+    }
+    new Network(ids, inGraph, off, nbr, roff, rnbr, initialInfected.map(index).toArray)
+  }
+
   /** One Gillespie SEIR trajectory. Events: S→E (rate beta per SI
     * edge), E→I (sigma), I→R (gamma). Seeded and reproducible.
     */
   def run(adj: Map[Long, Array[Long]], beta: Double, sigma: Double,
       gamma: Double, initialInfected: Seq[Long], tmax: Double,
-      seed: Long): Seq[NodeStatus] = {
+      seed: Long): Seq[NodeStatus] =
+    simulate(network(adj, initialInfected), beta, sigma, gamma, tmax, seed)
+
+  /** The trajectory kernel. An SI edge is an S entry in an infected
+    * node's adjacency row; `sOut(u)` counts the S entries of row u and
+    * `si` sums it over infected u, both kept current on every event
+    * through the reverse adjacency. The infection pick walks infected
+    * nodes in id order and each row in array order, so every seed
+    * draws the same random numbers and picks the same nodes as a
+    * direct enumeration of the SI edges in that order.
+    */
+  private[sim] def simulate(g: Network, beta: Double, sigma: Double,
+      gamma: Double, tmax: Double, seed: Long): Seq[NodeStatus] = {
     val rnd = new java.util.Random(seed)
-    val S = 0; val E = 1; val I = 2; val R = 3
-    val state = mutable.Map.empty[Long, Int].withDefaultValue(S)
-    val tE = mutable.Map.empty[Long, Double]
-    val tI = mutable.Map.empty[Long, Double]
-    val tR = mutable.Map.empty[Long, Double]
-    val exposed = mutable.Set.empty[Long]
-    val infected = mutable.Set.empty[Long]
-    initialInfected.foreach { n =>
-      state(n) = I; tI(n) = 0.0; infected += n
+    val n = g.ids.length
+    val state = new Array[Byte](n)
+    val tE = Array.fill(n)(Double.NaN)
+    val tI = Array.fill(n)(Double.NaN)
+    val tR = Array.fill(n)(Double.NaN)
+    val exposed = new java.util.BitSet(n)
+    val infected = new java.util.BitSet(n)
+    g.initial.foreach { i => state(i) = I; tI(i) = 0.0; infected.set(i) }
+    var nE = 0
+    var nI = infected.cardinality()
+    val sOut = new Array[Int](n)
+    var si = 0
+    for (u <- 0 until n) {
+      var k = g.off(u)
+      while (k < g.off(u + 1)) { if (state(g.nbr(k)) == S) sOut(u) += 1; k += 1 }
+      if (state(u) == I) si += sOut(u)
+    }
+    // the index of the k-th (0-based) set bit
+    def nth(set: java.util.BitSet, k: Int): Int = {
+      var i = set.nextSetBit(0)
+      var j = k
+      while (j > 0) { i = set.nextSetBit(i + 1); j -= 1 }
+      i
+    }
+    // the susceptible end of the k-th SI edge
+    def siTarget(k0: Int): Int = {
+      var k = k0
+      var i = infected.nextSetBit(0)
+      while (k >= sOut(i)) { k -= sOut(i); i = infected.nextSetBit(i + 1) }
+      var e = g.off(i)
+      while (state(g.nbr(e)) != S || k > 0) {
+        if (state(g.nbr(e)) == S) k -= 1
+        e += 1
+      }
+      g.nbr(e)
     }
     var t = 0.0
-    while (t < tmax && (infected.nonEmpty || exposed.nonEmpty)) {
-      // rates
-      val siEdges = infected.toSeq.sorted.flatMap { i =>
-        adj.getOrElse(i, Array.empty[Long]).filter(state(_) == S).map(s => (i, s))
-      }
-      val rateInfect = beta * siEdges.size
-      val rateProgress = sigma * exposed.size
-      val rateRecover = gamma * infected.size
+    var done = false
+    while (!done && t < tmax && (nI > 0 || nE > 0)) {
+      val rateInfect = beta * si
+      val rateProgress = sigma * nE
+      val rateRecover = gamma * nI
       val total = rateInfect + rateProgress + rateRecover
-      if (total <= 0) return result(adj, tE, tI, tR, seed)
-      t += -math.log(1.0 - rnd.nextDouble()) / total
-      if (t >= tmax) return result(adj, tE, tI, tR, seed)
-      val u = rnd.nextDouble() * total
-      if (u < rateInfect) {
-        val (_, s) = siEdges(rnd.nextInt(siEdges.size))
-        state(s) = E; tE(s) = t; exposed += s
-      } else if (u < rateInfect + rateProgress) {
-        val picks = exposed.toSeq.sorted
-        val n = picks(rnd.nextInt(picks.size))
-        state(n) = I; tI(n) = t; exposed -= n; infected += n
-      } else {
-        val picks = infected.toSeq.sorted
-        val n = picks(rnd.nextInt(picks.size))
-        state(n) = R; tR(n) = t; infected -= n
+      if (total <= 0) done = true
+      else {
+        t += -math.log(1.0 - rnd.nextDouble()) / total
+        if (t >= tmax) done = true
+        else {
+          val u = rnd.nextDouble() * total
+          if (u < rateInfect) {
+            val s = siTarget(rnd.nextInt(si))
+            state(s) = E; tE(s) = t; exposed.set(s); nE += 1
+            var k = g.roff(s)
+            while (k < g.roff(s + 1)) {
+              val w = g.rnbr(k)
+              sOut(w) -= 1
+              if (state(w) == I) si -= 1
+              k += 1
+            }
+          } else if (u < rateInfect + rateProgress) {
+            val v = nth(exposed, rnd.nextInt(nE))
+            state(v) = I; tI(v) = t
+            exposed.clear(v); nE -= 1; infected.set(v); nI += 1
+            si += sOut(v)
+          } else {
+            val v = nth(infected, rnd.nextInt(nI))
+            state(v) = R; tR(v) = t
+            infected.clear(v); nI -= 1
+            si -= sOut(v)
+          }
+        }
       }
     }
-    result(adj, tE, tI, tR, seed)
+    (0 until n).filter(i => g.inGraph(i)).map(i => NodeStatus(seed, g.ids(i), tE(i), tI(i), tR(i)))
   }
 
-  private def result(adj: Map[Long, Array[Long]],
-      tE: mutable.Map[Long, Double], tI: mutable.Map[Long, Double],
-      tR: mutable.Map[Long, Double], seed: Long): Seq[NodeStatus] = {
-    val nodes = (adj.keySet ++ adj.values.flatten).toSeq.sorted
-    nodes.map(n => NodeStatus(seed, n,
-      tE.getOrElse(n, Double.NaN), tI.getOrElse(n, Double.NaN),
-      tR.getOrElse(n, Double.NaN)))
-  }
-
-  /** Seed fan-out as a Spark job: one task per seed, adjacency
-    * broadcast (the distributed analog of the reference's process
-    * pool).
+  /** Seed fan-out as one Spark job of min(seeds, defaultParallelism)
+    * tasks over the broadcast network (the distributed analog of the
+    * reference's process pool). The statuses are collected once and
+    * returned as a DataFrame over those rows, so writing them and
+    * aggregating them never re-runs a trajectory. The collect holds
+    * seeds × network nodes rows; the network is a scaled one, so it
+    * has at most Scaling.Target nodes, which is checked.
     */
   def runMany(spark: SparkSession, adj: Map[Long, Array[Long]],
       beta: Double, sigma: Double, gamma: Double,
       initialInfected: Seq[Long], tmax: Double, seeds: Range): DataFrame = {
     import spark.implicits._
-    val bAdj = spark.sparkContext.broadcast(adj)
-    val bInit = spark.sparkContext.broadcast(initialInfected)
-    spark.createDataset(seeds.toSeq)
-      .repartition(math.min(seeds.size, 32))
-      .flatMap(s => run(bAdj.value, beta, sigma, gamma, bInit.value, tmax, s.toLong))
-      .toDF()
+    val net = network(adj, initialInfected)
+    require(net.graphNodes <= Scaling.Target,
+      s"SEIR runs on a scaled network (≤ ${Scaling.Target} nodes), got ${net.graphNodes}")
+    val sc = spark.sparkContext
+    val bNet = sc.broadcast(net)
+    val rows = try {
+      sc.parallelize(seeds.map(_.toLong), math.max(1, math.min(seeds.size, sc.defaultParallelism)))
+        .flatMap(s => simulate(bNet.value, beta, sigma, gamma, tmax, s))
+        .collect()
+    } finally bNet.destroy()
+    spark.createDataset(rows.toSeq).toDF()
   }
 
   /** Post-simulation analytics: infected count per block

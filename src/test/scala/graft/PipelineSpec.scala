@@ -1,13 +1,19 @@
 package graft
 
 import java.time.LocalDate
+import scala.collection.mutable
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.time.SpanSugar._
 import graft.pipeline.Pipeline
 import graft.pipeline.Pipeline.{Dates, RunConfig}
 
-class PipelineSpec extends AnyFunSuite {
+class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private lazy val spark: SparkSession = {
     val s = Sessions.build("graft-test", "4")
@@ -72,5 +78,50 @@ class PipelineSpec extends AnyFunSuite {
     val simNodes = status.select("nodeId").distinct().collect()
       .map(_.getLong(0)).toSet
     assert(simNodes.subsetOf(nodeIds))
+  }
+
+  /** The executed plans of the `n` queries `action` runs, as node class
+    * names (through AQE stages and write commands).
+    */
+  private def executedNodes(n: Int)(action: => Unit): Seq[Seq[String]] = {
+    val plans = mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan }
+      def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      action
+      eventually(timeout(30.seconds)) { assert(plans.synchronized(plans.size) >= n) }
+    } finally spark.listenerManager.unregister(listener)
+    plans.synchronized(plans.toSeq).map(p => collectWithSubqueries(p) { case x => x.nodeName })
+  }
+
+  test("daily run: the SEIR fan-out and the SBM cross join each run once") {
+    val (_, vertices, edges, status) = Pipeline.dailyRun(spark, cfg, seeds = 0 until 4)
+    val out = java.nio.file.Files.createTempDirectory("graft-daily").toString
+    // GraphML.write collects the vertices and the edges
+    val graphml = executedNodes(2) {
+      graft.sources.GraphML.write(vertices, edges, s"$out/network.graphml")
+    }
+    val seirWrite = executedNodes(1) {
+      status.write.mode("overwrite").parquet(s"$out/seir_status")
+    }
+    val blocks = vertices.selectExpr("CAST(node_id AS LONG) AS nodeId",
+      "attrs['block'] AS block")
+    val infectedWrite = executedNodes(1) {
+      graft.sim.Seir.infectedPerBlock(status, blocks)
+        .write.mode("overwrite").parquet(s"$out/infected_per_block")
+    }
+    graphml.foreach { p =>
+      assert(!p.exists(Set("CartesianProduct", "BroadcastNestedLoopJoin")),
+        s"the GraphML edges must be the rows dailyRun collected: $p")
+    }
+    (seirWrite ++ infectedWrite).foreach { p =>
+      assert(p.contains("LocalTableScan"), s"must read the collected statuses: $p")
+      assert(!p.exists(Set("MapPartitions", "DeserializeToObject", "SerializeFromObject")),
+        s"must not re-run the SEIR trajectories: $p")
+    }
   }
 }

@@ -1,6 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.Attribute
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Plan contracts: the scale-critical physical shapes PLANS.md and
@@ -9,9 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * of silently costing a shuffle at 100 TB. Plans are taken AFTER
   * execution, so AQE's final (re-optimized) plan is what's asserted.
   */
-class PlanContractSpec extends AnyFunSuite {
+class PlanContractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
   private val sf = "/root/testdata/sf0.001"
+  private val sf01 = "/root/testdata/sf0.01"
 
   private lazy val spark: SparkSession = {
     val s = Sessions.build("graft-test", "4")
@@ -19,19 +25,32 @@ class PlanContractSpec extends AnyFunSuite {
     s
   }
 
-  /** Execute the registered op and return the final adaptive plan
-    * only (the AdaptiveSparkPlan toString appends the pre-AQE
-    * "Initial Plan" section, which would double every count).
-    */
-  private def finalPlan(name: String, sfDir: String = sf): String = {
+  /** Execute the registered op and return its final adaptive plan tree. */
+  private def finalTree(name: String, sfDir: String = sf): SparkPlan = {
     val df = SparkEntry.queries(name)(spark, sfDir)
     df.collect()
-    val s = df.queryExecution.executedPlan.toString
-    s.split("== Initial Plan ==")(0)
+    df.queryExecution.executedPlan
   }
+
+  /** The final adaptive plan's text only (the AdaptiveSparkPlan
+    * toString appends the pre-AQE "Initial Plan" section, which would
+    * double every count).
+    */
+  private def finalText(plan: SparkPlan): String =
+    plan.toString.split("== Initial Plan ==")(0)
+
+  private def finalPlan(name: String, sfDir: String = sf): String =
+    finalText(finalTree(name, sfDir))
 
   private def count(plan: String, needle: String): Int =
     plan.sliding(needle.length).count(_ == needle)
+
+  /** The key column names of every hash-partitioned shuffle exchange. */
+  private def hashExchangeKeys(plan: SparkPlan): Seq[Seq[String]] =
+    collect(plan) { case e: ShuffleExchangeExec => e.outputPartitioning }
+      .collect { case h: HashPartitioning =>
+        h.expressions.map { case a: Attribute => a.name; case x => x.sql }
+      }
 
   test("interaction_pairs: one corpus shuffle, no fact-table broadcast") {
     val p = finalPlan("interaction_pairs")
@@ -345,15 +364,21 @@ class PlanContractSpec extends AnyFunSuite {
   }
 
   test("sparse_cosine_pairs: one gram exchange + in-group pair explode, never all-pairs") {
-    val p = finalPlan("sparse_cosine_pairs", "/root/testdata/sf0.01")
+    val tree = finalTree("sparse_cosine_pairs", sf01)
+    val p = finalText(tree)
     // docs meet ONLY through the per-gram posting list: one exchange
     // on the gram hash (ObjectHashAggregate collect_list), pairs
     // explode in-group, then one exchange on the doc pair — no join
     // of any kind, so no all-pairs path can exist
     assert(p.contains("ObjectHashAggregate"),
       "posting lists must build on the gram exchange:\n" + p.take(2000))
-    assert(count(p, "Generate explode") >= 3,
-      "row-local tf explode + the two in-group pair explodes:\n" + p.take(2000))
+    // exactly two Generate nodes: the row-local tf explode and ONE
+    // in-group pair explode through the posting_pairs kernel — a third
+    // means the pair pass is duplicated
+    val generators = collect(tree) { case g: GenerateExec => g.generator.toString }
+    assert(generators.size == 2 && generators.exists(_.contains("posting_pairs(")),
+      "row-local tf explode + the posting_pairs pair explode: " + generators +
+        "\n" + p.take(2000))
     assert(!p.contains("Join"), "no join of any kind — pairs form in-group")
     assert(count(p, "Exchange hashpartitioning") == 2,
       "exactly two corpus exchanges: gram postings + doc-pair agg:\n" + p.take(2000))
@@ -365,14 +390,22 @@ class PlanContractSpec extends AnyFunSuite {
     // scale in BOTH prune-selectivity regimes, so the DEFAULT plan is
     // the direct exchange. A second sketch pass appearing here means
     // the default regressed to opt-in-PCY.
-    val p = finalPlan("item_item_cosine", "/root/testdata/sf0.01")
+    val tree = finalTree("item_item_cosine", sf01)
+    val p = finalText(tree)
     assert(!p.contains("pcy_prune") && !p.contains("pcy_sketch"),
       "default must be the direct path — PCY is opt-in:\n" + p.take(2000))
     assert(count(p, "Generate explode") == 2,
       "ONE pair explode + the itemCnt explode — a 3rd means a " +
         "duplicated pair pass:\n" + p.take(2000))
-    assert(count(p, "Exchange hashpartitioning(ia") == 1,
-      "exactly one pair exchange:\n" + p.take(2000))
+    // exactly one pair exchange, keyed by the route the u32 chooser took
+    val keys = hashExchangeKeys(tree)
+    val (pairKey, otherKey) =
+      if (operators.Recommend.itemIdsPackU32(spark, sf01))
+        (Seq("pk"), Seq("ia", "ib")) // both ids < 2^32: one packed long
+      else
+        (Seq("ia", "ib"), Seq("pk")) // unpacked: the (ia, ib) pair
+    assert(keys.count(_ == pairKey) == 1 && !keys.contains(otherKey),
+      s"exactly one pair exchange on ${pairKey.mkString(", ")}: $keys\n" + p.take(2000))
   }
 
   test("item_item_cosine (usePcy): prune sits below the pair exchange") {
