@@ -21,20 +21,14 @@ object Bench {
     // optimized to 0.45 s — the exact failure mode §1.4 warns about).
     // The paired DuckDB harness always materialized full results
     // (fetchall), so count-based ratios silently flattered the Spark
-    // side on value-heavy queries. GRAFT_BENCH_ACTION=count keeps the
-    // old action runnable for cross-methodology bridges (the r10
-    // OPTIMIZATION doc carries the per-query bridge table).
-    val legacyCount = sys.env.get("GRAFT_BENCH_ACTION").contains("count")
-    System.err.println(s"[bench] timed action=${if (legacyCount) "count" else "noop"}")
+    // side on value-heavy queries (the r10 OPTIMIZATION doc carries the
+    // per-query count-vs-noop bridge table).
     // A crashing bench op must fail the run LOUDLY: swallowing it
     // would record a ~0 s "time" for the op and the headline total
     // would IMPROVE on a regression that broke the query.
     def runOnce(op: Op): Unit =
-      try {
-        val df = op.run(spark, sfDir)
-        if (legacyCount) { df.count(); () }
-        else df.write.format("noop").mode("overwrite").save()
-      } catch {
+      try op.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+      catch {
         case e: Throwable =>
           System.err.println(s"[bench] FATAL: ${op.name} failed: $e")
           spark.stop()
@@ -172,18 +166,6 @@ object Bench {
     spark.stop()
   }
 
-  /** Minimal JSON string escaping for the oracle-SQL handoff file. */
-  private def jsonStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-
   /** Run every bench query's oracle SQL through tools/bench_duckdb.py
     * (min-of-5, same session) and return per-query seconds; None when
     * the driver-side python/duckdb isn't available.
@@ -192,8 +174,9 @@ object Bench {
     val queries = SparkEntry.benchQueries
       .flatMap(op => SparkEntry.oracleSql.get(op.name).map(op.name -> _))
     if (queries.isEmpty) return None
-    val spec = queries.map { case (n, sql) => jsonStr(n) + ":" + jsonStr(sql) }
-      .mkString(s"""{"sf":${jsonStr(sfDir)},"runs":5,"queries":{""", ",", "}}")
+    import Verify.jsonString
+    val spec = queries.map { case (n, sql) => jsonString(n) + ":" + jsonString(sql) }
+      .mkString(s"""{"sf":${jsonString(sfDir)},"runs":5,"queries":{""", ",", "}}")
     val specPath = java.nio.file.Files.createTempFile("bench_duck", ".json")
     val errPath = java.nio.file.Files.createTempFile("bench_duck", ".err")
     val (out, err, rc) = try {

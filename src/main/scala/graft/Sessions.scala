@@ -8,10 +8,12 @@ import org.apache.spark.sql.SparkSession
 object Sessions {
   private val localDir =
     sys.env.getOrElse("GRAFT_LOCAL_DIR", "/dev/shm/spark-local")
-  // Exact-path match: a sibling like /dev/shm-backup is NOT tmpfs and
-  // must keep shuffle compression on.
-  private val localDirIsTmpfs =
-    localDir == "/dev/shm" || localDir.startsWith("/dev/shm/")
+
+  /** Whether `dir` lives in tmpfs. Exact-path match: a sibling like
+    * /dev/shm-backup is NOT tmpfs and must keep shuffle compression on.
+    */
+  private[graft] def isTmpfs(dir: String): Boolean =
+    dir == "/dev/shm" || dir.startsWith("/dev/shm/")
 
   def build(appName: String, cpus: String): SparkSession =
     SparkSession.builder()
@@ -20,15 +22,13 @@ object Sessions {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true"))
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // prefer fewer, fuller post-shuffle partitions over max
       // parallelism: at the local latency floor each extra task is pure
       // scheduling overhead, and at cluster scale the advisory size
       // still governs
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("GRAFT_PARALLELISM_FIRST", "false"))
+      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
       // Advisory post-shuffle partition size. The 64 MB default is a
       // cluster number: at single-node bench scale it coalesces every
       // mid-size shuffle to ONE partition, so the expensive final-agg /
@@ -37,15 +37,13 @@ object Sessions {
       // those stages parallel locally; on a real cluster the shuffle
       // partition count (thousands) times a larger advisory governs —
       // operators never depend on this value for correctness.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        sys.env.getOrElse("GRAFT_ADVISORY_BYTES", "1m"))
+      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
       // Scan-split sizing, same reasoning as the advisory above: the
       // 128 MB default is a cluster number — at bench SF it gives the
       // whole lineitem file to 1-3 tasks, so every scan-rooted stage
-      // (joins, partial aggs) starts parallelism-starved. Env knob for
-      // A/B; operators never depend on it for correctness.
-      .config("spark.sql.files.maxPartitionBytes",
-        sys.env.getOrElse("GRAFT_MAX_PARTITION_BYTES", "16m"))
+      // (joins, partial aggs) starts parallelism-starved. Operators
+      // never depend on it for correctness.
+      .config("spark.sql.files.maxPartitionBytes", "16m")
       // testdata events.parquet stores TIMESTAMP(NANOS); Spark 4 only
       // reads it via this conf (as LongType nanos — normalized back to
       // TimestampType in Tables.events).
@@ -71,11 +69,9 @@ object Sessions {
       // shuffle blocks in RAM buy no IO from lz4 and pay its CPU in
       // the row-heavy exchanges. The default is therefore DERIVED from
       // where the blocks actually live — a disk-backed GRAFT_LOCAL_DIR
-      // flips compression back on unless explicitly overridden.
-      .config("spark.shuffle.compress", sys.env.getOrElse(
-        "GRAFT_SHUFFLE_COMPRESS", (!localDirIsTmpfs).toString))
-      .config("spark.shuffle.spill.compress", sys.env.getOrElse(
-        "GRAFT_SHUFFLE_COMPRESS", (!localDirIsTmpfs).toString))
+      // flips compression back on.
+      .config("spark.shuffle.compress", (!isTmpfs(localDir)).toString)
+      .config("spark.shuffle.spill.compress", (!isTmpfs(localDir)).toString)
       // bucketed-table ops (bucketed_join_agg) write managed tables;
       // keep the warehouse out of the repo and off the stalling root fs
       .config("spark.sql.warehouse.dir",

@@ -52,8 +52,8 @@ object Clustering {
     * claim). Past the cap the star contraction runs unchanged, so
     * nothing edge-count-unbounded ever reaches the driver. NOTE the
     * kernel works eagerly at construction (count + collect happen at
-    * plan-build time) — bench with GRAFT_REBUILD=1 like the other
-    * adaptive kernels.
+    * plan-build time), so `op.run` must sit inside the timed region,
+    * as perfbench query_mix times it.
     *
     * `maxLocalEdges` is a spec knob (0 forces the distributed path);
     * production callers use the default.

@@ -195,8 +195,8 @@ object Interactions {
     * downgrade to broadcast at toy SF; the hint keeps the plan
     * shuffle-shaped where it matters.
     */
-  /** The r2–r6 two-join spelling, kept for the A/B harness
-    * (DevContactsAB) and the equivalence spec: pairs explode unlabeled,
+  /** The r2–r6 two-join spelling, kept as the reference of the
+    * equivalence spec (R13Spec): pairs explode unlabeled,
     * then two device-key shuffle-hash joins attach the homes. Replaced
     * as the registered query by [[observedContacts]] (the fused
     * spelling) in r7 — measured 0.65 → 0.50 s at sf0.1 with identical

@@ -152,7 +152,7 @@ object StringSim {
   }
 
   /** Pair kernels for the cross-engine fuzz (tools/fuzz_string_sim.py
-    * via [[graft.DevPairKernelDump]]): Spark Column kernel + the DuckDB
+    * via [[graft.tools.KernelDump]]): Spark Column kernel + the DuckDB
     * expression over columns `a`,`b` computing the identical value.
     * The CASE guards mirror graft's total-function conventions at the
     * corners where DuckDB's builtins throw (empty input for jaccard,

@@ -105,6 +105,20 @@ class PairKernelSpec extends AnyFunSuite {
     assert(viaKernel.size == 4 * 3 / 2 + 1) // C(4,2) + C(2,2)
   }
 
+  test("posting_pairs rejects a struct with the right types but swapped names") {
+    import spark.implicits._
+    val swapped = Seq(Seq((1L, 2L, 3L), (4L, 5L, 6L))).toDF("raw")
+      .select(expr(
+        "transform(raw, r -> named_struct('tf', r._1, 'doc_id', r._2, 'n2', r._3))")
+        .as("ps"))
+    val e = intercept[org.apache.spark.sql.AnalysisException] {
+      swapped.select(explode(call_function("posting_pairs", col("ps"))))
+    }
+    assert(e.getMessage.contains(
+      "posting_pairs expects ARRAY<STRUCT<doc_id: BIGINT, tf: BIGINT, n2: BIGINT>>"),
+      e.getMessage)
+  }
+
   test("itemIdsPackU32 proves the bound from footers and routes correctly") {
     // the bench fixtures' partkeys fit u32; the 10× full-referential
     // replica offsets them past 2^32 — both routes are exercised by

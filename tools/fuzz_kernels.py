@@ -1,8 +1,8 @@
 #!/usr/bin/env python3
 """Cross-ENGINE fuzz of the string kernels (strip_html,
 canonicalize_url): generate an adversarial corpus, run it through the
-Spark Column kernels (graft.DevKernelDump) AND through the registered
-DuckDB SQL expressions, and diff row-for-row.
+Spark Column kernels (graft.tools.KernelDump unary) AND through the
+registered DuckDB SQL expressions, and diff row-for-row.
 
 The in-JVM fuzz spec (WebKernelFuzzSpec) validates the Column plumbing
 against a java.util.regex model — but the engine IS java.regex, so it
@@ -68,7 +68,7 @@ def run(n, seed):
 
     r = subprocess.run(
         ["sbt", "-batch",
-         f"runMain graft.DevKernelDump {work}/corpus.parquet {work}/out"],
+         f"runMain graft.tools.KernelDump unary {work}/corpus.parquet {work}/out"],
         capture_output=True, text=True, cwd=str(REPO))
     if r.returncode != 0:
         print(r.stdout[-2000:], r.stderr[-1000:])

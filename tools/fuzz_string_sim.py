@@ -5,7 +5,7 @@ lev_bytes — NOT Spark's builtin levenshtein, which walks code points
 where DuckDB walks bytes and legitimately diffs on every multibyte
 pair; lev_bytes exists because this tool proved that): generate
 adversarial string pairs,
-run them through the Spark Catalyst expressions (graft.DevPairKernelDump)
+run them through the Spark Catalyst expressions (graft.tools.KernelDump pair)
 AND through DuckDB's builtins of the same name, and diff row-for-row.
 
 The pair generator is edit-shaped: identical strings, single
@@ -93,7 +93,7 @@ def run(n, seed):
 
     r = subprocess.run(
         ["sbt", "-batch",
-         f"runMain graft.DevPairKernelDump {work}/corpus.parquet {work}/out"],
+         f"runMain graft.tools.KernelDump pair {work}/corpus.parquet {work}/out"],
         capture_output=True, text=True, cwd=str(REPO))
     if r.returncode != 0:
         print(r.stdout[-2000:], r.stderr[-1000:])
