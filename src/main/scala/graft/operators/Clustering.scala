@@ -42,18 +42,20 @@ object Clustering {
     *
     * Adaptive (the GraphMetrics kernel discipline): the edge relation
     * every caller feeds this is MATCH-bounded — LSH candidate pairs,
-    * fuzzy-linkage matches — i.e. ≪ the corpus that produced it. When
-    * the exact distinct-edge count is ≤ [[MaxLocalEdges]] the O(log²)
-    * star rounds (≈5-7 chained jobs, each paying the 0.1-0.3 s/job
-    * scheduling floor) collapse to ONE bounded collect + a driver
-    * union-find, integer-exact by construction (labels are min
-    * reachable ids — set semantics, no float discipline needed; the
-    * kernel-equality spec in ClusteringSpec is the whole correctness
-    * claim). Past the cap the star contraction runs unchanged, so
-    * nothing edge-count-unbounded ever reaches the driver. NOTE the
-    * kernel works eagerly at construction (count + collect happen at
-    * plan-build time), so `op.run` must sit inside the timed region,
-    * as perfbench query_mix times it.
+    * fuzzy-linkage matches — i.e. ≪ the corpus that produced it. One
+    * job collects at most [[MaxLocalEdges]] + 1 distinct edges; when
+    * they number ≤ MaxLocalEdges, the O(log²) star rounds (≈5-7
+    * chained jobs, each paying the 0.1-0.3 s/job scheduling floor)
+    * collapse to that ONE bounded collect + a driver union-find,
+    * integer-exact by construction (labels are min reachable ids — set
+    * semantics, no float discipline needed; the kernel-equality spec in
+    * ClusteringKernelSpec is the whole correctness claim). Past the
+    * cap the star contraction runs unchanged, so nothing
+    * edge-count-unbounded ever reaches the driver. NOTE both
+    * paths work eagerly at construction (the bounded collect, and past
+    * the cap every round's checkpoint, run at plan-build time), so
+    * `op.run` must sit inside the timed region, as perfbench query_mix
+    * times it.
     *
     * `maxLocalEdges` is a spec knob (0 forces the distributed path);
     * production callers use the default.
@@ -70,23 +72,22 @@ object Clustering {
       .select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
       .distinct()
-    // The chooser and the kernel's input are ONE job: distinct →
-    // limit(cap+1) → collect. The limit bounds the driver footprint
-    // (never more than cap+1 rows land, however big the graph), the
-    // overflow row IS the chooser verdict, and no separate count or
-    // checkpoint job runs on the common bounded path. The fallback
-    // re-derives the distinct once for its own checkpoint — the rare
-    // >cap case pays one extra pass, not the common case three jobs.
-    val capRows = math.min(maxLocalEdges, (Int.MaxValue - 1).toLong).toInt
+    // The chooser and the kernel's input are ONE job:
+    // GraphMetrics.collectAtMost (distinct → limit(cap+1) → collect).
+    // The limit bounds the driver footprint (never more than cap+1 rows
+    // land, however big the graph), the overflow row IS the chooser
+    // verdict, and no separate count or checkpoint job runs on the
+    // common bounded path. The fallback re-derives the distinct once
+    // for its own checkpoint — the rare >cap case pays one extra pass,
+    // not the common case three jobs. maxLocalEdges = 0 skips the
+    // collect and forces the DISTRIBUTED path even on an empty edge set
+    // (the knob's contract for specs).
     val spark0 = edges0.sparkSession
-    val sample = { // primitive-pair collect, never Array[Row] (boxing ~3×)
-      import spark0.implicits._
-      dedup.limit(capRows + 1).as[(Long, Long)].collect()
+    val local = if (maxLocalEdges <= 0) None else {
+      import spark0.implicits._ // primitive pairs, never Array[Row] (boxing ~3×)
+      GraphMetrics.collectAtMost(dedup.as[(Long, Long)], maxLocalEdges)
     }
-    // maxLocalEdges = 0 must force the DISTRIBUTED path even on an
-    // empty edge set (the knob's contract for specs), hence the > 0
-    if (maxLocalEdges > 0 && sample.length <= maxLocalEdges)
-      return localUnionFind(spark0, sample)
+    if (local.isDefined) return localUnionFind(spark0, local.get)
     var edges = dedup.localCheckpoint(true)
     var prevSig: (Long, Long) = (-1L, -1L)
     var round = 0

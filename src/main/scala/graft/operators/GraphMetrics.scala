@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{Op, Tables}
 
@@ -57,7 +57,7 @@ object GraphMetrics {
     */
   def graphTriangles(spark: SparkSession, dir: String): DataFrame =
     withDensityChoice(spark, dir)(
-      (e, pre) => nodeTrianglesBitset(spark, e, pre.ids.length, Some(pre))
+      adj => nodeTrianglesBitset(spark, adj)
         // Σ_v tri(v) counts each triangle at all 3 corners; the sum is
         // < 2^52 so the double division is exact
         .agg((sum(col("tri")) / 3).cast("long").as("n_triangles")))(
@@ -119,7 +119,7 @@ object GraphMetrics {
     // shape that scales (rank/degree co-partitioned, ReusedExchange on
     // the edge subtree) and the chooser routes there.
     withDensityChoice(spark, dir, acceptDense = (_, _) => true)(
-      (e, pre) => pagerankKernel(spark, e, pre.ids.length, Some(pre), iters))(
+      adj => pagerankKernel(spark, adj, iters))(
       e0 => pagerankRelational(spark, e0, iters))
 
   /** Relational PageRank iteration — the 100 TB shape: each round is
@@ -156,7 +156,7 @@ object GraphMetrics {
       .doubleValue()
 
   /** Dense/bounded kernel: with n ≤ [[MaxBitsetNodes]] the adjacency
-    * matrix is driver-collectable (n²/8 ≤ 128 MB — [[buildBitsets]],
+    * matrix is driver-collectable (n²/8 ≤ 128 MB — [[Adjacency]],
     * shared with the pair-scan kernels) and 3 iterations over it are
     * microseconds of exact scaled-long arithmetic, replacing
     * ~2 shuffle jobs per relational iteration. Float-parity with
@@ -169,10 +169,10 @@ object GraphMetrics {
     * BigDecimal.valueOf path bit for bit (kernel-equality spec at two
     * SFs + hand graphs; oracle hash at all three SFs).
     */
-  private[graft] def pagerankKernel(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None, iters: Int = 3): DataFrame = {
+  private[graft] def pagerankKernel(spark: SparkSession, adj: Adjacency,
+      iters: Int = 3): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
+    val Adjacency(ids, bits) = adj
     val nn = ids.length
     val words = (nn + 63) >>> 6
     val deg = bits.map { row =>
@@ -258,7 +258,7 @@ object GraphMetrics {
     // like pagerank: the kernel cost is a frontier sweep (not a pair
     // scan), so density is irrelevant — any node-bounded graph wins
     withDensityChoice(spark, dir, acceptDense = (_, _) => true)(
-      (e, pre) => bfsKernel(spark, e, pre.ids.length, Some(pre), rounds))(
+      adj => bfsKernel(spark, adj, rounds))(
       e0 => bfsRelational(e0, rounds))
 
   /** Relational frontier expansion — the 100 TB shape (see scaladoc
@@ -282,10 +282,10 @@ object GraphMetrics {
     * collected adjacency (pure integer arithmetic — exact by
     * construction, no float discipline needed).
     */
-  private[graft] def bfsKernel(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None, rounds: Int = 3): DataFrame = {
+  private[graft] def bfsKernel(spark: SparkSession, adj: Adjacency,
+      rounds: Int = 3): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
+    val Adjacency(ids, bits) = adj
     val nn = ids.length
     val words = (nn + 63) >>> 6
     val depth = Array.fill(nn)(-1L)
@@ -349,7 +349,7 @@ object GraphMetrics {
     // exact by construction; node-bounded graphs skip 2 shuffles + a
     // window per iteration
     withDensityChoice(spark, dir, acceptDense = (_, _) => true)(
-      (e, pre) => lpaKernel(spark, e, pre.ids.length, Some(pre), iters))(
+      adj => lpaKernel(spark, adj, iters))(
       e0 => labelPropagationEdges(e0, iters))
 
   /** Node-bounded kernel: per-node neighbor-label histogram with the
@@ -359,10 +359,10 @@ object GraphMetrics {
     * map) and the histogram is a flat int array + touched list —
     * O(Σd) with zero boxing per round.
     */
-  private[graft] def lpaKernel(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None, iters: Int = 3): DataFrame = {
+  private[graft] def lpaKernel(spark: SparkSession, adj: Adjacency,
+      iters: Int = 3): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
+    val Adjacency(ids, bits) = adj
     val nn = ids.length
     val words = (nn + 63) >>> 6
     var label: Array[Int] = Array.tabulate(nn)(identity)
@@ -466,7 +466,7 @@ object GraphMetrics {
     */
   def graphComponents(spark: SparkSession, dir: String, rounds: Int = 4): DataFrame =
     withDensityChoice(spark, dir, acceptDense = (_, _) => true)(
-      (e, pre) => componentsKernel(spark, e, pre.ids.length, Some(pre), rounds))(
+      adj => componentsKernel(spark, adj, rounds))(
       e0 => componentsRelational(e0, rounds))
 
   private[graft] def componentsRelational(e0: DataFrame, rounds: Int = 4): DataFrame = {
@@ -497,10 +497,10 @@ object GraphMetrics {
     * collected adjacency bitsets. Labels are indices into the
     * ascending-sorted id array, so index-min == id-min.
     */
-  private[graft] def componentsKernel(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None, rounds: Int = 4): DataFrame = {
+  private[graft] def componentsKernel(spark: SparkSession, adj: Adjacency,
+      rounds: Int = 4): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
+    val Adjacency(ids, bits) = adj
     val nn = ids.length
     var label = Array.tabulate(nn)(identity)
     for (_ <- 1 to rounds) {
@@ -740,7 +740,7 @@ object GraphMetrics {
     // synchronous peeling is integer-exact; the kernel is n·(n/64)
     // popcount words per round — any node-bounded graph wins
     withDensityChoice(spark, dir, acceptDense = (_, _) => true)(
-      (e, pre) => kcoreKernel(spark, e, pre.ids.length, Some(pre), k, rounds))(
+      adj => kcoreKernel(spark, adj, k, rounds))(
       e0 => kcoreRelational(e0, k, rounds))
 
   /** Node-bounded kernel: alive-set peeling over the collected
@@ -748,11 +748,10 @@ object GraphMetrics {
     * previous round's alive set used for BOTH endpoint tests (the
     * synchronous semantics of the relational double semi-join).
     */
-  private[graft] def kcoreKernel(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None, k: Int = 3,
-      rounds: Int = 3): DataFrame = {
+  private[graft] def kcoreKernel(spark: SparkSession, adj: Adjacency,
+      k: Int = 3, rounds: Int = 3): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
+    val Adjacency(ids, bits) = adj
     val nn = ids.length
     val words = (nn + 63) >>> 6
     var alive = new Array[Long](words)
@@ -831,7 +830,7 @@ object GraphMetrics {
     */
   def clusteringCoefficient(spark: SparkSession, dir: String): DataFrame =
     withDensityChoice(spark, dir)(
-      (e, pre) => coefCols(nodeTrianglesBitset(spark, e, pre.ids.length, Some(pre))
+      adj => coefCols(nodeTrianglesBitset(spark, adj)
         .select(col("node"), col("degree"), col("tri").as("triangles"))))(
       clusteringWedge)
 
@@ -913,23 +912,15 @@ object GraphMetrics {
           .otherwise(3L).as("cost"))
 
   def ssspBounded(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
+    import spark.implicits._
+    // Weighted edges can't ride the bitset chooser, but the bounds are
+    // the same: the device gate, then one exact bounded collect of the
+    // edge list (≤ MaxDriverEdges × 24 B ≤ 192 MB).
     val e0 = weightedEdges(spark, dir)
-    // Weighted edges can't ride the shared bitset chooser; same
-    // discipline, separate gate: the device upper bound first (one
-    // pruned scan, no join), then the exact |E| on the persisted
-    // relation — collect only when BOTH are bounded (edge list
-    // ≤ MaxDriverEdges × 24 B ≤ 192 MB). The relational fallback gets
-    // the UN-persisted subtree.
-    val deviceUb = Tables.events(spark, dir)
-      .agg(approx_count_distinct(col("user_id"))).collect()(0).getLong(0)
-    if (deviceUb > MaxBitsetNodes * 1.25) return ssspRelational(e0, rounds)
-    val e = e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      import spark.implicits._
-      if (e.count() <= MaxDriverEdges)
-        ssspKernel(spark, e.as[(Long, Long, Long)].collect(), rounds)
-      else ssspRelational(e0, rounds)
-    } finally e.unpersist()
+    val local =
+      if (devicesUnderGate(spark, dir)) collectAtMost(e0.as[(Long, Long, Long)], MaxDriverEdges)
+      else None
+    local.fold(ssspRelational(e0, rounds))(ssspKernel(spark, _, rounds))
   }
 
   /** Relational synchronous relaxation — the 100 TB shape. */
@@ -1014,7 +1005,8 @@ object GraphMetrics {
     *    the streaming wedge join; Σd² rows is then the honest floor
     *    and nothing node²-sized is ever materialized.
     *
-    * The switch needs one edges-bounded pre-aggregate (n, avg degree);
+    * The switch needs only n and the average degree, both exact once
+    * the chooser holds the edge list ([[withDensityChoice]]);
     * bitset work is n²·(n/64) word-ops vs the wedge's n·d² agg rows at
     * ~64× the per-unit cost, so bitset wins iff d ≳ n/64 — and it
     * additionally requires n ≤ 32768 so the matrix broadcast is
@@ -1023,103 +1015,144 @@ object GraphMetrics {
     */
   def graphJaccardLinks(spark: SparkSession, dir: String): DataFrame =
     withDensityChoice(spark, dir)(
-      (e, pre) => jaccardLinksBitset(spark, e, pre.ids.length, Some(pre)))(
+      adj => jaccardLinksBitset(spark, adj))(
       jaccardLinksWedge)
 
-  /** The adaptive scaffold shared by the dense-capable graph metrics:
-    * one (n, avg degree) pre-aggregate decides the regime, and the
-    * chooser pass plus the dense build's two further passes (id
-    * collect, bitset agg) share one persisted edge relation — e is the
-    * expensive co-location distinct, and all dense-path consumption is
-    * EAGER, so the persist is released BEFORE the plan returns and
-    * nothing persisted outlives construction. The sparse branch gets
-    * the UN-persisted subtree (its plan stays lazy). Graph-sized,
-    * MEMORY_AND_DISK: spills rather than evicts under pressure.
+  /** The adaptive scaffold shared by the dense-capable graph metrics.
+    * Every driver bound it relies on is proven EXACTLY by
+    * [[collectAtMost]]; the only estimate is the device gate in front.
+    *
+    *  1. Gate ([[devicesUnderGate]]): a device universe far past the
+    *     bitset cap goes sparse before the co-location distinct runs.
+    *  2. Fits: the edge list (≤ [[MaxDriverEdges]]) lands on the
+    *     driver in one job, so ids, n and d̄ come from it with no
+    *     further job and the bitsets are built there
+    *     ([[driverAdjacency]]) — or the graph goes sparse.
+    *  3. Overflow: past MaxDriverEdges, the node ids are collected if
+    *     n ≤ [[MaxBitsetNodes]] and the bitsets built by the mergeable
+    *     `bitset_agg` ([[aggAdjacency]]), else sparse. acceptDense
+    *     always holds here: |E| > 8M and n ≤ 32768 give d̄ > 512, so
+    *     64·d̄ > n. Only this route persists the edge relation (the id
+    *     collect and the agg both read it) and it releases it before
+    *     the plan returns.
+    *
+    * The sparse branch always gets the lazy, un-persisted edge subtree.
     */
   private def withDensityChoice(spark: SparkSession, dir: String,
       acceptDense: (Int, Double) => Boolean = (n, avgD) => avgD * 64 >= n)(
-      dense: (DataFrame, DenseBuild) => DataFrame)(
+      dense: Adjacency => DataFrame)(
       sparse: DataFrame => DataFrame): DataFrame = {
+    import spark.implicits._
     val e0 = edges(spark, dir)
-    // Feasibility gate BEFORE touching the expensive pair subtree:
-    // graph nodes ⊆ distinct devices in events, and that bound is one
-    // column-pruned scan with no join. When even the bound is far past
-    // the bitset cap, sparse is the only possible outcome — skip the
-    // persist AND the exact stats pass entirely (at 100 TB the chooser
-    // would otherwise materialize the whole co-location distinct into
-    // the block store, spill included, just to unpersist it).
-    // approx_count_distinct's default rsd is 5%; the 1.25× margin
-    // keeps this a one-sided test — near-cap graphs fall through to
-    // the exact chooser below and pay the old (correct) cost.
-    val deviceUb = Tables.events(spark, dir)
-      .agg(approx_count_distinct(col("user_id"))).collect()(0).getLong(0)
-    if (deviceUb > MaxBitsetNodes * 1.25) return sparse(e0)
-    // Small-universe fast path (r10 opt): when the node upper bound
-    // already proves the WHOLE edge list fits the driver cap —
-    // (1.25·ub)²/2 ≤ MaxDriverEdges — collect e in ONE job and derive
-    // every chooser stat (n, d̄, sorted ids) plus the dense build's
-    // edge array locally. This removes, per dense query at bench SF,
-    // the persist, the degree pre-aggregate (a self-union + exchange
-    // + agg over e) and the separate edge-collect job — 2 of the 3
-    // chained chooser jobs (r10: nd 1.5 s + collectBuild 0.16 s warm).
-    // The co-location distinct is still computed exactly once on either
-    // outcome; graphs past the bound keep the persisted two-pass chooser
-    // below.
-    val nUb = deviceUb * 1.25
-    if (nUb * nUb / 2 <= MaxDriverEdges) {
-        import spark.implicits._
-        val arr = e0.as[(Long, Long)].collect()
-        val endpoints = new Array[Long](arr.length * 2)
-        var i = 0
-        while (i < arr.length) {
-          endpoints(2 * i) = arr(i)._1; endpoints(2 * i + 1) = arr(i)._2
-          i += 1
-        }
-        java.util.Arrays.sort(endpoints)
-        var n = 0
-        i = 0
-        while (i < endpoints.length) {
-          if (i == 0 || endpoints(i) != endpoints(i - 1)) {
-            endpoints(n) = endpoints(i); n += 1
-          }
-          i += 1
-        }
-        val ids = java.util.Arrays.copyOf(endpoints, n)
-        val avgD = if (n == 0) 0.0 else 2.0 * arr.length / n
-        return if (n >= 2 && n <= MaxBitsetNodes && acceptDense(n, avgD))
-          dense(e0, DenseBuild(ids, arr.length, arr))
+    if (!devicesUnderGate(spark, dir)) return sparse(e0)
+    collectAtMost(e0.as[(Long, Long)], MaxDriverEdges) match {
+      case Some(arr) =>
+        val ids = nodeIds(arr)
+        val n = ids.length
+        if (n >= 2 && n <= MaxBitsetNodes && acceptDense(n, 2.0 * arr.length / n))
+          dense(driverAdjacency(ids, arr))
         else sparse(e0)
+      case None =>
+        val e = e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val adj = try {
+          val nodes = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
+            .distinct().as[Long]
+          collectAtMost(nodes, MaxBitsetNodes).map(ids => aggAdjacency(spark, e, ids.sorted))
+        } finally e.unpersist()
+        adj.fold(sparse(e0))(dense)
     }
-    val e = e0.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      // Past the gate, distinct nodes ≤ 1.25×cap, so the node-degree
-      // relation is a bounded collect (≤ 40960 × 16 B): n, d̄ AND the
-      // sorted id list the dense build needs all come from this ONE
-      // pass over e — previously the stats agg and the ids distinct
-      // inside the bitset build each re-read e (two jobs, one extra
-      // shuffle), a measurable slice of the 0.1-0.3 s/job floor that
-      // dominates these queries at bench SF.
-      import spark.implicits._
-      val nd = e.select(col("src").as("node"))
-        .unionByName(e.select(col("dst").as("node")))
-        .groupBy(col("node")).agg(count(lit(1)).as("d"))
-        .as[(Long, Long)].collect()
-      val n = nd.length
-      val sumD = nd.map(_._2).sum // = 2|E|: the edge count is free here
-      val avgD = if (n == 0) 0.0 else sumD.toDouble / n
-      if (n >= 2 && n <= MaxBitsetNodes && acceptDense(n, avgD))
-        dense(e, DenseBuild(nd.map(_._1).sorted, sumD / 2))
-      else sparse(e0)
-    } finally e.unpersist()
   }
 
-  /** What the chooser pass already knows and the dense build can
-    * reuse: the sorted node-id universe, the exact edge count, and —
-    * on the small-universe fast path — the collected edge list itself
-    * (null when the chooser only ran the degree pass).
+  /** The one exact driver-bound proof of the graph and union-find
+    * choosers: ONE job, limit(cap+1) → collect. Some(rows) iff ds has
+    * at most cap rows; otherwise None, after at most cap+1 rows reached
+    * the driver (the overflow row is the verdict).
     */
-  private[graft] case class DenseBuild(ids: Array[Long], edgeCount: Long,
-      edges: Array[(Long, Long)] = null)
+  private[graft] def collectAtMost[T](ds: Dataset[T], cap: Long): Option[Array[T]] = {
+    val rows = ds.limit(math.min(cap, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length <= cap) Some(rows) else None
+  }
+
+  /** Graph nodes ⊆ distinct devices in events, and that bound is one
+    * column-pruned scan with no join. False ⇒ no driver route can fit,
+    * so the caller skips even the co-location distinct (at 100 TB it
+    * would otherwise compute the whole distinct only to overflow).
+    * The estimate's default rsd is 5%; the 1.25× margin keeps this
+    * one-sided — a near-cap graph passes and meets the exact bounds
+    * behind it.
+    */
+  private def devicesUnderGate(spark: SparkSession, dir: String): Boolean =
+    Tables.events(spark, dir).agg(approx_count_distinct(col("user_id")))
+      .collect()(0).getLong(0) <= MaxBitsetNodes * 1.25
+
+  /** Sorted distinct endpoints of a collected edge list. */
+  private[graft] def nodeIds(edges: Array[(Long, Long)]): Array[Long] = {
+    val endpoints = new Array[Long](edges.length * 2)
+    var i = 0
+    while (i < edges.length) {
+      endpoints(2 * i) = edges(i)._1; endpoints(2 * i + 1) = edges(i)._2
+      i += 1
+    }
+    java.util.Arrays.sort(endpoints)
+    var n = 0
+    i = 0
+    while (i < endpoints.length) {
+      if (i == 0 || endpoints(i) != endpoints(i - 1)) {
+        endpoints(n) = endpoints(i); n += 1
+      }
+      i += 1
+    }
+    java.util.Arrays.copyOf(endpoints, n)
+  }
+
+  /** The dense kernels' one input: the ascending node ids and the
+    * symmetric adjacency bitset matrix over their indices (bit j of
+    * row i ⇔ edge ids(i)–ids(j)). n ≤ [[MaxBitsetNodes]], so the
+    * matrix is ≤ 128 MB. [[driverAdjacency]] and [[aggAdjacency]]
+    * build the identical value for the same graph.
+    */
+  private[graft] case class Adjacency(ids: Array[Long], bits: Array[Array[Long]])
+
+  /** Adjacency from a collected edge list, on the driver: no job. */
+  private[graft] def driverAdjacency(ids: Array[Long],
+      edges: Array[(Long, Long)]): Adjacency = {
+    val bits = Array.fill(ids.length)(new Array[Long]((ids.length + 63) >>> 6))
+    def idx(v: Long): Int = {
+      val i = java.util.Arrays.binarySearch(ids, v)
+      require(i >= 0, s"edge endpoint $v missing from the node ids")
+      i
+    }
+    edges.foreach { case (s, d) =>
+      val a = idx(s); val b = idx(d)
+      bits(a)(b >>> 6) |= 1L << (b & 63)
+      bits(b)(a >>> 6) |= 1L << (a & 63)
+    }
+    Adjacency(ids, bits)
+  }
+
+  /** Adjacency of an edge relation too big to collect: the mergeable
+    * `bitset_agg`, so the build exchange carries n/8-byte buffers,
+    * never adjacency rows, and the driver receives n rows of n/8 bytes.
+    * `ids` are the sorted endpoints of e.
+    */
+  private[graft] def aggAdjacency(spark: SparkSession, e: DataFrame,
+      ids: Array[Long]): Adjacency = {
+    import spark.implicits._
+    val n = ids.length
+    val bits = Array.fill(n)(new Array[Long]((n + 63) >>> 6))
+    val idmap = spark.createDataset(ids.toSeq.zipWithIndex).toDF("id", "nid")
+    val enc = e
+      .join(broadcast(idmap.select(col("id").as("src"), col("nid").as("na"))), Seq("src"))
+      .join(broadcast(idmap.select(col("id").as("dst"), col("nid").as("nb"))), Seq("dst"))
+      .select(col("na"), col("nb"))
+    enc.select(col("na").as("g"), col("nb").as("i"))
+      .unionByName(enc.select(col("nb").as("g"), col("na").as("i")))
+      .groupBy(col("g"))
+      .agg(call_function("bitset_agg", col("i"), lit(n)).as("bits"))
+      .as[(Int, Array[Byte])].collect()
+      .foreach { case (g, b) => bits(g) = graft.functions.BitsetAgg.words(b) }
+    Adjacency(ids, bits)
+  }
 
   /** Per-node degree + triangle count off the bitset matrix: tri(v) =
     * ½ Σ_{u∈N(v)} |N(v)∩N(u)| (each triangle pair at v is seen from
@@ -1127,13 +1160,12 @@ object GraphMetrics {
     * replacement for the Σd² wedge explode, feeding both
     * [[graphTriangles]] (Σ/3) and [[clusteringCoefficient]].
     */
-  private[graft] def nodeTrianglesBitset(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None): DataFrame = {
+  private[graft] def nodeTrianglesBitset(spark: SparkSession,
+      adj: Adjacency): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
-    val bBits = spark.sparkContext.broadcast(bits)
-    val bIds = spark.sparkContext.broadcast(ids)
-    pairDriver(spark, n)
+    val bBits = spark.sparkContext.broadcast(adj.bits)
+    val bIds = spark.sparkContext.broadcast(adj.ids)
+    pairDriver(spark, adj.ids.length)
       .as[Int]
       .map { a =>
         val bs = bBits.value
@@ -1165,75 +1197,11 @@ object GraphMetrics {
     */
   private val MaxBitsetNodes = 32768
 
-  /** Dense kernel: broadcast the adjacency BITSET matrix (built by the
-    * mergeable `bitset_agg`, so the build exchange carries n/8-byte
-    * buffers, never adjacency rows), then scan node pairs a<b in an
-    * embarrassingly parallel mapPartitions — cn = popcount(N(a)&N(b)),
-    * degrees = row popcounts, existing-edge test = bit b of N(a).
-    */
-  /** Shared dense-kernel build: sorted original node ids and the
-    * adjacency bitset matrix (built by the mergeable `bitset_agg`, so
-    * the build exchange carries n/8-byte buffers, never adjacency
-    * rows). Caller guarantees n ≤ [[MaxBitsetNodes]].
-    */
   /** Above this the raw edge list stops being driver-collectable
     * (8M × 16 B = 128 MB — the same feasibility line as the matrix
     * collect) and the build goes through the mergeable bitset agg.
     */
   private val MaxDriverEdges = 8L * 1024 * 1024
-
-  private def buildBitsets(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None)
-      : (Array[Long], Array[Array[Long]]) = {
-    import spark.implicits._
-    // pre: the chooser already collected the node-degree relation, so
-    // the production path passes the sorted ids AND the exact edge
-    // count in; the None default keeps the kernels directly callable
-    // (kernel-equality specs, ad-hoc graphs).
-    val ids = pre.map(_.ids).getOrElse(
-      e.select(col("src")).unionByName(e.select(col("dst").as("src")))
-        .distinct().as[Long].collect().sorted) // n-bounded by the caller
-    val words = (n + 63) >>> 6
-    val bits = Array.fill(n)(new Array[Long](words))
-    if (pre.exists(p => p.edges != null || p.edgeCount <= MaxDriverEdges)) {
-      // Small-|E| regime (known EXACTLY and for free from the chooser
-      // pass: Σd = 2|E|): collect the cached edge list and build the
-      // matrix driver-side — one cache-scan job, no join, no
-      // bitset-agg exchange. At bench SF this removes the single most
-      // expensive build stage (the agg shuffle was ~25% of
-      // graph_triangles); the mergeable-agg path below stays the
-      // scale route for dense graphs past the bound. When the
-      // small-universe chooser already collected the edges, even that
-      // one cache-scan job disappears (zero further jobs here).
-      def idx(v: Long): Int = {
-        val i = java.util.Arrays.binarySearch(ids, v)
-        require(i >= 0, s"edge endpoint $v missing from chooser id universe")
-        i
-      }
-      val edgeArr = pre.get.edges match {
-        case null => e.as[(Long, Long)].collect()
-        case a => a
-      }
-      edgeArr.foreach { case (s, d) =>
-        val a = idx(s); val b = idx(d)
-        bits(a)(b >>> 6) |= 1L << (b & 63)
-        bits(b)(a >>> 6) |= 1L << (a & 63)
-      }
-    } else {
-      val idmap = spark.createDataset(ids.toSeq.zipWithIndex).toDF("id", "nid")
-      val enc = e
-        .join(broadcast(idmap.select(col("id").as("src"), col("nid").as("na"))), Seq("src"))
-        .join(broadcast(idmap.select(col("id").as("dst"), col("nid").as("nb"))), Seq("dst"))
-        .select(col("na"), col("nb"))
-      enc.select(col("na").as("g"), col("nb").as("i"))
-        .unionByName(enc.select(col("nb").as("g"), col("na").as("i")))
-        .groupBy(col("g"))
-        .agg(call_function("bitset_agg", col("i"), lit(n)).as("bits"))
-        .as[(Int, Array[Byte])].collect() // n rows of n/8 bytes — ≤128 MB
-        .foreach { case (g, b) => bits(g) = graft.functions.BitsetAgg.words(b) }
-    }
-    (ids, bits)
-  }
 
   /** The parallel pair-index driver for the dense kernels: node row
     * indexes 0..n-1, hash-repartitioned so the triangular (n-a) tail
@@ -1243,13 +1211,17 @@ object GraphMetrics {
     spark.range(n).select(col("id").cast("int").as("a"))
       .repartition(spark.sparkContext.defaultParallelism * 4, col("a"))
 
-  private[graft] def jaccardLinksBitset(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None): DataFrame = {
+  /** Dense kernel: broadcast the adjacency bitset matrix, then scan
+    * node pairs a<b in an embarrassingly parallel mapPartitions —
+    * cn = popcount(N(a)&N(b)), degrees = row popcounts, existing-edge
+    * test = bit b of N(a).
+    */
+  private[graft] def jaccardLinksBitset(spark: SparkSession,
+      adj: Adjacency): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
-    val bBits = spark.sparkContext.broadcast(bits)
-    val bIds = spark.sparkContext.broadcast(ids)
-    pairDriver(spark, n)
+    val bBits = spark.sparkContext.broadcast(adj.bits)
+    val bIds = spark.sparkContext.broadcast(adj.ids)
+    pairDriver(spark, adj.ids.length)
       .as[Int]
       .mapPartitions { it =>
         val bs = bBits.value
@@ -1355,7 +1327,7 @@ object GraphMetrics {
     */
   def adamicAdarLinks(spark: SparkSession, dir: String): DataFrame =
     withDensityChoice(spark, dir)(
-      (e, pre) => adamicAdarBitset(spark, e, pre.ids.length, Some(pre)))(
+      adj => adamicAdarBitset(spark, adj))(
       adamicAdarWedge)
 
   private val AaScale = 12
@@ -1373,10 +1345,10 @@ object GraphMetrics {
     when(d >= 2, round(lit(1.0) / log(d.cast("double")), AaScale)
       .cast(org.apache.spark.sql.types.DecimalType(28, AaScale)))
 
-  private[graft] def adamicAdarBitset(spark: SparkSession, e: DataFrame,
-      n: Int, pre: Option[DenseBuild] = None): DataFrame = {
+  private[graft] def adamicAdarBitset(spark: SparkSession,
+      adj: Adjacency): DataFrame = {
     import spark.implicits._
-    val (ids, bits) = buildBitsets(spark, e, n, pre)
+    val n = adj.ids.length
     // per-degree scaled-long weights, Spark-computed (see scaladoc)
     val scaled = new Array[Long](n + 1)
     spark.range(2, n + 1L)
@@ -1386,8 +1358,8 @@ object GraphMetrics {
       .foreach(r => scaled(r.getInt(0)) =
         new java.math.BigDecimal(r.getString(1))
           .movePointRight(AaScale).longValueExact())
-    val bBits = spark.sparkContext.broadcast(bits)
-    val bIds = spark.sparkContext.broadcast(ids)
+    val bBits = spark.sparkContext.broadcast(adj.bits)
+    val bIds = spark.sparkContext.broadcast(adj.ids)
     val bScaled = spark.sparkContext.broadcast(scaled)
     pairDriver(spark, n)
       .as[Int]

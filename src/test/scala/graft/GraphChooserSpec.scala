@@ -1,23 +1,24 @@
 package graft
 
+import org.apache.spark.graftspec.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{GraphMetrics, Interactions}
 
-/** r10 chooser-path coverage (added with the small-universe fast
-  * path): at every fixture SF the fast path (ONE bounded edge
-  * collect, ids/degrees derived driver-side) now handles the bench
-  * graph queries, so the mid-universe chooser cell — device upper
-  * bound past the fast-path bound (1.25·ub)²/2 > MaxDriverEdges, yet
-  * |E| under the driver cap — would otherwise run in no test at all.
-  * This fixture (12 000 devices, 6 000 disjoint co-location pairs)
-  * forces exactly that cell: the chooser runs the persisted degree
-  * pre-aggregate and buildBitsets runs its own cache-scan edge
-  * collect. The registered query through that path must agree row-
-  * for-row with (a) the kernel invoked directly with pre=None — the
-  * mergeable bitset_agg build, a THIRD construction route — and
-  * (b) the closed-form answer of a disjoint-pairs graph.
+/** The graph chooser's bounded-collect routes. After the device gate,
+  * every dense-capable graph query proves "the edge list fits on the
+  * driver" with ONE limit(cap+1) collect (GraphMetrics.collectAtMost);
+  * ids, n and d̄ then come from the collected edges and the adjacency
+  * is built on the driver with no further job. Only a graph past
+  * MaxDriverEdges builds its adjacency with the mergeable bitset_agg.
+  *
+  * These specs pin (a) the Spark jobs that query construction runs,
+  * on a 12 000-device fixture of 6 000 disjoint co-location pairs and
+  * for pagerank at sf0.01, and (b) that the two adjacency
+  * constructions give identical ids and bitset words, so the overflow
+  * route, which no fixture reaches, builds what the fits route builds.
   */
 class GraphChooserSpec extends AnyFunSuite {
 
@@ -43,27 +44,68 @@ class GraphChooserSpec extends AnyFunSuite {
     dir
   }
 
-  test("mid-universe chooser: degree pass + cache edge collect == direct agg-built kernel == closed form") {
-    val pairs = 6000
-    val dir = pairFixture(pairs)
-    // registered-query route: deviceUb ≈ 12000 ⇒ (1.25·ub)²/2 ≈ 112M
-    // > MaxDriverEdges ⇒ the fast path is bypassed; n = 12000 ≤ cap
-    // and acceptDense = always for components ⇒ dense via the
-    // persisted chooser + buildBitsets' own collect
-    val viaChooser = GraphMetrics.graphComponents(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(viaChooser.length == 2 * pairs)
+  private val Pairs = 6000
+  private lazy val fixture = pairFixture(Pairs)
+
+  /** The query `build(dir)` and the Spark jobs its construction ran.
+    * The events table is read first: `Tables` memoizes the relation
+    * per session, and its one parquet schema job is not construction.
+    * The listener bus is drained before the listener is added (so
+    * earlier jobs are not counted) and before the count is read.
+    */
+  private def jobsToBuild[T](dir: String)(build: String => T): (T, Int) = {
+    Tables.events(spark, dir)
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = build(dir)
+      ListenerBusDrain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("graph_components on 12k devices: closed form, built in <= 7 Spark jobs") {
+    // device gate, then one bounded edge collect; n = 12000 ≤ the
+    // bitset cap and acceptDense = always for components ⇒ dense
+    val (df, jobs) = jobsToBuild(fixture)(GraphMetrics.graphComponents(spark, _))
+    assert(jobs <= 7, s"graphComponents construction ran $jobs Spark jobs")
+    val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+    assert(rows.length == 2 * Pairs)
     // closed form: component of {2i, 2i+1} is 2i, size 2
-    viaChooser.foreach { case (node, comp, csize) =>
+    rows.foreach { case (node, comp, csize) =>
       assert(comp == node - node % 2, s"node $node labeled $comp")
       assert(csize == 2L)
     }
-    // third build route: kernel direct, pre=None ⇒ ids distinct +
-    // mergeable bitset_agg exchange
-    val direct = GraphMetrics.componentsKernel(spark,
-        Interactions.empiricEdges(spark, dir), 2 * pairs)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sorted
-    assert(viaChooser.toSeq == direct.toSeq,
-      "chooser-built and agg-built kernels must agree exactly")
+  }
+
+  test("pagerank at sf0.01: built in <= 7 Spark jobs") {
+    val (df, jobs) = jobsToBuild("/root/testdata/sf0.01")(GraphMetrics.pagerank(spark, _))
+    assert(jobs <= 7, s"pagerank construction ran $jobs Spark jobs")
+    assert(df.count() > 0)
+  }
+
+  test("driver-built and bitset_agg-built adjacency agree: sf0.001 and 12k fixture") {
+    import spark.implicits._
+    for (dir <- Seq("/root/testdata/sf0.001", fixture)) {
+      val e = Interactions.empiricEdges(spark, dir)
+      val arr = e.as[(Long, Long)].collect()
+      val viaDriver = GraphMetrics.driverAdjacency(GraphMetrics.nodeIds(arr), arr)
+      // the overflow route's inputs: the relation plus its collected ids
+      val ids = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
+        .distinct().as[Long].collect().sorted
+      val viaAgg = GraphMetrics.aggAdjacency(spark, e, ids)
+      assert(viaDriver.ids.nonEmpty, s"$dir produced an empty graph")
+      assert(viaDriver.ids.sameElements(viaAgg.ids), s"$dir: ids differ")
+      assert(viaDriver.bits.length == viaAgg.bits.length)
+      viaDriver.bits.indices.foreach { i =>
+        assert(java.util.Arrays.equals(viaDriver.bits(i), viaAgg.bits(i)),
+          s"$dir: bitset row $i (node ${ids(i)}) differs")
+      }
+    }
   }
 }

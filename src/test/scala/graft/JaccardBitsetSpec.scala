@@ -18,14 +18,21 @@ class JaccardBitsetSpec extends AnyFunSuite {
     s
   }
 
+  /** The dense kernels' input, built on the driver from the collected
+    * edges (the chooser's fits route).
+    */
+  private def adjacency(e: DataFrame): operators.GraphMetrics.Adjacency = {
+    import spark.implicits._
+    val arr = e.as[(Long, Long)].collect()
+    operators.GraphMetrics.driverAdjacency(operators.GraphMetrics.nodeIds(arr), arr)
+  }
+
   private def asSet(df: DataFrame) = df.collect()
     .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
 
   test("bitset and wedge kernels agree exactly on the sf0.001 co-location graph") {
     val e = operators.Interactions.empiricEdges(spark, "/root/testdata/sf0.001")
-    val n = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
-      .distinct().count().toInt
-    val bs = asSet(operators.GraphMetrics.jaccardLinksBitset(spark, e, n))
+    val bs = asSet(operators.GraphMetrics.jaccardLinksBitset(spark, adjacency(e)))
     val wj = asSet(operators.GraphMetrics.jaccardLinksWedge(e))
     assert(bs.nonEmpty, "fixture produced no candidate links")
     assert(bs == wj, s"kernels diverge: only-bitset=${(bs -- wj).take(3)} " +
@@ -47,7 +54,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
       (2L, 4L, 1L, math.rint(1.0 / 3 * 1e9) / 1e9),
       (4L, 9L, 1L, 1.0 / 3), // N4={3} N9={1,2,3} cn=1 J=1/(1+3-1)=1/3
       (1L, 4L, 0L, 0.0)).filter(_._3 > 0L) // (1,4) cn=0: marker row, dropped
-    val bs = asSet(operators.GraphMetrics.jaccardLinksBitset(spark, e, 5))
+    val bs = asSet(operators.GraphMetrics.jaccardLinksBitset(spark, adjacency(e)))
     val wj = asSet(operators.GraphMetrics.jaccardLinksWedge(e))
     assert(bs == wj, s"kernels diverge on hand graph: $bs vs $wj")
     // compare pair/cn structure exactly; jaccard to 1e-9 (both kernels
@@ -63,9 +70,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
   test("adamic-adar: bitset and wedge kernels agree exactly on sf0.001; hand values check") {
     import spark.implicits._
     val e = operators.Interactions.empiricEdges(spark, "/root/testdata/sf0.001")
-    val n = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
-      .distinct().count().toInt
-    val bs = asSet(operators.GraphMetrics.adamicAdarBitset(spark, e, n))
+    val bs = asSet(operators.GraphMetrics.adamicAdarBitset(spark, adjacency(e)))
     val wj = asSet(operators.GraphMetrics.adamicAdarWedge(e))
     assert(bs.nonEmpty && bs == wj,
       s"AA kernels diverge: only-bitset=${(bs -- wj).take(3)} " +
@@ -74,7 +79,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
     //   (1,3): common {2,9} -> 2/ln 3;  (2,4),(4,9): common {3} -> 1/ln 3
     val h = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 9L), (2L, 9L), (3L, 9L))
       .toDF("src", "dst")
-    val hb = asSet(operators.GraphMetrics.adamicAdarBitset(spark, h, 5))
+    val hb = asSet(operators.GraphMetrics.adamicAdarBitset(spark, adjacency(h)))
     assert(hb == asSet(operators.GraphMetrics.adamicAdarWedge(h)))
     val exp = Map((1L, 3L) -> 2.0 / math.log(3), (2L, 4L) -> 1.0 / math.log(3),
       (4L, 9L) -> 1.0 / math.log(3))
@@ -86,15 +91,13 @@ class JaccardBitsetSpec extends AnyFunSuite {
   test("triangles + clustering: bitset and wedge kernels agree exactly; hand graph counts") {
     import spark.implicits._
     val e = operators.Interactions.empiricEdges(spark, "/root/testdata/sf0.001")
-    val n = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
-      .distinct().count().toInt
-    val triB = operators.GraphMetrics.nodeTrianglesBitset(spark, e, n)
+    val triB = operators.GraphMetrics.nodeTrianglesBitset(spark, adjacency(e))
       .agg((sum(col("tri")) / 3).cast("long")).collect()(0).getLong(0)
     val triW = operators.GraphMetrics.trianglesWedge(e).collect()(0).getLong(0)
     assert(triB == triW && triB > 0, s"triangles: bitset=$triB wedge=$triW")
     def ccSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSet
-    val cb = ccSet(operators.GraphMetrics.nodeTrianglesBitset(spark, e, n)
+    val cb = ccSet(operators.GraphMetrics.nodeTrianglesBitset(spark, adjacency(e))
       .select(col("node"), col("degree"), col("tri").as("triangles"))
       .withColumn("coef", when(col("degree") < 2, lit(0.0))
         .otherwise(round((lit(2) * col("triangles")).cast("double")
@@ -105,7 +108,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
     // per-node tri 1,2,1,0,2 and coef 1.0, 2/3, 1/3, 0, 2/3
     val h = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 9L), (2L, 9L), (3L, 9L))
       .toDF("src", "dst")
-    val ht = operators.GraphMetrics.nodeTrianglesBitset(spark, h, 5)
+    val ht = operators.GraphMetrics.nodeTrianglesBitset(spark, adjacency(h))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(ht == Set((1L, 2L, 1L), (2L, 3L, 2L), (3L, 3L, 1L), (4L, 1L, 0L),
       (9L, 3L, 2L)), ht.toString)
@@ -118,11 +121,9 @@ class JaccardBitsetSpec extends AnyFunSuite {
     // BigDecimal.valueOf rounding == Catalyst Round on double
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val e = operators.Interactions.empiricEdges(spark, sf)
-      val n = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
-        .distinct().count().toInt
       def prSet(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getDouble(1))).toSet
-      val k = prSet(operators.GraphMetrics.pagerankKernel(spark, e, n))
+      val k = prSet(operators.GraphMetrics.pagerankKernel(spark, adjacency(e)))
       val rel = prSet(operators.GraphMetrics.pagerankRelational(spark, e, 3))
       assert(k.nonEmpty, s"$sf produced an empty graph")
       assert(k == rel, s"$sf pagerank kernels diverge (BIT equality required): " +
@@ -134,7 +135,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
     import spark.implicits._
     val h = Seq((1L, 2L), (2L, 3L), (3L, 4L), (1L, 9L), (2L, 9L), (3L, 9L))
       .toDF("src", "dst")
-    val k = operators.GraphMetrics.pagerankKernel(spark, h, 5)
+    val k = operators.GraphMetrics.pagerankKernel(spark, adjacency(h))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
     val rel = operators.GraphMetrics.pagerankRelational(spark, h, 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toMap
@@ -166,25 +167,23 @@ class JaccardBitsetSpec extends AnyFunSuite {
     // all three are integer-exact, so set equality is the full claim
     for (sf <- Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")) {
       val e = operators.Interactions.empiricEdges(spark, sf)
-      val n = e.select(col("src")).unionByName(e.select(col("dst").as("src")))
-        .distinct().count().toInt
       def pairs(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-      val bk = pairs(operators.GraphMetrics.bfsKernel(spark, e, n))
+      val bk = pairs(operators.GraphMetrics.bfsKernel(spark, adjacency(e)))
       val br = pairs(operators.GraphMetrics.bfsRelational(e))
       assert(bk.nonEmpty && bk == br, s"$sf bfs: only-kernel=${(bk -- br).take(3)} " +
         s"only-relational=${(br -- bk).take(3)}")
-      val kk = pairs(operators.GraphMetrics.kcoreKernel(spark, e, n))
+      val kk = pairs(operators.GraphMetrics.kcoreKernel(spark, adjacency(e)))
       val kr = pairs(operators.GraphMetrics.kcoreRelational(e))
       assert(kk == kr, s"$sf kcore: only-kernel=${(kk -- kr).take(3)} " +
         s"only-relational=${(kr -- kk).take(3)}")
-      val lk = pairs(operators.GraphMetrics.lpaKernel(spark, e, n))
+      val lk = pairs(operators.GraphMetrics.lpaKernel(spark, adjacency(e)))
       val lr = pairs(operators.GraphMetrics.labelPropagationEdges(e))
       assert(lk.nonEmpty && lk == lr, s"$sf lpa: only-kernel=${(lk -- lr).take(3)} " +
         s"only-relational=${(lr -- lk).take(3)}")
       def triples(df: DataFrame) = df.collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      val ck = triples(operators.GraphMetrics.componentsKernel(spark, e, n))
+      val ck = triples(operators.GraphMetrics.componentsKernel(spark, adjacency(e)))
       val cr = triples(operators.GraphMetrics.componentsRelational(e))
       assert(ck.nonEmpty && ck == cr, s"$sf components: only-kernel=${(ck -- cr).take(3)} " +
         s"only-relational=${(cr -- ck).take(3)}")
@@ -201,7 +200,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
     val expect = Map(
       1L -> (1L, 5L), 2L -> (1L, 5L), 3L -> (1L, 5L), 4L -> (1L, 5L),
       5L -> (1L, 5L), 6L -> (2L, 1L), 10L -> (10L, 2L), 11L -> (10L, 2L))
-    for (df <- Seq(operators.GraphMetrics.componentsKernel(spark, g, 8),
+    for (df <- Seq(operators.GraphMetrics.componentsKernel(spark, adjacency(g)),
                    operators.GraphMetrics.componentsRelational(g))) {
       val got = df.collect()
         .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
@@ -234,7 +233,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
     import spark.implicits._
     // path 50-1-2-3 plus leaf 4 off node 1: seed only 50
     val p = Seq((50L, 1L), (1L, 2L), (2L, 3L), (1L, 4L)).toDF("src", "dst")
-    val bk = operators.GraphMetrics.bfsKernel(spark, p, 5)
+    val bk = operators.GraphMetrics.bfsKernel(spark, adjacency(p))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val br = operators.GraphMetrics.bfsRelational(p)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -244,7 +243,7 @@ class JaccardBitsetSpec extends AnyFunSuite {
     // peels round 1; everything else survives with within-core deg 2
     val t = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 7L), (7L, 8L), (7L, 9L),
       (8L, 9L), (9L, 10L)).toDF("src", "dst")
-    val kk = operators.GraphMetrics.kcoreKernel(spark, t, 7, None, k = 2)
+    val kk = operators.GraphMetrics.kcoreKernel(spark, adjacency(t), k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
     val kr = operators.GraphMetrics.kcoreRelational(t, k = 2)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
