@@ -9,7 +9,9 @@ import graft.pipeline.Pipeline.RunConfig
   *
   *   run-daily <dataDir> <yyyy-MM-dd> <outDir> [nSeeds]
   *       full daily pipeline: contact matrix → SBM network (GraphML)
-  *       → seeded SEIR runs → status + infected-per-block parquet
+  *       → seeded SEIR runs → status + infected-per-block parquet.
+  *       <dataDir> is the date partition the run reads; <yyyy-MM-dd>
+  *       only labels the run in its log line
   *   gen-tables <dataDir> <outDir>
   *       stage 1 alone (the reference's --gen_tables): presence-derived
   *       base tables — device home catalog + contact sizes — to parquet
@@ -42,10 +44,8 @@ object Main {
   }
 
   def main(args: Array[String]): Unit = args.toList match {
-    case "run-daily" :: dataDir :: date :: outDir :: rest =>
+    case "run-daily" :: dataDir :: date :: outDir :: rest => withSpark { spark =>
       val seeds = 0 until rest.headOption.map(_.toInt).getOrElse(4)
-      val spark = Sessions.build("graft", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      spark.sparkContext.setLogLevel("WARN")
       val cfg = RunConfig(dataDir, LocalDate.parse(date))
       val (matrix, vertices, edges, status) = Pipeline.dailyRun(spark, cfg, seeds)
       new java.io.File(outDir).mkdirs()
@@ -57,7 +57,7 @@ object Main {
       graft.sim.Seir.infectedPerBlock(status, blocks)
         .write.mode("overwrite").parquet(s"$outDir/infected_per_block")
       println(s"[graft] daily run ${cfg.date} -> $outDir")
-      spark.stop()
+    }
     case "gen-tables" :: dataDir :: outDir :: Nil => withSpark { spark =>
       graft.operators.Ntl.homeCatalog(spark, dataDir)
         .write.mode("overwrite").parquet(s"$outDir/homes")
@@ -90,15 +90,11 @@ object Main {
       println(s"[graft] build-network $stageDir -> $outDir/network.graphml")
     }
     case "query" :: name :: sfDir :: Nil =>
-      val spark = Sessions.build("graft", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      spark.sparkContext.setLogLevel("WARN")
-      SparkEntry.queries.get(name) match {
-        case Some(fn) => fn(spark, sfDir).show(20, truncate = false)
-        case None =>
-          System.err.println(s"unknown query '$name'; try: graft.Main list")
-          sys.exit(2)
-      }
-      spark.stop()
+      val fn = SparkEntry.queries.getOrElse(name, {
+        System.err.println(s"unknown query '$name'; try: graft.Main list")
+        sys.exit(2)
+      })
+      withSpark(spark => fn(spark, sfDir).show(20, truncate = false))
     case "list" :: Nil =>
       SparkEntry.allOps.sortBy(_.name).foreach { op =>
         val kind = if (op.oracle.isDefined) "oracle" else "rows  "
@@ -107,6 +103,7 @@ object Main {
     case _ =>
       System.err.println(
         """usage: graft.Main run-daily <dataDir> <yyyy-MM-dd> <outDir> [nSeeds]
+          |         (<dataDir> is the date partition read; <yyyy-MM-dd> is only an output label)
           |       graft.Main gen-tables <dataDir> <outDir>
           |       graft.Main prob-matrix <dataDir> <outDir>
           |       graft.Main scale <dataDir> <outDir>

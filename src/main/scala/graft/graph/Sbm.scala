@@ -1,65 +1,99 @@
 package graft.graph
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.XXH64
+import org.apache.spark.sql.types._
+import graft.operators.Scaling
 
 /** Stochastic block model network generation
   * (/root/reference/scripts/NetworkBuilder.py:423-480,
   * /root/reference/src/transforms/matrix_transforms.py:176-221:
   * nx.stochastic_block_model(sizes, probs, seed) + node re-tagging).
   *
-  * Distributed design: candidate undirected pairs (i < j) are the
-  * node×node upper triangle (a range-join over two node DataFrames);
-  * each pair draws a deterministic uniform from xxhash64(i, j, seed) —
-  * *partitioning-independent* seeded randomness, unlike rand(), which
-  * depends on task layout — and keeps the edge when u < p(block_i,
-  * block_j). Scales as |V|²/2 map-side work with no driver state;
-  * block-pair probabilities are a broadcast dim.
+  * Driver design, as the reference runs it in one process: the network
+  * is a scaled one, so it has at most `Scaling.Target` nodes (checked
+  * before any pair is drawn). Block b owns the contiguous node-id range
+  * that follows the blocks before it in `sizes`. Every pair i < j is
+  * visited, i ascending then j ascending, and kept when
+  *
+  *   u = floorMod(XXH64.hashLong(seed, XXH64.hashLong(j, XXH64.hashLong(i, 42))), 2⁵²) / 2⁵²
+  *
+  * is below p(block_i, block_j). This is the uniform Spark's
+  * `pmod(xxhash64(src, dst, seed), 2⁵²) / 2⁵²` gives the pair, so a
+  * draw depends only on (i, j, seed). A block pair without a
+  * probability row gets no edges.
   */
 object Sbm {
 
-  /** nodes: (node_id long, block string) built from per-block sizes —
-    * contiguous id ranges per block, matching the reference's
-    * node-ordering convention.
-    */
-  def nodes(spark: SparkSession, sizes: Seq[(String, Long)]): DataFrame = {
-    import spark.implicits._
+  private val Scale = (1L << 52).toDouble
+
+  private val vertexSchema = StructType(Seq(
+    StructField("node_id", StringType, nullable = false),
+    StructField("attrs", MapType(StringType, StringType, valueContainsNull = false),
+      nullable = false)))
+
+  private val edgeSchema = StructType(Seq(
+    StructField("src", StringType, nullable = false),
+    StructField("dst", StringType, nullable = false)))
+
+  /** (block, first id, end id) of each block's contiguous node range. */
+  private def ranges(sizes: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
     val offsets = sizes.scanLeft(0L)(_ + _._2)
-    val ranges = sizes.zip(offsets).map { case ((b, n), off) => (b, off, off + n) }
-    ranges.map { case (b, lo, hi) =>
-      spark.range(lo, hi).select(col("id").as("node_id"), lit(b).as("block"))
-    }.reduce(_ unionByName _)
+    sizes.indices.map(k => (sizes(k)._1, offsets(k), offsets(k + 1)))
   }
 
-  /** Seeded SBM edges: upper-triangle pairs filtered by the block-pair
-    * probability matrix (long form: block_a, block_b, prob).
+  /** The seeded edges as (src, dst) node ids, src < dst, in draw order.
+    * `probs` is the block-pair probability matrix in long form
+    * (block_a, block_b, prob), at most one row per block pair; its rows
+    * are collected once.
     */
-  def edges(spark: SparkSession, nodesDf: DataFrame, probs: DataFrame,
-      seed: Long): DataFrame = {
-    val a = nodesDf.select(col("node_id").as("src"), col("block").as("block_a"))
-    val b = nodesDf.select(col("node_id").as("dst"), col("block").as("block_b"))
-    // deterministic per-pair uniform in [0, 1): bottom 52 bits of the
-    // pair hash scaled by 2^-52
-    val u = (pmod(xxhash64(col("src"), col("dst"), lit(seed)), lit(1L << 52))
-      .cast("double") / lit((1L << 52).toDouble))
-    a.crossJoin(b)
-      .where(col("src") < col("dst"))
-      .join(broadcast(probs), Seq("block_a", "block_b"))
-      .where(u < col("prob"))
-      .select(col("src"), col("dst"), col("block_a"), col("block_b"))
+  def draw(sizes: Seq[(String, Long)], probs: DataFrame, seed: Long): Array[(Long, Long)] = {
+    val total = sizes.map(_._2).sum
+    require(total <= Scaling.Target,
+      s"SBM generates a scaled network (≤ ${Scaling.Target} nodes), got $total")
+    val blockIndex = sizes.map(_._1).distinct.zipWithIndex.toMap
+    // -1: no row for the block pair, so no draw can keep an edge
+    val p = Array.fill(blockIndex.size, blockIndex.size)(-1.0)
+    val seen = mutable.Set.empty[(Int, Int)]
+    probs.select("block_a", "block_b", "prob").collect().foreach { r =>
+      for (a <- blockIndex.get(r.getString(0)); b <- blockIndex.get(r.getString(1))) {
+        require(seen.add((a, b)), s"two probabilities for blocks ${r.getString(0)}, ${r.getString(1)}")
+        if (!r.isNullAt(2)) p(a)(b) = r.getDouble(2)
+      }
+    }
+    val blocks = ranges(sizes).map { case (b, lo, hi) => (blockIndex(b), lo, hi) }
+    val out = Array.newBuilder[(Long, Long)]
+    for ((a, loA, hiA) <- blocks; i <- loA until hiA; (b, loB, hiB) <- blocks) {
+      val prob = p(a)(b)
+      var j = math.max(i + 1, loB)
+      if (prob > 0) while (j < hiB) {
+        val h = XXH64.hashLong(seed, XXH64.hashLong(j, XXH64.hashLong(i, 42L)))
+        if (java.lang.Math.floorMod(h, 1L << 52) / Scale < prob) out += i -> j
+        j += 1
+      }
+    }
+    out.result()
   }
 
-  /** Full pipeline: sizes + probability matrix → tagged vertex/edge
-    * DataFrames ready for the GraphML sink.
+  /** The GraphML-ready (vertices, edges) of `draw`'s edges, as local
+    * relations: vertices (node_id, attrs = {block}) in id order, edges
+    * (src, dst) as node-id strings.
+    */
+  def relations(spark: SparkSession, sizes: Seq[(String, Long)],
+      edges: Array[(Long, Long)]): (DataFrame, DataFrame) = {
+    val vertexRows = ranges(sizes).flatMap { case (b, lo, hi) =>
+      (lo until hi).map(id => Row(id.toString, Map("block" -> b)))
+    }
+    val edgeRows = edges.toSeq.map { case (s, d) => Row(s.toString, d.toString) }
+    (spark.createDataFrame(java.util.Arrays.asList(vertexRows: _*), vertexSchema),
+      spark.createDataFrame(java.util.Arrays.asList(edgeRows: _*), edgeSchema))
+  }
+
+  /** sizes + probability matrix → tagged vertex/edge relations ready
+    * for the GraphML sink.
     */
   def generate(spark: SparkSession, sizes: Seq[(String, Long)],
-      probs: DataFrame, seed: Long): (DataFrame, DataFrame) = {
-    val n = nodes(spark, sizes)
-    val e = edges(spark, n, probs, seed)
-    val vertices = n.select(col("node_id").cast("string").as("node_id"),
-      map(lit("block"), col("block")).as("attrs"))
-    val edgesOut = e.select(col("src").cast("string").as("src"),
-      col("dst").cast("string").as("dst"))
-    (vertices, edgesOut)
-  }
+      probs: DataFrame, seed: Long): (DataFrame, DataFrame) =
+    relations(spark, sizes, draw(sizes, probs, seed))
 }

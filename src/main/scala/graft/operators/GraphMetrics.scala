@@ -661,10 +661,7 @@ object GraphMetrics {
     // and must scale past the node cap unchanged
     modularityFromLabels(edges(spark, dir), labelPropagation(spark, dir))
 
-  private[graft] def graphModularityEdges(e0: DataFrame): DataFrame =
-    modularityFromLabels(e0, labelPropagationEdges(e0))
-
-  private def modularityFromLabels(e0: DataFrame, lab: DataFrame): DataFrame = {
+  private[graft] def modularityFromLabels(e0: DataFrame, lab: DataFrame): DataFrame = {
     val e = e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
     val deg = e.groupBy(col("src").as("node")).agg(count(lit(1)).as("degree"))
     val m = e0.agg(count(lit(1)).as("m"))

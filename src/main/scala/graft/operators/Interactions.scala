@@ -186,49 +186,6 @@ object Interactions {
       |  FROM events GROUP BY user_id, event_type
       |) WHERE rnk = 1""".stripMargin
 
-  /** Observed contacts per (a_home, b_home): distinct interacting pairs
-    * enriched with each side's home cell, then counted
-    * (matrix_transforms.py:65-90). The home catalog is keyed on caid —
-    * DEVICE cardinality (10⁷–10⁸ in production, SURVEY §4.3), so it is
-    * NOT broadcastable at scale: both enrichment joins go through a
-    * shuffle-hash join on the device key (VERDICT r3 #3). AQE may still
-    * downgrade to broadcast at toy SF; the hint keeps the plan
-    * shuffle-shaped where it matters.
-    */
-  /** The r2–r6 two-join spelling, kept as the reference of the
-    * equivalence spec (R13Spec): pairs explode unlabeled,
-    * then two device-key shuffle-hash joins attach the homes. Replaced
-    * as the registered query by [[observedContacts]] (the fused
-    * spelling) in r7 — measured 0.65 → 0.50 s at sf0.1 with identical
-    * results; at 100 TB the win grows, because the two joins this
-    * removes shuffle the PAIR relation (n(n−1) per co-location group),
-    * the largest relation in the query.
-    */
-  private[graft] def observedContactsJoined(spark: SparkSession, dir: String): DataFrame = {
-    // fused dedup (r2): count DISTINCT pairs inside the home-level
-    // aggregation instead of a separate pair-distinct exchange —
-    // Spark's two-phase distinct-agg dedups map-side on
-    // (homes, pair), so the shuffle ships ≈ the distinct volume with
-    // one whole stage fewer.
-    // (r3 note: a canonical-pairs variant — half the distinct-agg
-    // volume, recovered by a home-level mirror-sum M = C + Cᵀ — was
-    // measured and rejected: the two extra stages cost more than the
-    // halved shuffle wins, and both shapes are linear in the pair
-    // count at any scale. The r7 fused spelling mirrors at the MATRIX
-    // level instead, where the mirror is free.)
-    val pairs = interactionPairsRaw(spark, dir)
-    val homes = homeCells(spark, dir)
-    pairs
-      .join(homes.withColumnRenamed("caid", "a_caid")
-        .withColumnRenamed("home_cell", "a_home")
-        .hint("shuffle_hash"), Seq("a_caid"))
-      .join(homes.withColumnRenamed("caid", "b_caid")
-        .withColumnRenamed("home_cell", "b_home")
-        .hint("shuffle_hash"), Seq("b_caid"))
-      .groupBy(col("a_home"), col("b_home"))
-      .agg(countDistinct(col("a_caid"), col("b_caid")).as("observed_contacts"))
-  }
-
   /** Observed contacts per (a_home, b_home): distinct interacting
     * pairs labeled with each side's home cell, then counted
     * (matrix_transforms.py:65-90). Fused single-join spelling (r6

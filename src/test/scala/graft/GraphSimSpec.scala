@@ -24,20 +24,63 @@ class GraphSimSpec extends AnyFunSuite {
     val sizes = Seq("A" -> 30L, "B" -> 20L)
     val probs = Seq(("A", "A", 0.2), ("A", "B", 0.05), ("B", "A", 0.05), ("B", "B", 0.3))
       .toDF("block_a", "block_b", "prob")
-    val n = Sbm.nodes(spark, sizes).cache()
+    val (n, e1) = Sbm.generate(spark, sizes, probs, seed = 7L)
     assert(n.count() == 50)
-    assert(n.groupBy("block").count().collect()
+    assert(n.groupBy(col("attrs")("block")).count().collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap == Map("A" -> 30L, "B" -> 20L))
-    val e1 = Sbm.edges(spark, n, probs, seed = 7L).cache()
-    val e2 = Sbm.edges(spark, n, probs, seed = 7L)
-    val e3 = Sbm.edges(spark, n, probs, seed = 8L)
-    assert(e1.where(col("src") >= col("dst")).count() == 0)
-    assert(e1.count() == e2.count())
-    assert(e1.exceptAll(e2).count() == 0, "same seed must give identical edges")
-    assert(e1.exceptAll(e3).count() > 0, "different seed must differ")
+    def pairs(e: org.apache.spark.sql.DataFrame) =
+      e.collect().map(r => r.getString(0).toLong -> r.getString(1).toLong).toSeq
+    val p1 = pairs(e1)
+    val p2 = pairs(Sbm.generate(spark, sizes, probs, seed = 7L)._2)
+    val p3 = pairs(Sbm.generate(spark, sizes, probs, seed = 8L)._2)
+    assert(!p1.exists { case (s, d) => s >= d })
+    assert(p1 == p2, "same seed must give identical edges")
+    assert(p1.diff(p3).nonEmpty, "different seed must differ")
     // edge count sanity: E[within A] = C(30,2)*0.2 = 87, loose bounds
-    val aa = e1.where(col("block_a") === "A" && col("block_b") === "A").count()
+    val aa = p1.count { case (s, d) => s < 30 && d < 30 }
     assert(aa > 40 && aa < 140, s"AA edges $aa out of plausible range")
+  }
+
+  test("SBM: the driver draw gives the Spark plan's vertices and edges, in order") {
+    import spark.implicits._
+    val cells = (0 until 5).map(k => s"c$k")
+    // 98 nodes over 5 blocks; the (c3, c1) block pair has no probability row
+    val fixtures = Seq(
+      Seq("A" -> 30L, "B" -> 20L) -> Seq(("A", "A", 0.2), ("A", "B", 0.05),
+        ("B", "A", 0.05), ("B", "B", 0.3)),
+      Seq("A" -> 10L, "B" -> 5L) -> Seq(("A", "A", 0.5), ("A", "B", 0.2),
+        ("B", "A", 0.2), ("B", "B", 0.6)),
+      cells.zip(Seq(31L, 24L, 19L, 14L, 10L)) ->
+        (for (a <- cells.indices; b <- cells.indices if (a, b) != (3, 1))
+          yield (cells(a), cells(b), 0.05 + 0.1 * ((a * 7 + b * 3) % 5))))
+    // The reference's edge order is that of the plan a fresh session
+    // picks: a broadcast nested-loop join streams i ascending, then j.
+    // With broadcasts off (a spec may leave them off in the shared
+    // session) it is a CartesianProduct, which walks partition pairs.
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.unset(key)
+    try for ((sizes, probRows) <- fixtures; seed <- Seq(3696L, 7L, 8L)) {
+      val probs = probRows.toDF("block_a", "block_b", "prob")
+      val (v, e) = Sbm.generate(spark, sizes, probs, seed)
+      val (rv, re) = SbmReference.generate(spark, sizes, probs, seed)
+      assert(v.schema == rv.schema && e.schema == re.schema)
+      assert(v.collect().toSeq == rv.collect().toSeq, s"vertices of $sizes, seed $seed")
+      val got = e.collect().toSeq
+      assert(got.nonEmpty && got == re.collect().toSeq, s"edges of $sizes, seed $seed")
+    } finally prev.foreach(spark.conf.set(key, _))
+  }
+
+  test("SBM: refuses more than Scaling.Target nodes before it draws a pair") {
+    import spark.implicits._
+    // collecting these probabilities fails, so the bound must be checked first
+    val probs = Seq(("A", "A", 0.5)).toDF("block_a", "block_b", "prob")
+      .where(raise_error(lit("probabilities collected")).isNull)
+    val half = operators.Scaling.Target / 2
+    val e = intercept[IllegalArgumentException] {
+      Sbm.generate(spark, Seq("A" -> half, "B" -> (half + 1)), probs, seed = 7L)
+    }
+    assert(e.getMessage.contains("scaled network"))
   }
 
   test("GraphML round-trip preserves vertices, attrs, and edges") {
@@ -129,7 +172,7 @@ class GraphSimSpec extends AnyFunSuite {
     //   Q_c = 3/7 - (7/14)^2, global Q = 2 Q_c ~ 0.357142857
     val e = Seq((1L, 2L), (1L, 3L), (2L, 3L), (3L, 7L), (7L, 8L), (7L, 9L),
       (8L, 9L)).toDF("src", "dst")
-    val rows = operators.GraphMetrics.graphModularityEdges(e).collect()
+    val rows = operators.GraphMetricsEdges.graphModularityEdges(e).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
         r.getDouble(4))).toSet
     val qc = operators.GraphMetrics.roundHalfUp(

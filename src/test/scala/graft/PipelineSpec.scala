@@ -1,8 +1,11 @@
 package graft
 
 import java.time.LocalDate
+import java.util.concurrent.atomic.AtomicInteger
 import scala.collection.mutable
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.graftspec.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
@@ -11,7 +14,7 @@ import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.time.SpanSugar._
 import graft.pipeline.Pipeline
-import graft.pipeline.Pipeline.{Dates, RunConfig}
+import graft.pipeline.Pipeline.RunConfig
 
 class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
 
@@ -21,49 +24,6 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     s
   }
   private val cfg = RunConfig("/root/testdata/sf0.001", LocalDate.of(2024, 1, 20))
-
-  test("date utilities: lookback window and trusted range") {
-    val window = Dates.lastDates(LocalDate.of(2024, 1, 20), 15)
-    assert(window.size == 15)
-    assert(window.head == LocalDate.of(2024, 1, 6))
-    assert(window.last == LocalDate.of(2024, 1, 20))
-    assert(Dates.trustedRange(LocalDate.of(2024, 1, 1),
-      LocalDate.of(2024, 1, 1), LocalDate.of(2024, 12, 31)))
-    assert(!Dates.trustedRange(LocalDate.of(2025, 1, 1),
-      LocalDate.of(2024, 1, 1), LocalDate.of(2024, 12, 31)))
-    assert(cfg.partitionPath == "year=2024/month=01/day=20")
-  }
-
-  test("stage composition filters as the handler chain would") {
-    val ev = Tables.events(spark, cfg.dataDir)
-    val staged = Pipeline.compose(
-      Pipeline.extractStage(cfg), Pipeline.nightStage(cfg))(ev)
-    assert(staged.count() > 0)
-    assert(staged.where(to_date(col("ts")) > lit("2024-01-20").cast("date")
-      || to_date(col("ts")) < lit("2024-01-06").cast("date")).count() == 0)
-    assert(staged.where(hour(col("ts")) >= 6 && hour(col("ts")) < 22).count() == 0)
-  }
-
-  test("observed stage audit: metrics accumulate in the same action, no extra job") {
-    val obs = new org.apache.spark.sql.Observation("extract_audit")
-    val ev = Tables.events(spark, cfg.dataDir)
-    val staged = Pipeline.audited(
-      Pipeline.extractStage(cfg)(ev), obs,
-      sum(when(col("value").isNull, 1).otherwise(0)).as("null_values"),
-      // exact DISTINCT is not a mergeable single-pass accumulator and
-      // is rejected by observe(); the HLL sketch is the right audit
-      approx_count_distinct(col("user_id")).as("n_users"))
-    val jobsBefore = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    val n = staged.count()
-    val m = obs.get
-    assert(m("rows") == n, "audit row count must equal the action's count")
-    assert(m("null_values") == 0L)
-    assert(m("n_users").asInstanceOf[Long] > 0)
-    // the audit must not have scheduled its own scan
-    val jobsAfter = spark.sparkContext.statusTracker.getJobIdsForGroup(null).length
-    assert(jobsAfter - jobsBefore <= 2,
-      s"observe must piggyback on the action: ${jobsAfter - jobsBefore} jobs")
-  }
 
   test("end-to-end daily run: matrix -> network -> SEIR") {
     val (matrix, vertices, edges, status) =
@@ -98,13 +58,43 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     plans.synchronized(plans.toSeq).map(p => collectWithSubqueries(p) { case x => x.nodeName })
   }
 
+  /** The Spark jobs `action` starts. */
+  private def jobsOf(action: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      action
+      ListenerBusDrain(sc)
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  // The SBM network is drawn once, on the driver, inside dailyRun: its plans
+  // hold no cross join, and the GraphML write starts no Spark job. The SEIR
+  // fan-out runs once too: the status writes read the collected rows.
   test("daily run: the SEIR fan-out and the SBM cross join each run once") {
-    val (_, vertices, edges, status) = Pipeline.dailyRun(spark, cfg, seeds = 0 until 4)
+    var res: (DataFrame, DataFrame, DataFrame, DataFrame) = null
+    // dailyRun's queries: the scaled sizes, then the SBM's read of the
+    // cached matrix (the scaled sizes' plan has its own nested-loop joins
+    // of 1-row totals)
+    val daily = executedNodes(2) { res = Pipeline.dailyRun(spark, cfg, seeds = 0 until 4) }
+    val sbm = daily.filter(_.contains("InMemoryTableScan"))
+    assert(sbm.nonEmpty, daily.toString)
+    sbm.foreach { p =>
+      assert(!p.exists(Set("CartesianProduct", "BroadcastNestedLoopJoin")),
+        s"the SBM network must be drawn on the driver: $p")
+    }
+    val (_, vertices, edges, status) = res
     val out = java.nio.file.Files.createTempDirectory("graft-daily").toString
-    // GraphML.write collects the vertices and the edges
-    val graphml = executedNodes(2) {
+    val graphmlJobs = jobsOf {
       graft.sources.GraphML.write(vertices, edges, s"$out/network.graphml")
     }
+    assert(graphmlJobs == 0, s"the network must be local relations: $graphmlJobs Spark jobs")
     val seirWrite = executedNodes(1) {
       status.write.mode("overwrite").parquet(s"$out/seir_status")
     }
@@ -113,10 +103,6 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val infectedWrite = executedNodes(1) {
       graft.sim.Seir.infectedPerBlock(status, blocks)
         .write.mode("overwrite").parquet(s"$out/infected_per_block")
-    }
-    graphml.foreach { p =>
-      assert(!p.exists(Set("CartesianProduct", "BroadcastNestedLoopJoin")),
-        s"the GraphML edges must be the rows dailyRun collected: $p")
     }
     (seirWrite ++ infectedWrite).foreach { p =>
       assert(p.contains("LocalTableScan"), s"must read the collected statuses: $p")

@@ -223,12 +223,12 @@ class R13Spec extends AnyFunSuite {
   }
 
   test("observed_contacts: fused spelling equals the two-join spelling") {
-    import graft.operators.Interactions
+    import graft.operators.{Interactions, InteractionsReference}
     def m(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
     // sf0.01 exercises multi-partition groups and the matrix mirror
     val dir = "/root/testdata/sf0.01"
-    val joined = m(Interactions.observedContactsJoined(spark, dir))
+    val joined = m(InteractionsReference.observedContactsJoined(spark, dir))
     val fused = m(Interactions.observedContacts(spark, dir))
     assert(fused == joined,
       s"fused and joined spellings must agree (|j|=${joined.size}, |f|=${fused.size})")
