@@ -78,9 +78,9 @@ object Main {
     case "build-network" :: stageDir :: outDir :: rest => withSpark { spark =>
       import org.apache.spark.sql.functions.col
       val seed = rest.headOption.map(_.toLong).getOrElse(3696L)
-      val sizes = spark.read.parquet(s"$stageDir/scaled_sizes")
+      val sizes = graft.graph.Sbm.nodeSizes(spark.read.parquet(s"$stageDir/scaled_sizes")
         .orderBy(col("event_type")).collect()
-        .map(r => r.getString(0) -> math.max(1L, r.getLong(2) / 100)).toSeq
+        .map(r => r.getString(0) -> r.getLong(2)).toSeq)
       val probs = spark.read.parquet(s"$stageDir/prob_matrix")
         .select(col("a_home").as("block_a"), col("b_home").as("block_b"),
           col("prob"))

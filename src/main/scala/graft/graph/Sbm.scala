@@ -37,6 +37,13 @@ object Sbm {
     StructField("src", StringType, nullable = false),
     StructField("dst", StringType, nullable = false)))
 
+  /** The test-scale node count of each block: one node per 100 scaled
+    * members, at least one per block. `run-daily` and `build-network`
+    * both draw from these counts.
+    */
+  def nodeSizes(scaled: Seq[(String, Long)]): Seq[(String, Long)] =
+    scaled.map { case (b, n) => b -> math.max(1L, n / 100) }
+
   /** (block, first id, end id) of each block's contiguous node range. */
   private def ranges(sizes: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
     val offsets = sizes.scanLeft(0L)(_ + _._2)

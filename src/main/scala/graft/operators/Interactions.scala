@@ -1,7 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 import graft.{Op, Tables}
 
 /** Co-location "interactions" pipeline.
@@ -22,6 +24,13 @@ import graft.{Op, Tables}
   * self-join (the reference's own dedup-before-join pattern,
   * SURVEY §4.2). The pair-level distinct and the group-by share the
   * (a_caid, b_caid) shuffle key, so Catalyst reuses one exchange.
+  *
+  * The contact matrix (observed contacts, sizes, total vs observed) is
+  * no longer a lazy plan: [[contactCounts]] runs one device-keyed pass
+  * over events and collects |cells|²-bounded counts, and the matrix is
+  * assembled from them on the driver as a local relation. The lazy
+  * fused `observedContacts` plan is gone; R13Spec still checks the
+  * result against the two-join spelling in `InteractionsReference`.
   */
 object Interactions {
 
@@ -186,51 +195,131 @@ object Interactions {
       |  FROM events GROUP BY user_id, event_type
       |) WHERE rnk = 1""".stripMargin
 
-  /** Observed contacts per (a_home, b_home): distinct interacting
-    * pairs labeled with each side's home cell, then counted
-    * (matrix_transforms.py:65-90). Fused single-join spelling (r6
-    * verdict #1, registered in r7): homes enrich the PRESENCE rows
-    * (event-cardinality) before the (cell, tw) grouping, the group
-    * collects (caid, home) structs (`min_k_distinct_tagged` — same
-    * deterministic smallest-k subset as the untagged path), and
-    * canonical pairs emerge already home-labeled
-    * (`pair_structs_tagged`), so the pair relation — the LARGEST
-    * relation in this query, n(n−1) per group — never shuffles
-    * through a join at all. The bidirectional count is recovered at
-    * the MATRIX level (M = C + Cᵀ over the |cells|² relation — tiny
-    * at any scale), not by mirroring pairs. One device-key exchange
-    * on events replaces two on pairs; the homes catalog stays
-    * shuffle-side (device cardinality, never broadcastable —
-    * VERDICT r3 #3).
+  /** The collected result of [[contactCounts]]: `pairs` is C, the
+    * distinct canonical (a < b) co-located device pairs per
+    * (a_home, b_home); `homeSizes` the distinct devices per home cell;
+    * `cellDevices` the distinct devices per cell, the scaler's input.
     */
-  def observedContacts(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir)
-    val origin = ev.agg(min(col("ts")).as("origin_ts"))
-    val homes = homeCells(spark, dir)
-    val presence = ev.crossJoin(broadcast(origin))
-      .select(
-        col("user_id").as("caid"),
-        col("event_type").as("cell"),
-        expr("(unix_micros(ts) - unix_micros(origin_ts)) div 600000000").as("tw"))
-    val enriched = presence.join(homes.hint("shuffle_hash"), Seq("caid"))
-    val grouped = enriched.groupBy(col("cell"), col("tw"))
+  final case class ContactCounts(pairs: Map[(String, String), Long],
+      homeSizes: Seq[(String, Long)], cellDevices: Seq[(String, Long)])
+
+  /** Spark's ascending string order: UTF-8 bytes, nulls first. */
+  private[graft] val cellOrder: Ordering[String] = (x: String, y: String) =>
+    if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
+    else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
+
+  /** The bucket origin `unix_micros(MIN(ts))` over events, one scalar
+    * collect (None when no event has a timestamp).
+    */
+  private[graft] def originMicros(spark: SparkSession, dir: String): Option[Long] = {
+    val r = Tables.events(spark, dir).agg(unix_micros(min(col("ts")))).head()
+    if (r.isNullAt(0)) None else Some(r.getLong(0))
+  }
+
+  /** The one pass over events behind [[contactCounts]], as one query
+    * whose rows are a tagged union (part, k1, k2, n):
+    *  - part 0: C, `countDistinct(a_caid, b_caid)` per (k1 = a_home,
+    *    k2 = b_home) over the canonical pairs;
+    *  - part 1: distinct devices per home cell k1;
+    *  - part 2: distinct devices per cell k1.
+    *
+    * Events are projected to (caid, cell, tw) and hash-partitioned by
+    * caid once. The (caid, cell, tw) presence, the (caid, cell) counts,
+    * the home argmax (the same `min_by(cell, (-n, cell))` as
+    * [[homeCells]]) and the presence ⋈ homes join all read that
+    * exchange, so the device-cardinality homes never shuffle and never
+    * broadcast (VERDICT r3 #3). One (cell, tw) exchange then groups the
+    * home-labeled presence rows (`min_k_distinct_tagged`, capped at
+    * [[GroupCap]]) and canonical pairs emerge labeled
+    * (`pair_structs_tagged`), so the pair relation never joins. The three parts count `caid` (null devices skipped,
+    * as `COUNT(DISTINCT)` skips them) in one final aggregation: at most
+    * |cells|² + 2·|cells| rows.
+    */
+  private[graft] def contactCountsPass(spark: SparkSession, dir: String,
+      origin: Option[Long]): DataFrame = {
+    val tw = origin.fold(lit(null).cast("long"))(o =>
+      expr(s"(unix_micros(ts) - ${o}L) div 600000000"))
+    // every branch below reads this one exchange through `presence`,
+    // whose grouping keeps the three columns, so the optimizer prunes
+    // no branch's exchange differently and all of them reuse it
+    val presence = Tables.events(spark, dir)
+      .select(col("user_id").as("caid"), col("event_type").as("cell"), tw.as("tw"))
+      .repartition(col("caid"))
+      .groupBy(col("caid"), col("cell"), col("tw"))
+      .agg(count(lit(1)).as("n"))
+    val counts = presence.groupBy(col("caid"), col("cell")).agg(sum(col("n")).as("n"))
+    val homes = counts.groupBy(col("caid"))
+      .agg(min_by(col("cell"), struct((-col("n")).as("negn"), col("cell")))
+        .as("home_cell"))
+    // A full join: an inner one would infer `caid IS NOT NULL` and push
+    // it below the exchange of these two branches only. The rows it adds
+    // have a null caid, which min_k_distinct_tagged skips, so the members
+    // are the inner join's.
+    val members = presence.select(col("caid"), col("cell"), col("tw"))
+      .join(homes.hint("shuffle_hash"), Seq("caid"), "full")
+      .groupBy(col("cell"), col("tw"))
       .agg(call_function("min_k_distinct_tagged",
         col("caid"), col("home_cell"), lit(GroupCap + 1)).as("members"))
       .where(size(col("members")) >= 2)
       .withColumn("members",
         when(size(col("members")) <= lit(GroupCap), col("members"))
           .otherwise(slice(col("members"), 1, GroupCap)))
-    val canon = grouped
+    val pairs = members
       .select(explode(call_function("pair_structs_tagged", col("members"))).as("p"))
-      .select(col("p.ia").as("a_caid"), col("p.ib").as("b_caid"),
-        col("p.ta").as("a_home"), col("p.tb").as("b_home"))
-    val c = canon.groupBy(col("a_home"), col("b_home"))
-      .agg(countDistinct(col("a_caid"), col("b_caid")).as("cnt"))
-    c.select(col("a_home"), col("b_home"), col("cnt"))
-      .unionAll(c.select(col("b_home").as("a_home"),
-        col("a_home").as("b_home"), col("cnt")))
-      .groupBy(col("a_home"), col("b_home"))
-      .agg(sum(col("cnt")).as("observed_contacts"))
+      .select(col("p.ta").as("k1"), col("p.tb").as("k2"), col("p.ia").as("caid"),
+        col("p.ib").as("b_caid"))
+      .distinct()
+    val noKey = lit(null).cast("string").as("k2")
+    pairs.select(lit(0).as("part"), col("k1"), col("k2"), col("caid"))
+      .unionAll(homes.select(lit(1), col("home_cell"), noKey, col("caid")))
+      // n > 0 always holds; reading n keeps this branch on the shared
+      // exchange (unread, the optimizer drops the presence aggregate,
+      // prunes tw and shuffles events again for this branch alone)
+      .unionAll(counts.select(lit(2), col("cell"), noKey,
+        when(col("n") > 0, col("caid")).as("caid")))
+      .groupBy(col("part"), col("k1"), col("k2"))
+      .agg(count(col("caid")).as("n"))
+  }
+
+  /** The contact counts of the events under `dir`: the origin collect,
+    * then [[contactCountsPass]]'s one collect. Everything after it (the
+    * mirror, the totals, the scaled sizes) is assembled on the driver.
+    */
+  def contactCounts(spark: SparkSession, dir: String): ContactCounts = {
+    val rows = contactCountsPass(spark, dir, originMicros(spark, dir)).collect()
+    def part(p: Int) = rows.iterator.filter(_.getInt(0) == p)
+    ContactCounts(
+      part(0).map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap,
+      part(1).map(r => r.getString(1) -> r.getLong(3)).toSeq,
+      part(2).map(r => r.getString(1) -> r.getLong(3)).toSeq)
+  }
+
+  /** M = C + Cᵀ: both directions of every counted pair, so an a = b
+    * block pair counts twice.
+    */
+  private def mirrored(c: ContactCounts): Map[(String, String), Long] =
+    (c.pairs.toSeq ++ c.pairs.toSeq.map { case ((a, b), n) => (b, a) -> n })
+      .groupMapReduce(_._1)(_._2)(_ + _)
+
+  private val pairOrder: Ordering[(String, String)] =
+    Ordering.Tuple2(cellOrder, cellOrder)
+
+  private def local(spark: SparkSession, rows: Seq[Row], schema: StructType): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  private val observedSchema = StructType(Seq(
+    StructField("a_home", StringType, nullable = false),
+    StructField("b_home", StringType, nullable = false),
+    StructField("observed_contacts", LongType)))
+
+  /** Observed contacts per (a_home, b_home)
+    * (matrix_transforms.py:65-90): M = C + Cᵀ of [[contactCounts]],
+    * sorted by (a_home, b_home), as a local relation.
+    */
+  def observedContacts(spark: SparkSession, dir: String): DataFrame = {
+    val m = mirrored(contactCounts(spark, dir))
+    local(spark, m.keys.toSeq.sorted(pairOrder).map { case k @ (a, b) => Row(a, b, m(k)) },
+      observedSchema)
   }
 
   private val observedContactsSql =
@@ -255,27 +344,33 @@ object Interactions {
     s"""WITH homes AS ($homeCellsSql)
        |SELECT home_cell, count(DISTINCT caid) AS size FROM homes GROUP BY 1""".stripMargin
 
-  /** J4+J3+A10: cross-join total possible contacts (size_a*size_b), left
-    * join observed, zero-fill, probability column
+  private val matrixSchema = StructType(Seq(
+    StructField("a_home", StringType),
+    StructField("b_home", StringType),
+    StructField("total_contacts", LongType, nullable = false),
+    StructField("observed_contacts", LongType, nullable = false),
+    StructField("prob", DoubleType)))
+
+  /** J4+J3+A10: total possible contacts (size_a·size_b) for every pair
+    * of home cells, observed contacts M zero-filled, probability column
     * (/root/reference/scripts/NetworkBuilder.py:129-246,
-    * matrix_transforms.py:42-122,161). The sizes side is |cells|² — tiny
-    * — so both joins broadcast; probs computed on the long form.
+    * matrix_transforms.py:42-122,161), sorted by (a_home, b_home), as a
+    * local relation of |homes|² rows. A pair with no possible contact
+    * (a home of null devices only) gets a null probability.
     */
-  def totalVsObserved(spark: SparkSession, dir: String): DataFrame = {
-    val sz = sizes(spark, dir)
-    val a = sz.select(col("home_cell").as("a_home"), col("size").as("a_size"))
-    val b = sz.select(col("home_cell").as("b_home"), col("size").as("b_size"))
-    val total = a.crossJoin(b)
-      .select(col("a_home"), col("b_home"),
-        (col("a_size") * col("b_size")).as("total_contacts"))
-    val obs = observedContacts(spark, dir)
-    total.join(broadcast(obs), Seq("a_home", "b_home"), "left")
-      .select(col("a_home"), col("b_home"), col("total_contacts"),
-        coalesce(col("observed_contacts"), lit(0L)).as("observed_contacts"),
-        (coalesce(col("observed_contacts"), lit(0L)).cast("double")
-          / col("total_contacts")).as("prob"))
-      .orderBy(col("a_home").asc, col("b_home").asc)
+  def contactMatrix(spark: SparkSession, c: ContactCounts): DataFrame = {
+    val m = mirrored(c)
+    val homes = c.homeSizes.sortBy(_._1)(cellOrder)
+    val rows = for ((a, sa) <- homes; (b, sb) <- homes) yield {
+      val total = sa * sb
+      val observed = m.getOrElse((a, b), 0L)
+      Row(a, b, total, observed, if (total == 0) null else observed.toDouble / total)
+    }
+    local(spark, rows, matrixSchema)
   }
+
+  def totalVsObserved(spark: SparkSession, dir: String): DataFrame =
+    contactMatrix(spark, contactCounts(spark, dir))
 
   private val totalVsObservedSql =
     s"""WITH homes AS ($homeCellsSql),

@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import graft.{Op, Tables}
 
 /** Population scaling (/root/reference/src/scalers/size_scalers.py).
@@ -13,8 +14,8 @@ import graft.{Op, Tables}
   * (size_scalers.py:30-48,74-101,122-162). Re-expressed distributed:
   * the largest-remainder method — floor every share, hand the
   * remainder units to the groups with the largest fractional parts
-  * (deterministic tie-break) — which satisfies the same invariant in
-  * one windowed pass, no sequential loop.
+  * (deterministic tie-break) — which satisfies the same invariant
+  * without a sequential loop.
   */
 object Scaling {
 
@@ -23,39 +24,45 @@ object Scaling {
   /** Exact-total scaled sizes per group (largest-remainder method):
     * share = size * Target (exact int); base = share div total; the
     * deficit (Target − Σbase) goes one unit each to the groups with the
-    * largest (share mod total), ties to the smaller group key. The
-    * global window ranks |groups| rows (tiny) — everything upstream is
-    * distributed aggregation.
+    * largest (share mod total), ties to the smaller group key. Returns
+    * (group, size, scaled size) in that rank order (remainder
+    * descending, key ascending). Runs on the driver: its input is one
+    * row per group.
     *
     * vs the reference (size_scalers.py:30-48): rounding cast + greedy
     * bump-zeros loop, asserting sum == 10000 after the fact. The
-    * largest-remainder form guarantees that invariant by construction
-    * and is order-free/distributed. (The reference's extra
-    * "nonzero group gets ≥ 1" rule only binds when a group's share
-    * rounds to zero — impossible at the test data's group sizes; add a
-    * post-pass bump if ever needed.)
+    * largest-remainder form guarantees that invariant by construction.
+    * (The reference's extra "nonzero group gets ≥ 1" rule only binds
+    * when a group's share rounds to zero — impossible at the test
+    * data's group sizes; add a post-pass bump if ever needed.)
+    */
+  def largestRemainder(sizes: Seq[(String, Long)]): Seq[(String, Long, Long)] = {
+    val total = sizes.map(_._2).sum
+    val shares = sizes.map { case (g, n) => (g, n, n * Target / total, n * Target % total) }
+    val deficit = Target - shares.map(_._3).sum
+    val rank = Ordering.by[(String, Long, Long, Long), Long](_._4).reverse
+      .orElse(Ordering.by[(String, Long, Long, Long), String](_._1)(Interactions.cellOrder))
+    shares.sorted(rank).zipWithIndex.map { case ((g, n, base, _), i) =>
+      (g, n, base + (if (i < deficit) 1L else 0L))
+    }
+  }
+
+  private val scaledSizesSchema = StructType(Seq(
+    StructField("event_type", StringType),
+    StructField("size", LongType, nullable = false),
+    StructField("scaled_size", LongType)))
+
+  /** [[largestRemainder]] over the distinct devices per cell
+    * (event_type), collected in one query (|cells| rows), as a local
+    * relation in rank order.
     */
   def scaledSizesExact(spark: SparkSession, dir: String): DataFrame = {
-    val sizes = Tables.events(spark, dir)
+    val cells = Tables.events(spark, dir)
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("size"))
-    val withTotal = sizes.crossJoin(broadcast(sizes.agg(sum(col("size")).as("total"))))
-      .select(col("event_type"), col("size"), col("total"),
-        expr(s"(size * ${Target}L) div total").as("base"),
-        expr(s"(size * ${Target}L) % total").as("frac"))
-    val deficit = withTotal
-      .agg((lit(Target) - sum(col("base"))).as("deficit"))
-    // Unpartitioned window by design: its input is one row per cell
-    // (event_type), so the single partition it moves holds |cells| rows
-    // (5 in the test data), whatever the event volume. Spark's "No
-    // Partition Defined for Window operation" warning on every daily
-    // run refers to this bounded relation.
-    withTotal.crossJoin(broadcast(deficit))
-      .withColumn("rnk", row_number().over(
-        Window.orderBy(col("frac").desc, col("event_type").asc)))
-      .select(col("event_type"), col("size"),
-        (col("base") + when(col("rnk") <= col("deficit"), 1L).otherwise(0L))
-          .as("scaled_size"))
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
+    val rows = largestRemainder(cells).map { case (g, n, s) => Row(g, n, s) }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), scaledSizesSchema)
   }
 
   private val scaledSizesExactSql =
@@ -86,7 +93,7 @@ object Scaling {
     * `sum == 10000` BEFORE each row and each bump adds exactly 1, so
     * precisely the first `deficit` zero-groups (key order) get bumped —
     * a rank filter over the group-sizes relation (|groups| rows,
-    * bounded — same class as [[scaledSizesExact]]'s window).
+    * bounded, the input [[scaledSizesExact]] collects).
     * Reference caveats preserved, not "fixed": when rounding OVERSHOOTS
     * the target (deficit < 0) the reference loop can never repair and
     * its assert fires; here the deficit filter simply bumps nothing —

@@ -10,9 +10,10 @@ import graft.operators._
   * pipeline (reference src/core/core_abstract.py:19-43 and
   * src/core/context.py:9-56) as one function: events →
   * contact matrix → SBM network → SEIR. The handlers' per-stage parquet
-  * handoffs become one lazy plan up to the contact matrix. What follows
-  * is bounded by the scaled network: the SBM is drawn on the driver, as
-  * the reference draws it, and the SEIR seeds fan out as one Spark job.
+  * handoffs become one pass over events that collects the contact
+  * counts. What follows is bounded by the scaled network: the matrix
+  * and the SBM are built on the driver, as the reference builds them,
+  * and the SEIR seeds fan out as one Spark job.
   */
 object Pipeline {
 
@@ -30,33 +31,35 @@ object Pipeline {
   )
 
   /** End-to-end daily run: events → NTL homes → interactions →
-    * contact matrix → SBM network → SEIR, materialized at three
-    * driver-side points, each bounded by the scaled network rather
-    * than by the events:
-    *  - the scaled block sizes, collected (|cells| rows);
-    *  - the cached contact matrix (|cells|² rows), first computed when
-    *    `Sbm.draw` collects its probabilities; the network is then
-    *    drawn on the driver (V ≤ Scaling.Target/100 + |cells|
-    *    test-scale nodes) and returned as local relations, so the
-    *    GraphML sink runs no Spark job;
+    * contact matrix → SBM network → SEIR. It runs three collects, each
+    * bounded by the scaled network rather than by the events:
+    *  - the bucket origin `MIN(ts)` (one row);
+    *  - `Interactions.contactCounts`, the one device-keyed pass over
+    *    events (|cells|² + 2·|cells| rows). The contact matrix and the
+    *    scaled block sizes are assembled from it on the driver, so
+    *    events are not scanned again, and the matrix is a local
+    *    relation;
     *  - the SEIR statuses, collected once by `Seir.runMany`
     *    (seeds × V rows); both status writes read those rows.
+    * The network is drawn on the driver (V ≤ Scaling.Target/100 +
+    * |cells| test-scale nodes) and returned as local relations, so the
+    * GraphML sink runs no Spark job.
     * Returns (matrix, networkVertices, networkEdges, seirStatus).
     */
   def dailyRun(spark: SparkSession, cfg: RunConfig, seeds: Range)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = {
-    val matrix = Interactions.totalVsObserved(spark, cfg.dataDir).cache()
+    val counts = Interactions.contactCounts(spark, cfg.dataDir)
+    val matrix = Interactions.contactMatrix(spark, counts)
 
-    // scaled block sizes from contact sizes (scaler stage)
-    val sizes = Scaling.scaledSizesExact(spark, cfg.dataDir)
-      .orderBy(col("event_type"))
-      .collect()
-      .map(r => r.getString(0) -> r.getLong(2)).toSeq
+    // scaled block sizes from the pass's per-cell device counts (scaler stage)
+    val sizes = Scaling.largestRemainder(counts.cellDevices)
+      .map { case (cell, _, scaled) => cell -> scaled }
+      .sortBy(_._1)(Interactions.cellOrder)
     // probability long-form for the generator
     val probs = matrix.select(col("a_home").as("block_a"),
       col("b_home").as("block_b"), col("prob"))
 
-    val nodeSizes = sizes.map { case (b, n) => b -> math.max(1L, n / 100) } // test-scale nodes
+    val nodeSizes = Sbm.nodeSizes(sizes)
     val pairs = Sbm.draw(nodeSizes, probs, seed = 3696L)
     val (vertices, edges) = Sbm.relations(spark, nodeSizes, pairs)
 

@@ -197,14 +197,32 @@ object Seir {
 
   /** Post-simulation analytics: infected count per block
     * (/root/reference/scripts/csv_infected.py:62-133) — join node
-    * status with the node→block catalog, count nodes that ever entered
-    * I, per (seed, block).
+    * status with the node→block catalog, count the distinct nodes that
+    * ever entered I, per (seed, block); sorted by (seed, block).
+    *
+    * Both inputs are bounded by the scaled network: `status` has at
+    * most seeds × Scaling.Target rows (`runMany`'s), `nodeBlocks` at
+    * most Scaling.Target (the SBM vertices). So both are collected —
+    * no job when they are local relations, as `runMany`'s statuses and
+    * the SBM vertices are — and counted on the driver; the result is a
+    * local relation.
     */
   def infectedPerBlock(status: DataFrame, nodeBlocks: DataFrame): DataFrame = {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions._
-    status.join(nodeBlocks, Seq("nodeId"))
-      .where(!isnan(col("tI")))
-      .groupBy(col("seed"), col("block"))
-      .agg(countDistinct(col("nodeId")).as("n_infected"))
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val blocksOf = nodeBlocks.select("nodeId", "block").collect()
+      .groupMap(_.getLong(0))(_.getString(1))
+    val infected = status.where(!isnan(col("tI"))).select("seed", "nodeId").collect()
+    val counts = infected.flatMap { r =>
+      val node = r.getLong(1)
+      blocksOf.getOrElse(node, Array.empty[String]).map(b => (r.getLong(0), b) -> node)
+    }.groupMapReduce(_._1)(p => Set(p._2))(_ ++ _)
+    val rows = counts.keys.toSeq
+      .sorted(Ordering.Tuple2(Ordering.Long, graft.operators.Interactions.cellOrder))
+      .map { case k @ (seed, b) => Row(seed, b, counts(k).size.toLong) }
+    val schema = StructType(Seq(status.schema("seed"), nodeBlocks.schema("block"),
+      StructField("n_infected", LongType, nullable = false)))
+    status.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
   }
 }

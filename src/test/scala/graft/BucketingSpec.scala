@@ -23,14 +23,24 @@ class BucketingSpec extends AnyFunSuite {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir", wh)
       .config("spark.local.dir", "/dev/shm/spark-local")
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ path
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }
 
-  test("bucketed join plans without any shuffle exchange") {
+  /** Runs `f` with broadcast joins off (forcing the sort-merge path),
+    * then restores the session's previous value: the session is shared
+    * with every spec that runs after this one.
+    */
+  private def withoutBroadcastJoins(f: => Unit): Unit = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    try f finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  test("bucketed join plans without any shuffle exchange") { withoutBroadcastJoins {
     val sf = "/root/testdata/sf0.001"
     // getOrCreate may reuse an existing session whose (static) warehouse
     // conf differs, and a fresh JVM's in-memory catalog has no memory of
@@ -72,5 +82,5 @@ class BucketingSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val got = joined.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == expected)
-  }
+  } }
 }

@@ -1,0 +1,100 @@
+package graft
+
+import java.sql.Timestamp
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.operators.{ContactMatrixReference => Ref, Interactions, Scaling}
+
+/** The contact matrix, scaled sizes and infected counts assembled on the
+  * driver equal the Spark plans they replaced (`ContactMatrixReference`):
+  * same schema, same rows in the same order. Relations the old plans
+  * left unordered (observed contacts, infected per block) are compared
+  * sorted.
+  */
+class ContactMatrixSpec extends AnyFunSuite {
+
+  private lazy val spark: SparkSession = {
+    val s = Sessions.build("graft-test", "4")
+    s.sparkContext.setLogLevel("WARN")
+    s
+  }
+
+  private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq
+
+  private def sortedRows(df: DataFrame): Seq[String] = rows(df).map(_.toString).sorted
+
+  private def assertSame(what: String, got: DataFrame, want: DataFrame, ordered: Boolean): Unit = {
+    assert(got.schema == want.schema, s"$what schema")
+    if (ordered) assert(rows(got) == rows(want), what)
+    else assert(sortedRows(got) == sortedRows(want), what)
+  }
+
+  private def assertMatrixSame(dir: String): Unit = {
+    assertSame(s"total_vs_observed $dir", Interactions.totalVsObserved(spark, dir),
+      Ref.totalVsObserved(spark, dir), ordered = true)
+    assertSame(s"observed_contacts $dir", Interactions.observedContacts(spark, dir),
+      Ref.observedContacts(spark, dir), ordered = false)
+    assertSame(s"scaled_sizes $dir", Scaling.scaledSizesExact(spark, dir),
+      Ref.scaledSizesExact(spark, dir), ordered = true)
+  }
+
+  test("contact matrix: the driver assembly equals the Spark plans at sf0.001 and sf0.01") {
+    assertMatrixSame("/root/testdata/sf0.001")
+    assertMatrixSame("/root/testdata/sf0.01")
+  }
+
+  // Cells A, B, H, Z; origin = the first event, 10-minute buckets.
+  //  - d1, d2 (home A) and d3 (home B) meet at A in bucket 0: C(A,A) = 1,
+  //    C(A,B) = 2; d1 and d3 meet again at Z in bucket 5 (not recounted).
+  //  - d4's home H meets nobody: its row is zero-filled.
+  //  - Z is visited by d1 and d3 and is nobody's home.
+  //  - the null device is at A in bucket 0 and with d3 at B in bucket 1;
+  //    its home is A. It counts in no size and makes no pair.
+  //  - per-cell devices A 3, B 1, H 1, Z 2 (total 7): remainders A 5,
+  //    B 4, H 4, Z 1 with a deficit of 2, so A and B (B < H) get a unit.
+  private val events: Seq[(java.lang.Long, String, Int)] = Seq(
+    (1L, "A", 1), (1L, "A", 20), (1L, "A", 40), (1L, "Z", 55),
+    (2L, "A", 2), (2L, "A", 30),
+    (3L, "B", 0), (3L, "B", 15), (3L, "B", 25), (3L, "A", 3), (3L, "Z", 51),
+    (4L, "H", 5), (4L, "H", 45),
+    (null, "A", 4), (null, "A", 35), (null, "B", 15)
+  )
+
+  private lazy val fixture: String = {
+    import spark.implicits._
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val dir = java.nio.file.Files.createTempDirectory("graft-contacts").toString
+    events.zipWithIndex
+      .map { case ((u, c, m), i) => (i.toLong, new Timestamp(t0 + m * 60000L), u, c) }
+      .toDF("event_id", "ts", "user_id", "event_type")
+      .coalesce(1).write.parquet(s"$dir/events.parquet")
+    dir
+  }
+
+  test("contact matrix: hand fixture — remainder tie, zero-filled home, a = b pair, homeless cell, null device") {
+    assertMatrixSame(fixture)
+    val m = rows(Interactions.totalVsObserved(spark, fixture))
+      .map(r => (r.getString(0), r.getString(1)) -> (r.getLong(2), r.getLong(3))).toMap
+    assert(m.keySet.map(_._1) == Set("A", "B", "H"), "Z is nobody's home")
+    assert(m(("A", "A")) == (4L, 2L), "the a = b pair counts twice")
+    assert(m(("A", "B")) == (2L, 2L) && m(("B", "A")) == (2L, 2L))
+    assert(Seq("A", "B", "H").forall(c => m(("H", c))._2 == 0L), "H is zero-filled")
+    val scaled = rows(Scaling.scaledSizesExact(spark, fixture))
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    assert(scaled == Seq(("A", 3L, 4286L), ("B", 1L, 1429L), ("H", 1L, 1428L), ("Z", 2L, 2857L)))
+  }
+
+  test("infected per block: the driver count equals the Spark join") {
+    import spark.implicits._
+    val adj = (0L until 30L).map { i =>
+      i -> (0L until 30L).filter(j => j != i && math.abs(j - i) <= 2).toArray
+    }.toMap
+    val status = graft.sim.Seir.runMany(spark, adj, beta = 1.0, sigma = 1.0, gamma = 0.2,
+      initialInfected = Seq(0L), tmax = 50.0, seeds = 0 until 8)
+    // node 29 has no block, node 3 has two
+    val blocks = ((0L until 29L).map(i => (i, if (i < 15) "X" else "Y")) :+ (3L, "W"))
+      .toDF("nodeId", "block")
+    assertSame("infected_per_block", graft.sim.Seir.infectedPerBlock(status, blocks),
+      Ref.infectedPerBlock(status, blocks), ordered = false)
+  }
+}

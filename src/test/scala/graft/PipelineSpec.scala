@@ -6,13 +6,11 @@ import scala.collection.mutable
 import org.apache.spark.graftspec.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.util.QueryExecutionListener
-import org.scalatest.concurrent.Eventually._
 import org.scalatest.funsuite.AnyFunSuite
-import org.scalatest.time.SpanSugar._
 import graft.pipeline.Pipeline
 import graft.pipeline.Pipeline.RunConfig
 
@@ -40,10 +38,10 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     assert(simNodes.subsetOf(nodeIds))
   }
 
-  /** The executed plans of the `n` queries `action` runs, as node class
-    * names (through AQE stages and write commands).
+  /** The executed plans of the queries `action` runs (through AQE
+    * stages and write commands).
     */
-  private def executedNodes(n: Int)(action: => Unit): Seq[Seq[String]] = {
+  private def plansOf(action: => Unit): Seq[SparkPlan] = {
     val plans = mutable.ArrayBuffer.empty[SparkPlan]
     val listener = new QueryExecutionListener {
       def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
@@ -53,10 +51,16 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     spark.listenerManager.register(listener)
     try {
       action
-      eventually(timeout(30.seconds)) { assert(plans.synchronized(plans.size) >= n) }
+      ListenerBusDrain(spark.sparkContext)
     } finally spark.listenerManager.unregister(listener)
-    plans.synchronized(plans.toSeq).map(p => collectWithSubqueries(p) { case x => x.nodeName })
+    plans.synchronized(plans.toSeq)
   }
+
+  private def nodeNames(p: SparkPlan): Seq[String] = collectWithSubqueries(p) { case x => x.nodeName }
+
+  private def scansEvents(p: SparkPlan): Boolean = collectWithSubqueries(p) {
+    case s: FileSourceScanExec => s.relation.location.rootPaths.map(_.getName)
+  }.flatten.contains("events.parquet")
 
   /** The Spark jobs `action` starts. */
   private def jobsOf(action: => Unit): Int = {
@@ -74,36 +78,49 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally sc.removeSparkListener(listener)
   }
 
-  // The SBM network is drawn once, on the driver, inside dailyRun: its plans
-  // hold no cross join, and the GraphML write starts no Spark job. The SEIR
-  // fan-out runs once too: the status writes read the collected rows.
-  test("daily run: the SEIR fan-out and the SBM cross join each run once") {
+  // dailyRun scans events twice (the origin, then the one contact-count
+  // pass) and builds the matrix, the scaled sizes and the SBM network on
+  // the driver: no plan holds a cross join, a nested-loop join or a
+  // window. The SEIR fan-out runs once too: the status writes read the
+  // collected rows, and the GraphML write starts no job.
+  test("daily run: two events scans, no cross join or window, at most 12 + 3 jobs") {
+    spark.catalog.clearCache() // nothing an earlier test cached may serve this run
     var res: (DataFrame, DataFrame, DataFrame, DataFrame) = null
-    // dailyRun's queries: the scaled sizes, then the SBM's read of the
-    // cached matrix (the scaled sizes' plan has its own nested-loop joins
-    // of 1-row totals)
-    val daily = executedNodes(2) { res = Pipeline.dailyRun(spark, cfg, seeds = 0 until 4) }
-    val sbm = daily.filter(_.contains("InMemoryTableScan"))
-    assert(sbm.nonEmpty, daily.toString)
-    sbm.foreach { p =>
-      assert(!p.exists(Set("CartesianProduct", "BroadcastNestedLoopJoin")),
-        s"the SBM network must be drawn on the driver: $p")
+    var daily: Seq[SparkPlan] = Nil
+    val dailyJobs = jobsOf {
+      daily = plansOf { res = Pipeline.dailyRun(spark, cfg, seeds = 0 until 4) }
     }
-    val (_, vertices, edges, status) = res
+    info(s"dailyRun: $dailyJobs Spark jobs")
+    assert(dailyJobs <= 12, s"dailyRun started $dailyJobs Spark jobs")
+    daily.map(nodeNames).foreach { p =>
+      assert(!p.exists(Set("CartesianProduct", "BroadcastNestedLoopJoin", "Window")),
+        s"no dailyRun plan may cross join or window: $p")
+    }
+    val scans = daily.count(scansEvents)
+    assert(scans >= 1 && scans <= 2, s"$scans dailyRun queries scan events")
+    val (matrix, vertices, edges, status) = res
     val out = java.nio.file.Files.createTempDirectory("graft-daily").toString
-    val graphmlJobs = jobsOf {
-      graft.sources.GraphML.write(vertices, edges, s"$out/network.graphml")
-    }
-    assert(graphmlJobs == 0, s"the network must be local relations: $graphmlJobs Spark jobs")
-    val seirWrite = executedNodes(1) {
-      status.write.mode("overwrite").parquet(s"$out/seir_status")
-    }
     val blocks = vertices.selectExpr("CAST(node_id AS LONG) AS nodeId",
       "attrs['block'] AS block")
-    val infectedWrite = executedNodes(1) {
-      graft.sim.Seir.infectedPerBlock(status, blocks)
-        .write.mode("overwrite").parquet(s"$out/infected_per_block")
+    var graphmlJobs = -1
+    var seirWrite, infectedWrite: Seq[Seq[String]] = Nil
+    val writeJobs = jobsOf {
+      matrix.coalesce(1).write.mode("overwrite").parquet(s"$out/contact_matrix")
+      graphmlJobs = jobsOf {
+        graft.sources.GraphML.write(vertices, edges, s"$out/network.graphml")
+      }
+      seirWrite = plansOf {
+        status.write.mode("overwrite").parquet(s"$out/seir_status")
+      }.map(nodeNames)
+      infectedWrite = plansOf {
+        graft.sim.Seir.infectedPerBlock(status, blocks)
+          .write.mode("overwrite").parquet(s"$out/infected_per_block")
+      }.map(nodeNames)
     }
+    assert(graphmlJobs == 0, s"the network must be local relations: $graphmlJobs Spark jobs")
+    info(s"the four writes: $writeJobs Spark jobs")
+    assert(writeJobs <= 3, s"the four writes started $writeJobs Spark jobs")
+    assert(seirWrite.nonEmpty && infectedWrite.nonEmpty)
     (seirWrite ++ infectedWrite).foreach { p =>
       assert(p.contains("LocalTableScan"), s"must read the collected statuses: $p")
       assert(!p.exists(Set("MapPartitions", "DeserializeToObject", "SerializeFromObject")),
