@@ -79,8 +79,6 @@ object GraftFunctions {
       es => GramBucketHistExpr(es(0), es(1))),
     ("pair_structs", "pair_structs(items) - all unordered (ia < ib) pairs of a long array",
       es => PairStructsExpr(es.head)),
-    ("pair_longs", "pair_longs(items) - unordered pairs packed (min << 32) | max; elements must fit u32",
-      es => PairLongsExpr(es.head)),
     ("posting_pairs", "posting_pairs(ps) - canonical co-posting pairs with tf product and both norms",
       es => PostingPairsExpr(es.head)),
     ("pair_structs_tagged", "pair_structs_tagged(members) - canonical pairs of an id-sorted struct array, tags carried",
@@ -216,25 +214,13 @@ object GraftFunctions {
         CappedCollectAgg(es(0), lim.asInstanceOf[Number].intValue())
           .toAggregateExpression()
       }),
-    ("pcy_sketch", "pcy_sketch(hash, bits) - saturating bucket-count sketch (PCY candidate pass)",
+    ("co_counts", "co_counts(ibs, minCount) - per group, the elements held by >= minCount of its arrays, with their counts, sorted",
       es => {
-        require(es(1).foldable, "pcy_sketch: bits must be a literal")
-        val bits = es(1).eval()
-        require(bits != null, "pcy_sketch: bits must be non-null")
-        PcySketchAgg(es(0), bits.asInstanceOf[Number].intValue())
+        require(es(1).foldable, "co_counts: minCount must be a literal")
+        val m = es(1).eval()
+        require(m != null, "co_counts: minCount must be non-null")
+        CoCountsAgg(es(0), m.asInstanceOf[Number].intValue())
           .toAggregateExpression()
-      }),
-    ("pcy_prune", "pcy_prune(hash, sketch, min) - bucket upper bound reaches min",
-      es => {
-        require(es(2).foldable, "pcy_prune: min must be a literal")
-        val min = es(2).eval()
-        require(min != null, "pcy_prune: min must be non-null")
-        val m = min.asInstanceOf[Number].intValue()
-        if (es(1).foldable) {
-          val sk = es(1).eval()
-          require(sk != null, "pcy_prune: sketch must be non-null")
-          PcyPruneExpr(es(0), sk.asInstanceOf[Array[Byte]], m)
-        } else PcyPruneSubqueryExpr(es(0), es(1), m)
       }),
     ("bloom_might_contain", "bloom_might_contain(key, bloom) - probe a build-time bloom filter",
       es => {

@@ -7,48 +7,6 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
 
 object PairHelpers {
-  /** All unordered pairs of a long array PACKED into single 8-byte
-    * keys: (lo << 32) | hi. Callers must prove every element fits an
-    * unsigned 32-bit value first (the Recommend chooser does, from
-    * parquet footer min/max) — the pack is then a bijection, so
-    * grouping on the packed key is grouping on the pair. Out-of-range
-    * input is a caller contract violation and fails loudly rather
-    * than silently merging distinct pairs.
-    */
-  def pairLongs(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Long])
-    if (n > 46340) throw new IllegalArgumentException(
-      s"pair_longs: input set of $n elements would emit ~${n.toLong * (n - 1) / 2} " +
-        "pairs — cap the group (min_k_distinct) before pairing")
-    val out = new java.util.ArrayList[Any](n * (n - 1) / 2)
-    var i = 0
-    while (i < n - 1) {
-      if (!arr.isNullAt(i)) {
-        val a = arr.getLong(i)
-        if (a < 0L || a > 0xFFFFFFFFL) throw new IllegalStateException(
-          s"pair_longs: element $a exceeds unsigned 32 bits — the caller's " +
-            "packability chooser must route this data to pair_structs")
-        var j = i + 1
-        while (j < n) {
-          if (!arr.isNullAt(j)) {
-            val b = arr.getLong(j)
-            if (b < 0L || b > 0xFFFFFFFFL) throw new IllegalStateException(
-              s"pair_longs: element $b exceeds unsigned 32 bits — the caller's " +
-                "packability chooser must route this data to pair_structs")
-            if (a != b) {
-              out.add(java.lang.Long.valueOf(
-                (math.min(a, b) << 32) | math.max(a, b)))
-            }
-          }
-          j += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-
   /** All unordered pairs of a long array as (lo, hi) structs; equal
     * values are skipped (callers pass collect_set outputs, so
     * duplicates don't occur in practice).
@@ -165,34 +123,6 @@ case class PairStructsTaggedExpr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, a => s"graft.functions.PairTaggedHelpers.pairStructsTagged($a)")
   override def prettyName: String = "pair_structs_tagged"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `pair_longs(items)` → array<bigint>: every unordered pair of the
-  * input's long elements packed canonically as (min << 32) | max —
-  * the shuffle-payload-narrowing twin of [[PairStructsExpr]] (guide
-  * §2.3: narrower types, only when provably safe). One packed long
-  * replaces the two-field struct through Generate, Exchange and the
-  * count aggregation: the pair row shrinks 24 → 16 UnsafeRow bytes
-  * and the aggregation keys on a single long. Callers unpack with
-  * `shiftrightunsigned(pk, 32)` / `pk & 0xFFFFFFFF` AFTER the
-  * thresholded aggregate (match-bounded rows). PRECONDITION: every
-  * element in [0, 2^32) — proven by the caller's chooser, enforced
-  * loudly here.
-  */
-case class PairLongsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pair_longs expects ARRAY<BIGINT>, got ${t.sql}")
-  }
-  override def nullSafeEval(a: Any): Any =
-    PairHelpers.pairLongs(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.PairHelpers.pairLongs($a)")
-  override def prettyName: String = "pair_longs"
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

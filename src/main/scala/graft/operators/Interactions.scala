@@ -149,7 +149,7 @@ object Interactions {
     // pair_structs emits exactly n(n-1)/2 canonical pairs per group in
     // one codegen'd kernel — the double-explode + a<b idiom flowed
     // n(n-1) rows through two Generates and discarded half (the
-    // Recommend.pairCounts measurement; up to ~0.5M wasted rows per
+    // item-item CF pair counts measurement; up to ~0.5M wasted rows per
     // capped group)
     groupedSets(spark, dir, guardMetric)
       .select(explode(call_function("pair_structs", col("caids"))).as("p"))

@@ -12,16 +12,14 @@ import graft.{Op, Tables}
   *
   * Scale shapes: both co-occurrence ops BLOCK on the grouping entity
   * (order / customer) — never all-pairs over items — via ONE
-  * collect_set shuffle + in-group pair explode (the interaction_pairs
-  * discipline); a PCY candidate pass can prune the pair exchange for
-  * network-bound deployments (opt-in — see pairCounts and BENCH.md's
-  * r8 A/B). Fan-out is bounded by basket
-  * size (≤ C(13,2)
-  * pairs per order here, physically bounded by order volume
-  * everywhere); per-user histories are quadratic, so users above the
-  * history cap are cut BEFORE pairing — a free size() filter on the
-  * collected set, the DIMSUM/production-CF hardening that keeps one
-  * hot user from emitting 10⁸ pairs.
+  * collect_set shuffle, then count pairs per anchor item
+  * ([[pairCounts]]: one item-keyed exchange, no pair rows). Fan-out is
+  * bounded by basket size (≤ 13 items per order here, physically
+  * bounded by order volume everywhere); per-user histories are
+  * quadratic in pairs, so users above the history cap are cut BEFORE
+  * counting — a free size() filter on the collected set, the
+  * DIMSUM/production-CF hardening that keeps one hot user from adding
+  * 10⁸ pair counts.
   * The item-count enrichments are item-cardinality relations — no
   * static broadcast hint on them (VERDICT r3's homes lesson: item/device
   * cardinality explodes at 100 TB), so AQE picks by MEASURED size:
@@ -30,201 +28,39 @@ import graft.{Op, Tables}
   */
 object Recommend {
 
-  /** Exact thresholded pair counts over per-entity item sets: the
-    * in-group explode emits each a<b pair once (`pair_structs`, one
-    * codegen'd kernel), shuffled on (ia, ib) into the exact count.
+  /** Exact thresholded co-occurrence counts over per-entity item sets
+    * (`items`: id-sorted and distinct, as min_k_distinct emits them):
+    * (ia, ib, co) for every pair ia < ib held by co ≥ minCount sets.
     *
-    * `usePcy = true` adds the PCY candidate pass
-    * (functions/PcyExpressions.scala) pruning the pair exchange: a
-    * map-side bucket sketch (one row, 2^bits saturating byte counters)
-    * upper-bounds every pair's count, and only pairs whose bucket
-    * reaches `minCount` are shuffled into the exact groupBy — the
-    * survivors' counts are exact, and no qualifying pair can be
-    * dropped (collisions only over-count). The sketch is collected
-    * once and probed through a constant-reference codegen'd predicate
-    * (NOT passed as a column: UnsafeRow.getBinary would re-copy the
-    * whole array per probed row — measured as a multi-minute stall).
-    * At sf0.1 this cuts the CF pair shuffle from ~10.4M rows to ~400k.
-    *
-    * DEFAULT IS DIRECT (r8 A/B + structural analysis, BENCH.md): PCY
-    * lost at every local scale and sizing tried, and the loss is
-    * structural, not environmental. To prune at pair volume P the
-    * sketch needs ~P/1.5 buckets; the buckets are a PER-TASK partial
-    * buffer, so the sketch's own merge traffic is tasks × 2^bits ≈
-    * tasks × P/1.5 bytes — more than the 16-byte/pair shuffle it
-    * replaces whenever tasks > ~24. Undersized, it saturates
-    * (λ ≫ 1 ⇒ nothing pruned, measured at 10×: the r7-sized 2²³
-    * sketch passed 100% of 104M pairs); sized up, the partial
-    * allocation alone (cores × 2^bits) OOMs before the traffic wall.
-    * PCY is a single-shared-hash-table trick: the opt-in
-    * (explicit `usePcy` param ONLY — r8 advice: an environment-read
-    * default let an inherited variable silently flip the contracted
-    * plan shape under tests and bench) serves the single-node/
-    * moderate-volume regime where that table exists — which a test
-    * fixture is and a 1000-executor shuffle is not.
+    * Counted per ANCHOR item, the "stripes" form of pair counting: a
+    * set emits one row per item that has a larger partner, (ia, ibs)
+    * with ibs the suffix of the set after ia; one exchange on ia brings
+    * an anchor's rows together, and `co_counts` (CoCountsAgg) counts
+    * its partners in one open-addressing map and keeps those reaching
+    * minCount. A set of n items moves n − 1 rows, not n(n − 1)/2 pair
+    * rows, and no per-pair row exists before the threshold. At sf0.01
+    * the CF histories hold ~1.03M pair occurrences of ~808k distinct
+    * pairs: pairs are near-unique, so a map-side partial count could
+    * remove at most ~22% of the pair rows, while counting per anchor
+    * builds none. The count buffer is bounded by one anchor's distinct
+    * partners, at most the item catalogue. Ids are full-width longs.
     */
-  /** Packability chooser for [[pairCounts]]' 8-byte packed pair keys:
-    * true iff every l_partkey fits an unsigned 32-bit value, proven by
-    * MIN/MAX over the one key column (r11, guide §2.3 — narrower types
-    * only when provably safe). The bound comes from parquet FOOTER
-    * statistics read driver-side — metadata cost, no Spark job — for
-    * tables of up to 64 files; a wider table (the 100 TB layout) pays
-    * one distributed narrow-column MIN/MAX job instead (~2% of a query
-    * whose pair volume is ~17× the row count; a driver-side loop over
-    * thousands of footers would be the §5 single-threaded-driver
-    * trap). Any anomaly — missing stats, a null page, an unreadable
-    * footer — falls back to the distributed proof, and the packed
-    * kernel itself still validates every element, so a wrong chooser
-    * answer can fail loudly but never corrupt a pair. Item ids outgrow
-    * u32 only past SF ≈ 21 000 (TPC-H partkey = 200 000·SF); past that
-    * the chooser routes to the unpacked struct spelling.
-    */
-  private[graft] def itemIdsPackU32(spark: SparkSession, dir: String): Boolean =
-    footerLongBounds(spark, s"$dir/lineitem.parquet", "l_partkey") match {
-      case Some((mn, mx)) => mn >= 0L && mx <= 0xFFFFFFFFL
-      case None =>
-        val r = Tables.lineitem(spark, dir)
-          .agg(min(col("l_partkey")), max(col("l_partkey"))).head()
-        !r.isNullAt(0) && r.getLong(0) >= 0L && r.getLong(1) <= 0xFFFFFFFFL
-    }
-
-  /** (min, max) of a BIGINT column from parquet footer statistics,
-    * driver-side; None when the table is too wide for a driver loop
-    * (> 64 files) or any row group lacks trustworthy stats — callers
-    * then prove the bound with a distributed aggregation instead.
-    */
-  private def footerLongBounds(spark: SparkSession, path: String,
-      column: String): Option[(Long, Long)] = try {
-    val conf = spark.sessionState.newHadoopConf()
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(conf)
-    val st = fs.getFileStatus(p)
-    val files =
-      if (st.isDirectory)
-        fs.listStatus(p).filter(f => f.isFile &&
-          f.getPath.getName.endsWith(".parquet"))
-      else Array(st)
-    if (files.isEmpty || files.length > 64) return None
-    import scala.jdk.CollectionConverters._
-    var mn = Long.MaxValue
-    var mx = Long.MinValue
-    var seen = false
-    var trusted = true
-    files.foreach { f =>
-      if (trusted) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f.getPath, conf)
-        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          for (b <- reader.getFooter.getBlocks.asScala if trusted;
-               c <- b.getColumns.asScala
-               if trusted && c.getPath.toDotString == column) {
-            val s = c.getStatistics
-            if (s == null || s.isEmpty) trusted = false
-            else if (s.hasNonNullValue) {
-              (s.genericGetMin, s.genericGetMax) match {
-                case (lo: java.lang.Long, hi: java.lang.Long) =>
-                  mn = math.min(mn, lo.longValue)
-                  mx = math.max(mx, hi.longValue)
-                  seen = true
-                case _ => trusted = false
-              }
-            }
-          }
-        } finally reader.close()
-      }
-    }
-    if (trusted && seen) Some((mn, mx)) else None
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  private[graft] def pairCounts(
-      sets0: DataFrame, minCount: Int, bits: Int = 23,
-      usePcy: Boolean = false, packU32: Boolean = false)
-      : DataFrame = {
-    require(minCount >= 1 && minCount <= Byte.MaxValue,
-      s"pairCounts: minCount must fit the sketch's byte counters, got $minCount")
-    // PCY can pay only when the threshold prunes: a count-1 pair
-    // survives a t=2 prune whenever its bucket takes ONE more hit
-    // (1-e^-λ — no real selectivity at any sizing); t≥3 is where the
-    // tail P(Poisson(λ) ≥ t-1) collapses, so t<3 is always direct.
-    if (packU32 && !usePcy) {
-      // r11 (guide §2.3, VERDICT r10 #1): when the caller's chooser
-      // proves every item id < 2^32, the pair rides ONE packed long —
-      // (min << 32) | max — through Generate, the exchange and the
-      // count aggregate: 24 → 16 UnsafeRow bytes per pair row and a
-      // single-long aggregation key instead of a two-field row. The
-      // match-bounded survivors unpack after the threshold.
-      return sets0
-        .select(explode(call_function("pair_longs", col("items"))).as("pk"))
-        .repartition(col("pk"))
-        .groupBy(col("pk"))
-        .agg(count(lit(1)).as("co"))
-        .where(col("co") >= minCount)
-        .select(shiftrightunsigned(col("pk"), 32).as("ia"),
-          col("pk").bitwiseAND(lit(0xFFFFFFFFL)).as("ib"), col("co"))
-    }
-    if (minCount < 3 || !usePcy) {
-      // NOT a groupBy-planned exchange: the explicit raw repartition
-      // beats map-side partial agg here (r8 A/B "direct-v2") — pairs
-      // are near-unique within a task, so the partial hash build
-      // reduces little and costs ~30% at 10× scale.
-      val pairs = sets0
-        .select(explode(call_function("pair_structs", col("items"))).as("p"))
-        .select(col("p.ia").as("ia"), col("p.ib").as("ib"))
-      return pairs
-        .repartition(col("ia"), col("ib"))
-        .groupBy(col("ia"), col("ib"))
-        .agg(count(lit(1)).as("co"))
-        .where(col("co") >= minCount)
-    }
-    // The sketch is a SCALAR SUBQUERY, so the whole prune is one
-    // declarative query: the subquery runs once per execution (its
-    // 2^bits-byte result — 8 MB at the default — enters the probe as a
-    // plan literal, the bounded-collect discipline of the k-means
-    // centroids), and physical planning's exchange reuse lets the
-    // subquery and the main pair explode share the sets exchange. No
-    // checkpoint, no extra action, still fully lazy.
-    // The pair hash is PROJECTED below the sketch aggregate, not
-    // nested inside it: a TypedImperativeAggregate evaluates its child
-    // interpreted per input row, so xxhash64 must run in the codegen'd
-    // projection underneath — the aggregate's update then only reads a
-    // long field (measured ~1 s/10M rows difference at sf0.1).
-    // pair_structs emits exactly n(n-1)/2 canonical pairs per set in
-    // one codegen'd kernel — the double-explode idiom it replaces
-    // flowed n² rows and filtered half (measured ~2x the generate
-    // volume on the CF pipeline).
-    // The explode stage's INPUT is small (one row per entity) but its
-    // CPU is pair-volume (n(n-1)/2 per set): AQE coalesces the sets
-    // exchange by BYTES, so the heaviest stage of the query ran on
-    // 3-5 of 32 cores (r7 profile: 0.5 s stages at task count 3). The
-    // round-robin respread is an exchange of the SMALL relation that
-    // buys full parallelism for the big CPU; both the sketch subquery
-    // and the main probe hang off the one respread exchange
-    // (ReusedExchange).
-    val spread = sets0.repartition(
-      sets0.sparkSession.sparkContext.defaultParallelism)
-    def pairs = spread
-      .select(explode(call_function("pair_structs", col("items"))).as("p"))
-      .select(col("p.ia").as("ia"), col("p.ib").as("ib"),
-        xxhash64(col("p.ia"), col("p.ib")).as("pk"))
-    val sketch = pairs
-      .select(call_function("pcy_sketch", col("pk"), lit(bits)).as("sk")).scalar()
-    pairs.where(call_function("pcy_prune", col("pk"), sketch, lit(minCount)))
-      .drop("pk")
-      // survivors are few and near-unique: shuffle raw, aggregate once
-      // post-shuffle (a pre-shuffle partial agg reduces nothing here)
-      .repartition(col("ia"), col("ib"))
-      .groupBy(col("ia"), col("ib"))
-      .agg(count(lit(1)).as("co"))
-      .where(col("co") >= minCount)
-  }
+  private[graft] def pairCounts(sets: DataFrame, minCount: Int): DataFrame =
+    sets.select(posexplode(col("items")).as(Seq("pos", "ia")), col("items"))
+      .where(col("ia").isNotNull && col("pos") < size(col("items")) - 1)
+      .select(col("ia"),
+        slice(col("items"), col("pos") + 2, size(col("items"))).as("ibs"))
+      .repartition(col("ia"))
+      .groupBy(col("ia"))
+      .agg(call_function("co_counts", col("ibs"), lit(minCount)).as("cs"))
+      .select(col("ia"), explode(col("cs")).as("c"))
+      .select(col("ia"), col("c.ib").as("ib"), col("c.co").as("co"))
 
   /** Per-order distinct item sets: ONE shuffle on the grouping entity
     * (collect_set dedups during partial aggregation), from which the
-    * item counts, the order count, and the in-group pair explode all
-    * hang — every consumer reads the same exchange (ReusedExchange),
-    * and pairs expand MAP-side with partial aggregation before the
-    * (a, b) shuffle. The self-join formulation this replaces shuffled
+    * item counts, the order count, and the pair counts all
+    * hang — every consumer reads the same exchange (ReusedExchange).
+    * The self-join formulation this replaces shuffled
     * the basket relation twice and materialized every pair row through
     * a join (measured 1.21 s → this shape 3-4× less exchange volume).
     */
@@ -236,8 +72,8 @@ object Recommend {
       // basket is physically small (≤13 items here), so the 1024 cap
       // is unreachable on sane data — it exists so a degenerate
       // "basket" (bot/aggregator order with 10⁵ distinct items) can
-      // neither build an unbounded aggregation buffer nor explode n²
-      // pairs; such orders are dropped whole (they are not baskets)
+      // neither build an unbounded aggregation buffer nor add n²
+      // pair counts; such orders are dropped whole (they are not baskets)
       .agg(call_function("min_k_distinct", col("item"), lit(1025))
         .as("items"))
       .where(size(col("items")) <= 1024)
@@ -252,13 +88,10 @@ object Recommend {
     val itemCnt = sets.select(explode(col("items")).as("item"))
       .groupBy(col("item")).agg(count(lit(1)).as("cnt"))
     val nOrders = sets.agg(count(lit(1)).as("n"))
-    // Generate each unordered pair ONCE (a<b), mirror after the count:
-    // co-occurrence is symmetric, so this halves both the generated
-    // rows and the pair shuffle, and the mirror runs over the tiny
-    // thresholded result. minCount=2 always takes pairCounts' direct
-    // path — a t=2 prune has no selectivity (see pairCounts).
-    val half = Recommend.pairCounts(sets, minCount = 2,
-        packU32 = itemIdsPackU32(spark, dir))
+    // Count each unordered pair ONCE (a<b), mirror after the count:
+    // co-occurrence is symmetric, so the mirror runs over the small
+    // thresholded result.
+    val half = pairCounts(sets, minCount = 2)
       .withColumnRenamed("co", "pair_cnt")
     val co = half.select(col("ia").as("ante"), col("ib").as("cons"),
         col("pair_cnt"))
@@ -306,25 +139,15 @@ object Recommend {
     * rounded 1e-9, RANKED ON THE ROUNDED VALUE so both engines break
     * ties identically.
     */
-  def itemItemCosine(spark: SparkSession, dir: String): DataFrame =
-    itemItemCosine(spark, dir, usePcy = false)
-
-  /** `usePcy` opts into the PCY sketch pass for network-bound
-    * deployments (see BENCH.md's PCY A/B table for the measured
-    * trade; default direct). Opt-in is by THIS parameter only —
-    * never an environment variable — so the registered query's
-    * contracted plan shape cannot flip under an inherited env.
-    */
-  def itemItemCosine(spark: SparkSession, dir: String,
-      usePcy: Boolean): DataFrame = {
+  def itemItemCosine(spark: SparkSession, dir: String): DataFrame = {
     // One shuffle on u; min_k_distinct dedups (u, i) during partial
     // agg IN an O(61) buffer — the 61st smallest item only proves the
     // history exceeds 60, so the size() gate below is the same
     // keep/drop decision as collect_set + filter, but a bot "user"
     // with 10⁶ distinct items can't build an unbounded buffer first.
-    // Pairs explode in-group — same single-exchange discipline as
-    // basketSets above (the join formulation measured 2.55 s; this
-    // deletes two of its three pre-pair exchanges).
+    // Pairs are counted from these sets — same single-exchange
+    // discipline as basketSets above (the join formulation measured
+    // 2.55 s; this deletes two of its three pre-pair exchanges).
     val sets = Tables.orders(spark, dir)
       .join(Tables.lineitem(spark, dir),
         col("o_orderkey") === col("l_orderkey"))
@@ -334,8 +157,7 @@ object Recommend {
       .where(size(col("items")) <= 60)
     val itemCnt = sets.select(explode(col("items")).as("i"))
       .groupBy(col("i")).agg(count(lit(1)).as("cnt"))
-    val co = Recommend.pairCounts(sets, minCount = 4, usePcy = usePcy,
-        packU32 = !usePcy && itemIdsPackU32(spark, dir))
+    val co = pairCounts(sets, minCount = 4)
       .select(col("ia").as("item_a"), col("ib").as("item_b"), col("co"))
     val scored = co
       .join(itemCnt.withColumnRenamed("i", "item_a")

@@ -4,8 +4,9 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.Attribute
 import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
+import org.apache.spark.sql.execution.aggregate.ObjectHashAggregateExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Interactions
 
@@ -393,44 +394,67 @@ class PlanContractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       "exactly two corpus exchanges: gram postings + doc-pair agg:\n" + p.take(2000))
   }
 
-  test("item_item_cosine (default): direct pair exchange, single explode, no sketch pass") {
-    // r8 A/B (BENCH.md): the PCY sketch pass re-runs the pair explode
-    // — the dominant CPU — and measured 0-45% slower at every local
-    // scale in BOTH prune-selectivity regimes, so the DEFAULT plan is
-    // the direct exchange. A second sketch pass appearing here means
-    // the default regressed to opt-in-PCY.
-    val tree = finalTree("item_item_cosine", sf01)
-    val p = finalText(tree)
-    assert(!p.contains("pcy_prune") && !p.contains("pcy_sketch"),
-      "default must be the direct path — PCY is opt-in:\n" + p.take(2000))
-    assert(count(p, "Generate explode") == 2,
-      "ONE pair explode + the itemCnt explode — a 3rd means a " +
-        "duplicated pair pass:\n" + p.take(2000))
-    // exactly one pair exchange, keyed by the route the u32 chooser took
-    val keys = hashExchangeKeys(tree)
-    val (pairKey, otherKey) =
-      if (operators.Recommend.itemIdsPackU32(spark, sf01))
-        (Seq("pk"), Seq("ia", "ib")) // both ids < 2^32: one packed long
-      else
-        (Seq("ia", "ib"), Seq("pk")) // unpacked: the (ia, ib) pair
-    assert(keys.count(_ == pairKey) == 1 && !keys.contains(otherKey),
-      s"exactly one pair exchange on ${pairKey.mkString(", ")}: $keys\n" + p.take(2000))
+  /** The exchanges nearest below `p`: those reached without passing
+    * another exchange (through AQE stages and reused exchanges).
+    */
+  private def nearestExchanges(p: SparkPlan): Seq[Exchange] = {
+    val below = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children
+    }
+    below.flatMap {
+      case e: Exchange => Seq(e)
+      case c => nearestExchanges(c)
+    }
   }
 
-  test("item_item_cosine (usePcy): prune sits below the pair exchange") {
-    val df = operators.Recommend
-      .itemItemCosine(spark, "/root/testdata/sf0.01", usePcy = true)
-    df.collect()
-    val p = df.queryExecution.executedPlan.toString
-      .split("== Initial Plan ==")(0)
-    val pruneIdx = p.indexOf("pcy_prune")
-    assert(pruneIdx >= 0, "the PCY candidate filter must be in the executed plan")
-    // the prune must run MAP-side of the pair repartition: the filter
-    // appears below (after, in toString order) the exchange that
-    // carries (ia, ib) — a prune above it would shuffle everything
-    val pairExchange = p.indexOf("Exchange hashpartitioning(ia")
-    assert(pairExchange >= 0 && pruneIdx > pairExchange,
-      "prune must be below the pair exchange (map-side):\n" + p.take(2000))
+  private def hashKeys(e: Exchange): Seq[String] = e.outputPartitioning match {
+    case h: HashPartitioning =>
+      h.expressions.map { case a: Attribute => a.name; case x => x.sql }
+    case other => Seq(other.toString)
+  }
+
+  /** Anchor-keyed pair counting, node for node: every `co_counts`
+    * aggregate reads exactly one exchange, hash-keyed on `ia`, and that
+    * exchange reads exactly one, the per-entity sets exchange on
+    * `setKey`. No exchange carries a pair key (`pk` or (ia, ib)) and no
+    * Generate runs a pair kernel: pair rows never exist.
+    */
+  private def assertAnchorKeyedCounts(name: String, setKey: String): Unit = {
+    val tree = finalTree(name, sf01)
+    val p = finalText(tree)
+    val coAggs = collect(tree) {
+      case a: ObjectHashAggregateExec
+          if a.aggregateExpressions.exists(_.aggregateFunction.prettyName == "co_counts") => a
+    }
+    assert(coAggs.nonEmpty, "a co_counts aggregate node:\n" + p.take(3000))
+    coAggs.foreach { a =>
+      val anchor = nearestExchanges(a)
+      assert(anchor.size == 1 && anchor.head.isInstanceOf[ShuffleExchangeExec] &&
+        hashKeys(anchor.head) == Seq("ia"),
+        s"co_counts reads one hash exchange on ia: ${anchor.map(hashKeys)}\n" + p.take(3000))
+      val sets = nearestExchanges(anchor.head)
+      assert(sets.size == 1 && hashKeys(sets.head) == Seq(setKey),
+        s"the ia exchange reads the $setKey-keyed sets exchange: ${sets.map(hashKeys)}\n" +
+          p.take(3000))
+    }
+    val keys = hashExchangeKeys(tree)
+    assert(!keys.contains(Seq("pk")) && !keys.contains(Seq("ia", "ib")),
+      s"no exchange on a pair key: $keys\n" + p.take(3000))
+    val pairKernels = Seq("pair_structs", "pair_longs", "posting_pairs")
+    val generators = collect(tree) { case g: GenerateExec => g.generator.toString }
+    assert(!generators.exists(g => pairKernels.exists(g.contains)),
+      s"no Generate over a pair kernel: $generators")
+  }
+
+  test("item_item_cosine: one ia exchange feeds co_counts, no pair rows") {
+    assertAnchorKeyedCounts("item_item_cosine", "u")
+  }
+
+  test("market_basket: one ia exchange feeds co_counts, no pair rows") {
+    assertAnchorKeyedCounts("market_basket", "okey")
   }
 
   test("grouped_topk_agg: bounded-heap agg — no window, no sort of the input") {
