@@ -111,10 +111,14 @@ case class CoCountsAgg(
     b
   }
 
-  override def merge(b: LongCounts, other: LongCounts): LongCounts = {
-    other.foreach((k, c) => b.add(k, c))
-    b
-  }
+  // `other` is always a freshly deserialized partial, so an empty
+  // buffer can take it over instead of copying it entry by entry
+  override def merge(b: LongCounts, other: LongCounts): LongCounts =
+    if (b.size == 0) other
+    else {
+      other.foreach((k, c) => b.add(k, c))
+      b
+    }
 
   override def eval(b: LongCounts): Any = {
     var n = 0

@@ -81,8 +81,8 @@ object GraftFunctions {
       es => PairStructsExpr(es.head)),
     ("posting_pairs", "posting_pairs(ps) - canonical co-posting pairs with tf product and both norms",
       es => PostingPairsExpr(es.head)),
-    ("pair_structs_tagged", "pair_structs_tagged(members) - canonical pairs of an id-sorted struct array, tags carried",
-      es => PairStructsTaggedExpr(es.head)),
+    ("tagged_stripes", "tagged_stripes(members) - per member and partner tag of an id-sorted struct array, the larger partners' ids",
+      es => TaggedStripesExpr(es.head)),
     ("min_k_distinct_tagged", "min_k_distinct_tagged(key, tag, k) - k smallest distinct keys with their tags; O(k) buffer",
       es => {
         require(es(2).foldable, "min_k_distinct_tagged: k must be a literal")

@@ -1,10 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 
 object PairHelpers {
   /** All unordered pairs of a long array as (lo, hi) structs; equal
@@ -48,50 +49,87 @@ object PairHelpers {
   }
 }
 
-/** `pair_structs(items)` → array<struct(ia, ib)>: every unordered
-  * pair of the input's long elements, canonically ordered (ia < ib).
-  *
-  * Versus the double-explode idiom (`explode(items)` × 2 + `ia < ib`
-  * filter) this emits exactly n(n-1)/2 rows instead of flowing n² rows
-  * and filtering half, and the subsequent `explode` of the struct
-  * array stays inside codegen (a custom Generator would push the whole
-  * Generate operator to CodegenFallback). The materialized pair array
-  * is bounded because every caller caps its group size FIRST (60-item
-  * CF histories, basket sizes, df-capped postings) — do not feed this
-  * an uncapped set.
-  */
-object PairTaggedHelpers {
-  /** All unordered pairs of an array<struct<id, tag>> (sorted by id,
-    * as [[MinKDistinctTaggedAgg]] emits) as canonical
-    * (ia < ib, ta, tb) structs — the home-labeled twin of
-    * [[PairHelpers.pairStructs]] for pre-enriched co-location groups.
+object TaggedStripeHelpers {
+  /** The anchor-keyed ("stripes") form of an id-sorted
+    * array<struct<id, tag>> (as [[MinKDistinctTaggedAgg]] emits): for
+    * each member a and each tag hb among its larger partners, one
+    * (a, ha, hb, ibs) struct with ibs the ids of those partners tagged
+    * hb, ascending. Stripes come per anchor in the order their tags
+    * first appear among its partners. Members with a null id or tag are
+    * skipped, as the tagged aggregate skips them.
     */
-  def pairStructsTagged(arr: ArrayData): ArrayData = {
+  def taggedStripes(arr: ArrayData): ArrayData = {
     val n = arr.numElements()
     if (n < 2) return new GenericArrayData(Array.empty[Any])
+    // the stripes of a group hold all n(n-1)/2 of its pairs
     if (n > 46340) throw new IllegalArgumentException(
-      s"pair_structs_tagged: input set of $n elements would emit " +
+      s"tagged_stripes: input set of $n elements would hold " +
         s"~${n.toLong * (n - 1) / 2} pairs — cap the group first")
-    val out = new java.util.ArrayList[Any](n * (n - 1) / 2)
+    val ids = new Array[Long](n)
+    // dense tag ids, so partners are bucketed without comparing strings
+    val tagIds = new Array[Int](n)
+    val tags = new Array[UTF8String](n)
+    val tagIndex = new java.util.HashMap[UTF8String, Integer]()
+    var m = 0
     var i = 0
-    while (i < n - 1) {
+    while (i < n) {
       if (!arr.isNullAt(i)) {
-        val ri = arr.getStruct(i, 2)
-        val a = ri.getLong(0)
-        val ta = ri.getUTF8String(1)
-        var j = i + 1
-        while (j < n) {
-          if (!arr.isNullAt(j)) {
-            val rj = arr.getStruct(j, 2)
-            val b = rj.getLong(0)
-            if (a != b) {
-              // input sorted ascending by id => (a, b) already canonical
-              out.add(new GenericInternalRow(
-                Array[Any](a, b, ta, rj.getUTF8String(1))))
-            }
+        val r = arr.getStruct(i, 2)
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
+          val tag = r.getUTF8String(1)
+          var t = tagIndex.get(tag)
+          if (t == null) {
+            t = tagIndex.size()
+            tagIndex.put(tag, t)
+            tags(t) = tag
           }
-          j += 1
+          ids(m) = r.getLong(0)
+          tagIds(m) = t
+          m += 1
         }
+      }
+      i += 1
+    }
+    val counts = new Array[Int](tagIndex.size())
+    val order = new Array[Int](tagIndex.size())
+    val buckets = new Array[Array[Long]](counts.length)
+    val out = new java.util.ArrayList[Any]()
+    i = 0
+    while (i < m - 1) {
+      val a = ids(i)
+      var k = 0
+      var j = i + 1
+      while (j < m) {
+        if (ids(j) != a) {
+          val t = tagIds(j)
+          if (counts(t) == 0) { order(k) = t; k += 1 }
+          counts(t) += 1
+        }
+        j += 1
+      }
+      var o = 0
+      while (o < k) {
+        val t = order(o)
+        buckets(t) = new Array[Long](counts(t))
+        counts(t) = 0
+        o += 1
+      }
+      j = i + 1
+      while (j < m) {
+        if (ids(j) != a) {
+          val t = tagIds(j)
+          buckets(t)(counts(t)) = ids(j)
+          counts(t) += 1
+        }
+        j += 1
+      }
+      o = 0
+      while (o < k) {
+        val t = order(o)
+        out.add(new GenericInternalRow(Array[Any](a, tags(tagIds(i)), tags(t),
+          UnsafeArrayData.fromPrimitiveArray(buckets(t)))))
+        counts(t) = 0
+        o += 1
       }
       i += 1
     }
@@ -99,30 +137,33 @@ object PairTaggedHelpers {
   }
 }
 
-/** `pair_structs_tagged(members)` → array<struct(ia, ib, ta, tb)>:
-  * every canonical pair of an id-sorted array<struct<id, tag>> with
-  * both members' tags carried through — pairs emerge already labeled,
-  * so no downstream join is needed to attach per-member attributes.
-  * Same capped-group contract as [[PairStructsExpr]].
+/** `tagged_stripes(members)` → array<struct(a, ha, hb, ibs)>: the
+  * anchor-keyed form of the canonical pairs of an id-sorted
+  * array<struct<id, tag>>: one struct per member a and per tag hb of its
+  * larger partners, carrying those partners' ids. Counting distinct
+  * partners per (a, hb) after an exchange on a counts distinct pairs
+  * per (ha, hb) without building a pair row. Same capped-group contract
+  * as [[PairStructsExpr]].
   */
-case class PairStructsTaggedExpr(child: Expression) extends UnaryExpression {
+case class TaggedStripesExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("ia", LongType, nullable = false),
-    StructField("ib", LongType, nullable = false),
-    StructField("ta", StringType, nullable = false),
-    StructField("tb", StringType, nullable = false))), containsNull = false)
+    StructField("a", LongType, nullable = false),
+    StructField("ha", StringType, nullable = false),
+    StructField("hb", StringType, nullable = false),
+    StructField("ibs", ArrayType(LongType, containsNull = false), nullable = false))),
+    containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StructType(fs), _) if fs.length == 2 &&
       fs(0).dataType == LongType && fs(1).dataType == StringType =>
       TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"pair_structs_tagged expects ARRAY<STRUCT<BIGINT, STRING>>, got ${t.sql}")
+      s"tagged_stripes expects ARRAY<STRUCT<BIGINT, STRING>>, got ${t.sql}")
   }
   override def nullSafeEval(a: Any): Any =
-    PairTaggedHelpers.pairStructsTagged(a.asInstanceOf[ArrayData])
+    TaggedStripeHelpers.taggedStripes(a.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.PairTaggedHelpers.pairStructsTagged($a)")
-  override def prettyName: String = "pair_structs_tagged"
+    defineCodeGen(ctx, ev, a => s"graft.functions.TaggedStripeHelpers.taggedStripes($a)")
+  override def prettyName: String = "tagged_stripes"
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }
@@ -202,6 +243,18 @@ case class PostingPairsExpr(child: Expression) extends UnaryExpression {
     copy(child = c)
 }
 
+/** `pair_structs(items)` → array<struct(ia, ib)>: every unordered
+  * pair of the input's long elements, canonically ordered (ia < ib).
+  *
+  * Versus the double-explode idiom (`explode(items)` × 2 + `ia < ib`
+  * filter) this emits exactly n(n-1)/2 rows instead of flowing n² rows
+  * and filtering half, and the subsequent `explode` of the struct
+  * array stays inside codegen (a custom Generator would push the whole
+  * Generate operator to CodegenFallback). The materialized pair array
+  * is bounded because every caller caps its group size FIRST (60-item
+  * CF histories, basket sizes, df-capped postings) — do not feed this
+  * an uncapped set.
+  */
 case class PairStructsExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("ia", LongType, nullable = false),

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,9 +26,12 @@ import graft.{Op, Tables}
   * (a_caid, b_caid) shuffle key, so Catalyst reuses one exchange.
   *
   * The contact matrix (observed contacts, sizes, total vs observed) is
-  * no longer a lazy plan: [[contactCounts]] runs one device-keyed pass
-  * over events and collects |cells|²-bounded counts, and the matrix is
-  * assembled from them on the driver as a local relation. The lazy
+  * no longer a lazy plan: [[contactCounts]] reads the bucket origin
+  * from the events' parquet footers (one collect only when they lack
+  * `ts` statistics), runs one device-keyed pass over events that counts
+  * contacts per anchor device without building pair rows, and collects
+  * |cells|²-bounded counts; the matrix is assembled from them on the
+  * driver as a local relation. The lazy
   * fused `observedContacts` plan is gone; R13Spec still checks the
   * result against the two-join spelling in `InteractionsReference`.
   */
@@ -208,18 +211,84 @@ object Interactions {
     if (x == null || y == null) java.lang.Boolean.compare(y == null, x == null)
     else UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
 
-  /** The bucket origin `unix_micros(MIN(ts))` over events, one scalar
-    * collect (None when no event has a timestamp).
+  /** The bucket origin `unix_micros(MIN(ts))` over events: read from
+    * the parquet footers when they carry usable `ts` statistics (no
+    * Spark job), else one scalar collect. None when no event has a
+    * timestamp.
     */
-  private[graft] def originMicros(spark: SparkSession, dir: String): Option[Long] = {
-    val r = Tables.events(spark, dir).agg(unix_micros(min(col("ts")))).head()
-    if (r.isNullAt(0)) None else Some(r.getLong(0))
-  }
+  private[graft] def originMicros(spark: SparkSession, dir: String): Option[Long] =
+    footerOriginMicros(spark, dir).getOrElse {
+      val r = Tables.events(spark, dir).agg(unix_micros(min(col("ts")))).head()
+      if (r.isNullAt(0)) None else Some(r.getLong(0))
+    }
+
+  /** At most this many events files have their footers read on the
+    * driver; a wider table pays the one-job collect instead.
+    */
+  private val FooterFiles = 64
+
+  /** `originMicros` from the parquet footers of the events files,
+    * converted as [[Tables.events]] converts `ts`: a LongType `ts`
+    * (TIMESTAMP(NANOS) read as epoch nanos) is `div 1000`, a TIMESTAMP
+    * of MILLIS or MICROS is widened to micros. Some(None) when every
+    * row group's statistics show no non-null `ts` (or there is no row
+    * group). None, so the caller collects, when a file lacks `ts`
+    * statistics, `ts` is not INT64 (INT96) or another type, a minimum
+    * lies before 1900 (where Spark may rebase or reject legacy
+    * calendar values on read), there are more than [[FooterFiles]]
+    * files, or a footer cannot be read.
+    */
+  private[graft] def footerOriginMicros(spark: SparkSession,
+      dir: String): Option[Option[Long]] = try {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+    import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+    import scala.jdk.CollectionConverters._
+    val raw = Tables.load(spark, dir, "events")
+    val files = raw.inputFiles
+    val tsType = raw.schema("ts").dataType
+    // one row group's minimum `ts` in micros: None when unusable,
+    // Some(None) when the row group holds no non-null `ts`
+    def rowGroupMin(c: ColumnChunkMetaData): Option[Option[Long]] = {
+      val s = c.getStatistics
+      val t = c.getPrimitiveType
+      if (t.getPrimitiveTypeName != PrimitiveTypeName.INT64 || s == null || s.isEmpty) None
+      else if (!s.hasNonNullValue) Some(None)
+      else {
+        val v: Long = s.genericGetMin.asInstanceOf[java.lang.Long]
+        val unit = Option(t.getLogicalTypeAnnotation).collect {
+          case a: TimestampLogicalTypeAnnotation => a.getUnit
+        }
+        val us = (tsType, unit) match {
+          case (LongType, _) => Some(v / 1000)
+          case (TimestampType, Some(TimeUnit.MICROS)) => Some(v)
+          case (TimestampType, Some(TimeUnit.MILLIS)) =>
+            scala.util.Try(Math.multiplyExact(v, 1000L)).toOption
+          case _ => None
+        }
+        us.filter(u => tsType == LongType || u >= -2208988800000000L).map(Some(_))
+      }
+    }
+    if (files.length > FooterFiles) None
+    else {
+      val conf = spark.sessionState.newHadoopConf()
+      val mins = files.toSeq.flatMap { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf))
+        try reader.getFooter.getBlocks.asScala.toSeq.map(b =>
+          b.getColumns.asScala.find(_.getPath.toDotString == "ts").flatMap(rowGroupMin))
+        finally reader.close()
+      }
+      if (mins.contains(None)) None else Some(mins.flatten.flatten.minOption)
+    }
+  } catch { case scala.util.control.NonFatal(_) => None }
 
   /** The one pass over events behind [[contactCounts]], as one query
     * whose rows are a tagged union (part, k1, k2, n):
-    *  - part 0: C, `countDistinct(a_caid, b_caid)` per (k1 = a_home,
-    *    k2 = b_home) over the canonical pairs;
+    *  - part 0: C, the distinct canonical (a < b) device pairs per
+    *    (k1 = a_home, k2 = b_home);
     *  - part 1: distinct devices per home cell k1;
     *  - part 2: distinct devices per cell k1.
     *
@@ -230,9 +299,12 @@ object Interactions {
     * exchange, so the device-cardinality homes never shuffle and never
     * broadcast (VERDICT r3 #3). One (cell, tw) exchange then groups the
     * home-labeled presence rows (`min_k_distinct_tagged`, capped at
-    * [[GroupCap]]) and canonical pairs emerge labeled
-    * (`pair_structs_tagged`), so the pair relation never joins. The three parts count `caid` (null devices skipped,
-    * as `COUNT(DISTINCT)` skips them) in one final aggregation: at most
+    * [[GroupCap]]). No pair row is built: `tagged_stripes` turns each
+    * group into one row per device a and partner home hb holding a's
+    * larger partners of that home, and after one exchange on a,
+    * `co_counts` counts a's distinct partners per (a, ha, hb). The
+    * three parts are summed in one final aggregation (null devices
+    * count in no part, as `COUNT(DISTINCT)` skips them): at most
     * |cells|² + 2·|cells| rows.
     */
   private[graft] def contactCountsPass(spark: SparkSession, dir: String,
@@ -264,25 +336,34 @@ object Interactions {
       .withColumn("members",
         when(size(col("members")) <= lit(GroupCap), col("members"))
           .otherwise(slice(col("members"), 1, GroupCap)))
-    val pairs = members
-      .select(explode(call_function("pair_structs_tagged", col("members"))).as("p"))
-      .select(col("p.ta").as("k1"), col("p.tb").as("k2"), col("p.ia").as("caid"),
-        col("p.ib").as("b_caid"))
-      .distinct()
+    // C per anchor device: each group's stripes (a, ha, hb, ibs) carry
+    // a's larger partners of home hb, one exchange on a brings every
+    // stripe of a together, and co_counts counts a's distinct partners
+    // per hb, so a pair met in several groups counts once. A device has
+    // one home, so summing per (ha, hb) gives C exactly.
+    val stripes = members
+      .select(explode(call_function("tagged_stripes", col("members"))).as("s"))
+      .select(col("s.a").as("a"), col("s.ha").as("ha"), col("s.hb").as("hb"),
+        col("s.ibs").as("ibs"))
+      .repartition(col("a"))
+      .groupBy(col("a"), col("ha"), col("hb"))
+      .agg(size(call_function("co_counts", col("ibs"), lit(1))).cast("long").as("n"))
     val noKey = lit(null).cast("string").as("k2")
-    pairs.select(lit(0).as("part"), col("k1"), col("k2"), col("caid"))
-      .unionAll(homes.select(lit(1), col("home_cell"), noKey, col("caid")))
+    def device(present: Column): Column = when(present, 1L).otherwise(0L).as("n")
+    stripes.select(lit(0).as("part"), col("ha").as("k1"), col("hb").as("k2"), col("n"))
+      .unionAll(homes.select(lit(1), col("home_cell"), noKey, device(col("caid").isNotNull)))
       // n > 0 always holds; reading n keeps this branch on the shared
       // exchange (unread, the optimizer drops the presence aggregate,
       // prunes tw and shuffles events again for this branch alone)
       .unionAll(counts.select(lit(2), col("cell"), noKey,
-        when(col("n") > 0, col("caid")).as("caid")))
+        device(col("caid").isNotNull && col("n") > 0)))
       .groupBy(col("part"), col("k1"), col("k2"))
-      .agg(count(col("caid")).as("n"))
+      .agg(sum(col("n")).as("n"))
   }
 
-  /** The contact counts of the events under `dir`: the origin collect,
-    * then [[contactCountsPass]]'s one collect. Everything after it (the
+  /** The contact counts of the events under `dir`: the origin (from
+    * the parquet footers, or one collect without them), then
+    * [[contactCountsPass]]'s one collect. Everything after it (the
     * mirror, the totals, the scaled sizes) is assembled on the driver.
     */
   def contactCounts(spark: SparkSession, dir: String): ContactCounts = {

@@ -31,9 +31,10 @@ object Pipeline {
   )
 
   /** End-to-end daily run: events → NTL homes → interactions →
-    * contact matrix → SBM network → SEIR. It runs three collects, each
+    * contact matrix → SBM network → SEIR. It reads the bucket origin
+    * `MIN(ts)` from the events' parquet footers (a one-row collect only
+    * when a file lacks `ts` statistics) and runs two collects, each
     * bounded by the scaled network rather than by the events:
-    *  - the bucket origin `MIN(ts)` (one row);
     *  - `Interactions.contactCounts`, the one device-keyed pass over
     *    events (|cells|² + 2·|cells| rows). The contact matrix and the
     *    scaled block sizes are assembled from it on the driver, so

@@ -128,16 +128,48 @@ class CoCountsSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         val b = agg.createAggregationBuffer()
         arrays.slice(lo, hi).foreach(a =>
           agg.update(b, InternalRow(new GenericArrayData(a.toArray[Any]))))
-        agg.deserialize(agg.serialize(b))
+        agg.serialize(b)
       }
-      def fold(ps: Seq[LongCounts]): LongCounts =
-        ps.foldLeft(agg.createAggregationBuffer())((x, y) => agg.merge(x, y))
+      // as Spark merges: each partial freshly deserialized (merge may
+      // take over the partial it is handed)
+      def fold(ps: Seq[Array[Byte]]): LongCounts =
+        ps.foldLeft(agg.createAggregationBuffer())((x, y) => agg.merge(x, agg.deserialize(y)))
       val forward = fold(partials)
       assert(evalPairs(forward) == want, s"trial $trial")
       assert(evalPairs(fold(partials.reverse)) == want, s"trial $trial reversed")
       assert(evalPairs(agg.deserialize(agg.serialize(forward))) == want,
         s"trial $trial round trip")
     }
+  }
+
+  test("co_counts merge into an empty buffer: same counts, and later merges keep them exact") {
+    val agg = CoCountsAgg(BoundReference(0, ArrayType(LongType), nullable = true), 1)
+    def buffer(arrays: Seq[Seq[Long]]): LongCounts = {
+      val b = agg.createAggregationBuffer()
+      arrays.foreach(a => agg.update(b, InternalRow(new GenericArrayData(a.toArray[Any]))))
+      agg.deserialize(agg.serialize(b))
+    }
+    def countsOf(b: LongCounts): Map[Long, Long] = {
+      val m = Map.newBuilder[Long, Long]
+      b.foreach((k, c) => m += k -> c)
+      m.result()
+    }
+    def want(arrays: Seq[Seq[Long]]): Map[Long, Long] =
+      arrays.flatten.groupBy(identity).map { case (k, v) => k -> v.size.toLong }
+    val x = Seq(Seq(1L, 2L, 3L), Seq(2L, 3L), Seq(-5L, 1L << 40))
+    val y = Seq(Seq(3L, 4L), Seq(1L << 40))
+    val z = Seq(Seq(2L, 7L, 7L))
+    val merged = agg.merge(agg.createAggregationBuffer(), buffer(x))
+    assert(countsOf(merged) == want(x), "merging into an empty buffer")
+    // the merged buffer is reused for later merges, as the final
+    // aggregate reuses it for the next partial of the same anchor
+    val yb = buffer(y)
+    val again = agg.merge(agg.merge(merged, yb), buffer(z))
+    assert(countsOf(again) == want(x ++ y ++ z), "later merges into the taken-over buffer")
+    assert(countsOf(yb) == want(y), "a merged-in partial is never changed")
+    assert(countsOf(agg.merge(buffer(x), agg.createAggregationBuffer())) == want(x),
+      "merging an empty partial")
+    assert(countsOf(agg.deserialize(agg.serialize(again))) == want(x ++ y ++ z))
   }
 
   test("co_counts past 128 groups in one task: the sort fallback runs, counts unchanged") {

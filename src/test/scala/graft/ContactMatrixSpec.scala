@@ -60,7 +60,8 @@ class ContactMatrixSpec extends AnyFunSuite {
     (null, "A", 4), (null, "A", 35), (null, "B", 15)
   )
 
-  private lazy val fixture: String = {
+  /** An events table of (device, cell, minute after 2024-01-01) rows. */
+  private def eventsDir(events: Seq[(java.lang.Long, String, Int)]): String = {
     import spark.implicits._
     val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
     val dir = java.nio.file.Files.createTempDirectory("graft-contacts").toString
@@ -70,6 +71,8 @@ class ContactMatrixSpec extends AnyFunSuite {
       .coalesce(1).write.parquet(s"$dir/events.parquet")
     dir
   }
+
+  private lazy val fixture: String = eventsDir(events)
 
   test("contact matrix: hand fixture — remainder tie, zero-filled home, a = b pair, homeless cell, null device") {
     assertMatrixSame(fixture)
@@ -82,6 +85,48 @@ class ContactMatrixSpec extends AnyFunSuite {
     val scaled = rows(Scaling.scaledSizesExact(spark, fixture))
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
     assert(scaled == Seq(("A", 3L, 4286L), ("B", 1L, 1429L), ("H", 1L, 1428L), ("Z", 2L, 2857L)))
+  }
+
+  // Cells A, B, C, Z, P, Q; the origin is d3's event at minute 0.
+  //  - d1, d2 (home A), d3 (home B) and d4 (home C) meet at A in bucket
+  //    0: d1's partners have three homes, and (d1, d2) is an a = b pair.
+  //  - d1 and d3 meet again at Z in buckets 2 and 3 and at P in bucket
+  //    5: C(A, B) counts the pair once, with (d2, d3): M(A, B) = 2.
+  //  - devices 1000-2025 are at P in bucket 5 with d1 and d3: 1,028
+  //    devices, past GroupCap, so the group keeps the 1,024 smallest
+  //    ids. Those divisible by 3 are at Q in bucket 10 twice, so their
+  //    home is Q and the capped group's partners have homes P and Q.
+  private val crowd: Seq[(java.lang.Long, String, Int)] =
+    Seq[(java.lang.Long, String, Int)](
+      (1L, "A", 1), (1L, "A", 2), (1L, "A", 3), (1L, "A", 4),
+      (1L, "Z", 21), (1L, "Z", 31), (1L, "P", 51),
+      (2L, "A", 5), (2L, "A", 6),
+      (3L, "B", 0), (3L, "B", 11), (3L, "B", 12), (3L, "B", 13),
+      (3L, "A", 7), (3L, "Z", 22), (3L, "Z", 32), (3L, "P", 52),
+      (4L, "C", 40), (4L, "C", 41), (4L, "A", 8)) ++
+      (1000L to 2025L).flatMap { k =>
+        (java.lang.Long.valueOf(k), "P", 50) +:
+          (if (k % 3 == 0) Seq((java.lang.Long.valueOf(k), "Q", 100),
+            (java.lang.Long.valueOf(k), "Q", 101)) else Nil)
+      }
+
+  test("contact matrix: hand fixture — pair met in several groups, partners of several homes, capped group") {
+    assert(Interactions.GroupCap == 1024, "the crowd is sized for a cap of 1024")
+    val dir = eventsDir(crowd)
+    assertMatrixSame(dir)
+    val m = rows(Interactions.totalVsObserved(spark, dir))
+      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(3)).toMap
+    assert(m(("A", "B")) == 2L && m(("B", "A")) == 2L, "(d1, d3) counts once")
+    assert(m(("A", "A")) == 2L && m(("A", "C")) == 2L && m(("B", "C")) == 1L)
+    // the capped group keeps d1, d3 and devices 1000-2021
+    val kept = (1000L to 2021L).map(k => if (k % 3 == 0) "Q" else "P")
+    val nq = kept.count(_ == "Q").toLong
+    val np = kept.size - nq
+    assert(m(("A", "P")) == np && m(("B", "Q")) == nq)
+    assert(m(("P", "P")) == np * (np - 1) && m(("P", "Q")) == np * nq)
+    // the Q group of bucket 10 holds every Q device, capped or not
+    val allQ = (1000L to 2025L).count(_ % 3 == 0).toLong
+    assert(m(("Q", "Q")) == allQ * (allQ - 1))
   }
 
   test("infected per block: the driver count equals the Spark join") {

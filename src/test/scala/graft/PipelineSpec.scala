@@ -78,12 +78,13 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     } finally sc.removeSparkListener(listener)
   }
 
-  // dailyRun scans events twice (the origin, then the one contact-count
-  // pass) and builds the matrix, the scaled sizes and the SBM network on
-  // the driver: no plan holds a cross join, a nested-loop join or a
-  // window. The SEIR fan-out runs once too: the status writes read the
-  // collected rows, and the GraphML write starts no job.
-  test("daily run: two events scans, no cross join or window, at most 12 + 3 jobs") {
+  // dailyRun reads the bucket origin from the events' parquet footers
+  // and scans events once (the one contact-count pass); it builds the
+  // matrix, the scaled sizes and the SBM network on the driver: no plan
+  // holds a cross join, a nested-loop join or a window. The SEIR fan-out
+  // runs once too: the status writes read the collected rows, and the
+  // GraphML write starts no job.
+  test("daily run: one events scan, no cross join or window, at most 6 + 3 jobs") {
     spark.catalog.clearCache() // nothing an earlier test cached may serve this run
     var res: (DataFrame, DataFrame, DataFrame, DataFrame) = null
     var daily: Seq[SparkPlan] = Nil
@@ -91,13 +92,13 @@ class PipelineSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
       daily = plansOf { res = Pipeline.dailyRun(spark, cfg, seeds = 0 until 4) }
     }
     info(s"dailyRun: $dailyJobs Spark jobs")
-    assert(dailyJobs <= 12, s"dailyRun started $dailyJobs Spark jobs")
+    assert(dailyJobs <= 6, s"dailyRun started $dailyJobs Spark jobs")
     daily.map(nodeNames).foreach { p =>
       assert(!p.exists(Set("CartesianProduct", "BroadcastNestedLoopJoin", "Window")),
         s"no dailyRun plan may cross join or window: $p")
     }
     val scans = daily.count(scansEvents)
-    assert(scans >= 1 && scans <= 2, s"$scans dailyRun queries scan events")
+    assert(scans == 1, s"$scans dailyRun queries scan events")
     val (matrix, vertices, edges, status) = res
     val out = java.nio.file.Files.createTempDirectory("graft-daily").toString
     val blocks = vertices.selectExpr("CAST(node_id AS LONG) AS nodeId",

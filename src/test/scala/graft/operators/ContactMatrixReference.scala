@@ -12,8 +12,9 @@ import graft.Tables
 object ContactMatrixReference {
 
   /** Observed contacts per (a_home, b_home), the r7 fused plan: homes
-    * enrich the presence rows before the (cell, tw) grouping, pairs
-    * emerge home-labeled, C counts distinct pairs, and M = C + Cᵀ is a
+    * enrich the presence rows before the (cell, tw) grouping, the
+    * home-labeled canonical pairs of each group come from a double
+    * explode, C counts distinct pairs, and M = C + Cᵀ is a
     * union with the mirrored C summed per block pair.
     */
   def observedContacts(spark: SparkSession, dir: String): DataFrame = {
@@ -34,9 +35,11 @@ object ContactMatrixReference {
         when(size(col("members")) <= lit(Interactions.GroupCap), col("members"))
           .otherwise(slice(col("members"), 1, Interactions.GroupCap)))
     val canon = grouped
-      .select(explode(call_function("pair_structs_tagged", col("members"))).as("p"))
-      .select(col("p.ia").as("a_caid"), col("p.ib").as("b_caid"),
-        col("p.ta").as("a_home"), col("p.tb").as("b_home"))
+      .select(explode(col("members")).as("x"), col("members"))
+      .select(col("x"), explode(col("members")).as("y"))
+      .where(col("x.id") < col("y.id"))
+      .select(col("x.id").as("a_caid"), col("y.id").as("b_caid"),
+        col("x.tag").as("a_home"), col("y.tag").as("b_home"))
     val c = canon.groupBy(col("a_home"), col("b_home"))
       .agg(countDistinct(col("a_caid"), col("b_caid")).as("cnt"))
     c.select(col("a_home"), col("b_home"), col("cnt"))
