@@ -44,11 +44,12 @@ object Tables {
     perSession.computeIfAbsent(s"$dir/$name.parquet", p => spark.read.parquet(p))
   }
 
-  /** events.parquet stores ts as TIMESTAMP(NANOS): with
-    * spark.sql.legacy.parquet.nanosAsLong it surfaces as LongType epoch
-    * nanos; truncate to micros (exactly what DuckDB/pyarrow do) and
-    * restore TimestampType. Integer `div` keeps full precision — a
-    * double division would corrupt 1.7e18-scale nanos.
+  /** The test tables' events.parquet stores ts as TIMESTAMP(MICROS),
+    * which Spark reads as TimestampType unchanged. An events file with
+    * TIMESTAMP(NANOS) surfaces, under spark.sql.legacy.parquet.nanosAsLong,
+    * as LongType epoch nanos: truncate to micros (exactly what
+    * DuckDB/pyarrow do) and restore TimestampType. Integer `div` keeps
+    * full precision — a double division would corrupt 1.7e18-scale nanos.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -44,9 +44,9 @@ object Sessions {
       // (joins, partial aggs) starts parallelism-starved. Operators
       // never depend on it for correctness.
       .config("spark.sql.files.maxPartitionBytes", "16m")
-      // testdata events.parquet stores TIMESTAMP(NANOS); Spark 4 only
-      // reads it via this conf (as LongType nanos — normalized back to
-      // TimestampType in Tables.events).
+      // An events.parquet with TIMESTAMP(NANOS) (the test tables store
+      // MICROS) is only readable in Spark 4 via this conf, as LongType
+      // nanos — normalized back to TimestampType in Tables.events.
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // Recursive-CTE working-set guard: Spark 4's 1M-row default is a
       // toy-scale runaway trap — the r9 ≈sf1 sweep tripped it on a

@@ -81,14 +81,22 @@ object GraftFunctions {
       es => PairStructsExpr(es.head)),
     ("posting_pairs", "posting_pairs(ps) - canonical co-posting pairs with tf product and both norms",
       es => PostingPairsExpr(es.head)),
-    ("tagged_stripes", "tagged_stripes(members) - per member and partner tag of an id-sorted struct array, the larger partners' ids",
+    ("tagged_stripes", "tagged_stripes(members) - per member and partner tag of an id-sorted array of (BIGINT id, BIGINT tag), the larger partners' ids",
       es => TaggedStripesExpr(es.head)),
-    ("min_k_distinct_tagged", "min_k_distinct_tagged(key, tag, k) - k smallest distinct keys with their tags; O(k) buffer",
+    ("min_k_distinct_tagged", "min_k_distinct_tagged(key, tag, k) - k smallest distinct BIGINT keys with their BIGINT tags; O(k) buffer",
       es => {
         require(es(2).foldable, "min_k_distinct_tagged: k must be a literal")
         val kk = es(2).eval()
         require(kk != null, "min_k_distinct_tagged: k must be non-null")
         MinKDistinctTaggedAgg(es(0), es(1), kk.asInstanceOf[Number].intValue())
+          .toAggregateExpression()
+      }),
+    ("device_presence", "device_presence(caid, cell, tw, cap) - per device: its home, its distinct (cell, tw) rows and its cells as tagged rows; past cap rows it keeps none",
+      es => {
+        require(es(3).foldable, "device_presence: cap must be a literal")
+        val cap = es(3).eval()
+        require(cap != null, "device_presence: cap must be non-null")
+        DevicePresenceAgg(es(0), es(1), es(2), cap.asInstanceOf[Number].intValue())
           .toAggregateExpression()
       }),
     ("lcc_easting", "lcc_easting(lon, lat) - EPSG:6365 forward easting (m)",

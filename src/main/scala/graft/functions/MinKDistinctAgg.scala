@@ -9,7 +9,6 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.trees.UnaryLike
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** `min_k_distinct(value, k)`: the k SMALLEST distinct BIGINT values
   * of the group, as a sorted array — `slice(sort_array(
@@ -117,18 +116,17 @@ case class MinKDistinctAgg(
 }
 
 /** `min_k_distinct_tagged(key, tag, k)`: the k SMALLEST distinct
-  * BIGINT keys of the group, each carrying its STRING tag, as an
+  * BIGINT keys of the group, each carrying its BIGINT tag, as an
   * array<struct<id, tag>> sorted by key — the payload-carrying twin of
   * [[MinKDistinctAgg]] with the same O(k) buffer and the same
   * deterministic smallest-k-of-a-union merge.
   *
   * Contract: the tag must be a FUNCTION of the key within the group
-  * (e.g. a device's home cell) — when the same key arrives twice the
-  * first tag wins, which is only deterministic under that contract.
-  * Exists for the fused observed_contacts shape: presence rows are
-  * home-enriched BEFORE the (cell, tw) grouping, so co-location pairs
-  * emerge already home-labeled and the pair relation never needs its
-  * own device-key joins (r6 verdict #1).
+  * (e.g. a device's home cell code) — when the same key arrives twice
+  * the first tag wins, which is only deterministic under that contract.
+  * The contact pass labels each device's presence rows with its home
+  * BEFORE the (cell, tw) grouping, so co-located devices emerge already
+  * home-labeled and no device-key join is needed.
   */
 case class MinKDistinctTaggedAgg(
     key: Expression,
@@ -136,17 +134,17 @@ case class MinKDistinctTaggedAgg(
     k: Int,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
-  extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, UTF8String]] {
+  extends TypedImperativeAggregate[java.util.TreeMap[java.lang.Long, java.lang.Long]] {
+
+  private type Buf = java.util.TreeMap[java.lang.Long, java.lang.Long]
 
   require(k >= 1 && k <= (1 << 20), s"min_k_distinct_tagged: k out of range: $k")
 
   override def children: Seq[Expression] = Seq(key, tag)
 
-  override def createAggregationBuffer(): java.util.TreeMap[java.lang.Long, UTF8String] =
-    new java.util.TreeMap[java.lang.Long, UTF8String]()
+  override def createAggregationBuffer(): Buf = new java.util.TreeMap()
 
-  private def offer(b: java.util.TreeMap[java.lang.Long, UTF8String],
-      v: Long, t: UTF8String): Unit = {
+  private def offer(b: Buf, v: Long, t: Long): Unit = {
     if (b.size < k) { if (!b.containsKey(v)) { b.put(v, t); () } }
     else if (v < b.lastKey && !b.containsKey(v)) {
       b.put(v, t)
@@ -155,86 +153,68 @@ case class MinKDistinctTaggedAgg(
     }
   }
 
-  override def update(
-      b: java.util.TreeMap[java.lang.Long, UTF8String],
-      input: InternalRow): java.util.TreeMap[java.lang.Long, UTF8String] = {
+  override def update(b: Buf, input: InternalRow): Buf = {
     val v = key.eval(input)
     val t = tag.eval(input)
     // a null key or tag carries no usable member; skip (mirrors the
     // null-skip of the untagged aggregate)
-    if (v != null && t != null) {
-      // clone: the UTF8String may point into a reused unsafe-row buffer
-      offer(b, v.asInstanceOf[Long], t.asInstanceOf[UTF8String].clone())
-    }
+    if (v != null && t != null) offer(b, v.asInstanceOf[Long], t.asInstanceOf[Long])
     b
   }
 
-  override def merge(
-      b: java.util.TreeMap[java.lang.Long, UTF8String],
-      other: java.util.TreeMap[java.lang.Long, UTF8String]): java.util.TreeMap[java.lang.Long, UTF8String] = {
+  override def merge(b: Buf, other: Buf): Buf = {
     val it = other.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      offer(b, e.getKey.longValue(), e.getValue)
+      offer(b, e.getKey.longValue(), e.getValue.longValue())
     }
     b
   }
 
-  override def eval(b: java.util.TreeMap[java.lang.Long, UTF8String]): Any = {
+  override def eval(b: Buf): Any = {
     val arr = new Array[Any](b.size)
     val it = b.entrySet().iterator()
     var i = 0
     while (it.hasNext) {
       val e = it.next()
       arr(i) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-        Array[Any](e.getKey.longValue(), e.getValue))
+        Array[Any](e.getKey.longValue(), e.getValue.longValue()))
       i += 1
     }
     new GenericArrayData(arr) // TreeMap iterates ascending by key
   }
 
-  override def serialize(b: java.util.TreeMap[java.lang.Long, UTF8String]): Array[Byte] = {
-    val bos = new ByteArrayOutputStream()
-    val out = new DataOutputStream(bos)
-    out.writeInt(b.size)
+  override def serialize(b: Buf): Array[Byte] = {
+    val buf = java.nio.ByteBuffer.allocate(4 + 16 * b.size)
+    buf.putInt(b.size)
     val it = b.entrySet().iterator()
     while (it.hasNext) {
       val e = it.next()
-      out.writeLong(e.getKey.longValue())
-      val bytes = e.getValue.getBytes
-      out.writeInt(bytes.length)
-      out.write(bytes)
+      buf.putLong(e.getKey.longValue())
+      buf.putLong(e.getValue.longValue())
     }
-    out.flush()
-    bos.toByteArray
+    buf.array()
   }
 
-  override def deserialize(bytes: Array[Byte]): java.util.TreeMap[java.lang.Long, UTF8String] = {
-    val in = new DataInputStream(new ByteArrayInputStream(bytes))
-    val n = in.readInt()
-    val b = new java.util.TreeMap[java.lang.Long, UTF8String]()
+  override def deserialize(bytes: Array[Byte]): Buf = {
+    val buf = java.nio.ByteBuffer.wrap(bytes)
+    val n = buf.getInt()
+    val b = createAggregationBuffer()
     var i = 0
-    while (i < n) {
-      val key = in.readLong()
-      val len = in.readInt()
-      val buf = new Array[Byte](len)
-      in.readFully(buf)
-      b.put(key, UTF8String.fromBytes(buf))
-      i += 1
-    }
+    while (i < n) { b.put(buf.getLong(), buf.getLong()); i += 1 }
     b
   }
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (key.dataType == LongType && tag.dataType == StringType)
+    if (key.dataType == LongType && tag.dataType == LongType)
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"min_k_distinct_tagged requires (BIGINT, STRING), got " +
+      s"min_k_distinct_tagged requires (BIGINT, BIGINT), got " +
         s"(${key.dataType.sql}, ${tag.dataType.sql})")
 
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("id", LongType, nullable = false),
-    StructField("tag", StringType, nullable = false))), containsNull = false)
+    StructField("tag", LongType, nullable = false))), containsNull = false)
   override def nullable: Boolean = false
   override def prettyName: String = "min_k_distinct_tagged"
 

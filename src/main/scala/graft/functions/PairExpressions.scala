@@ -4,8 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructField, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
 object PairHelpers {
   /** All unordered pairs of a long array as (lo, hi) structs; equal
@@ -66,17 +65,17 @@ object TaggedStripeHelpers {
       s"tagged_stripes: input set of $n elements would hold " +
         s"~${n.toLong * (n - 1) / 2} pairs — cap the group first")
     val ids = new Array[Long](n)
-    // dense tag ids, so partners are bucketed without comparing strings
+    // dense tag ids, so partners are bucketed by array index
     val tagIds = new Array[Int](n)
-    val tags = new Array[UTF8String](n)
-    val tagIndex = new java.util.HashMap[UTF8String, Integer]()
+    val tags = new Array[Long](n)
+    val tagIndex = new java.util.HashMap[java.lang.Long, Integer]()
     var m = 0
     var i = 0
     while (i < n) {
       if (!arr.isNullAt(i)) {
         val r = arr.getStruct(i, 2)
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val tag = r.getUTF8String(1)
+          val tag = r.getLong(1)
           var t = tagIndex.get(tag)
           if (t == null) {
             t = tagIndex.size()
@@ -139,8 +138,8 @@ object TaggedStripeHelpers {
 
 /** `tagged_stripes(members)` → array<struct(a, ha, hb, ibs)>: the
   * anchor-keyed form of the canonical pairs of an id-sorted
-  * array<struct<id, tag>>: one struct per member a and per tag hb of its
-  * larger partners, carrying those partners' ids. Counting distinct
+  * array<struct<id, tag>> of BIGINTs: one struct per member a and per
+  * tag hb of its larger partners, carrying those partners' ids. Counting distinct
   * partners per (a, hb) after an exchange on a counts distinct pairs
   * per (ha, hb) without building a pair row. Same capped-group contract
   * as [[PairStructsExpr]].
@@ -148,16 +147,16 @@ object TaggedStripeHelpers {
 case class TaggedStripesExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("a", LongType, nullable = false),
-    StructField("ha", StringType, nullable = false),
-    StructField("hb", StringType, nullable = false),
+    StructField("ha", LongType, nullable = false),
+    StructField("hb", LongType, nullable = false),
     StructField("ibs", ArrayType(LongType, containsNull = false), nullable = false))),
     containsNull = false)
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(StructType(fs), _) if fs.length == 2 &&
-      fs(0).dataType == LongType && fs(1).dataType == StringType =>
+      fs(0).dataType == LongType && fs(1).dataType == LongType =>
       TypeCheckResult.TypeCheckSuccess
     case t => TypeCheckResult.TypeCheckFailure(
-      s"tagged_stripes expects ARRAY<STRUCT<BIGINT, STRING>>, got ${t.sql}")
+      s"tagged_stripes expects ARRAY<STRUCT<BIGINT, BIGINT>>, got ${t.sql}")
   }
   override def nullSafeEval(a: Any): Any =
     TaggedStripeHelpers.taggedStripes(a.asInstanceOf[ArrayData])

@@ -18,22 +18,21 @@ import graft.{Op, Tables}
   * Test-table mapping (TESTDATA.md): events.user_id = caid,
   * events.event_type = spatial cell, 600-second origin-anchored buckets.
   *
-  * Scale notes (100 TB): the (cell, bucket) key is high-cardinality and
-  * bounded-skew by construction; the distinct-before-join collapses each
-  * (user, cell, bucket) group to one row *before* the shuffle-heavy
-  * self-join (the reference's own dedup-before-join pattern,
-  * SURVEY §4.2). The pair-level distinct and the group-by share the
-  * (a_caid, b_caid) shuffle key, so Catalyst reuses one exchange.
+  * Scale notes (100 TB): no self-join runs. The (cell, bucket) key is
+  * high-cardinality and bounded-skew by construction: presence is
+  * grouped by it in one shuffle, and each group keeps at most
+  * [[GroupCap]] devices in its aggregation buffer, so a poisoned key
+  * costs O(GroupCap) and the pairs of a group are built from that
+  * capped set.
   *
   * The contact matrix (observed contacts, sizes, total vs observed) is
-  * no longer a lazy plan: [[contactCounts]] reads the bucket origin
-  * from the events' parquet footers (one collect only when they lack
-  * `ts` statistics), runs one device-keyed pass over events that counts
-  * contacts per anchor device without building pair rows, and collects
-  * |cells|²-bounded counts; the matrix is assembled from them on the
-  * driver as a local relation. The lazy
-  * fused `observedContacts` plan is gone; R13Spec still checks the
-  * result against the two-join spelling in `InteractionsReference`.
+  * not a lazy plan: [[contactCounts]] reads the bucket origin from the
+  * events' parquet footers (one collect only when they lack `ts`
+  * statistics), runs [[contactCountsPass]], one device-keyed chain over
+  * events that counts contacts per anchor device without building pair
+  * rows, and collects |cells|²-bounded counts; the matrix is assembled
+  * from them on the driver as a local relation. R13Spec still checks
+  * the result against the two-join spelling in `InteractionsReference`.
   */
 object Interactions {
 
@@ -59,23 +58,6 @@ object Interactions {
       |FROM p a JOIN p b
       |  ON a.cell = b.cell AND a.tw = b.tw AND a.caid != b.caid""".stripMargin
 
-  /** J1: distinct co-located (a_caid, b_caid) pairs (both directions,
-    * matching the reference's `a.caid != b.caid` with no canonical
-    * ordering — interaction_queries.py:21-28).
-    *
-    * Implemented as ONE shuffle on (cell, tw): group to a caid set per
-    * co-location key, pair within the group via double explode. The
-    * naive self-join needs either a broadcast of the whole presence
-    * table (impossible at 100 TB) or two more shuffles; this shape
-    * scales because group sizes are physically bounded (devices
-    * co-present in one ~0.5 m cell within 10 minutes), so the n² pair
-    * explode per group is O(1) per key and skew-free by construction.
-    */
-  /** Co-located pair OCCURRENCES (one row per co-location event, NOT
-    * distinct): consumers that re-aggregate (observed contacts, edges,
-    * isolated nodes) fuse the pair dedup into their own aggregation
-    * instead of paying a separate distinct exchange here.
-    */
   /** Max devices kept per (cell, tw) co-location group — far above
     * anything physically possible in a ~0.5 m cell / 10 min window, so
     * it only ever binds on poisoned keys.
@@ -158,6 +140,19 @@ object Interactions {
       .select(explode(call_function("pair_structs", col("caids"))).as("p"))
       .select(col("p.ia").as("a_caid"), col("p.ib").as("b_caid"))
 
+  /** J1: distinct co-located (a_caid, b_caid) pairs (both directions,
+    * matching the reference's `a.caid != b.caid` with no canonical
+    * ordering — interaction_queries.py:21-28).
+    *
+    * Implemented as ONE shuffle on (cell, tw): group to a caid set per
+    * co-location key, pair within the group with `pair_structs`, then
+    * one pair distinct. The naive self-join needs either a broadcast of
+    * the whole presence table (impossible at 100 TB) or two more
+    * shuffles; this shape scales because group sizes are physically
+    * bounded (devices co-present in one ~0.5 m cell within 10 minutes),
+    * so the n² pairs per group are O(1) per key and skew-free by
+    * construction.
+    */
   def interactionPairs(spark: SparkSession, dir: String): DataFrame =
     // one explode (not a self-union) mirrors the canonical pairs, so
     // the distinct subtree is evaluated exactly once
@@ -201,10 +196,12 @@ object Interactions {
   /** The collected result of [[contactCounts]]: `pairs` is C, the
     * distinct canonical (a < b) co-located device pairs per
     * (a_home, b_home); `homeSizes` the distinct devices per home cell;
-    * `cellDevices` the distinct devices per cell, the scaler's input.
+    * `cellDevices` the distinct devices per cell, the scaler's input;
+    * `cappedDevices` the devices past [[DeviceCap]], which make no pair.
     */
   final case class ContactCounts(pairs: Map[(String, String), Long],
-      homeSizes: Seq[(String, Long)], cellDevices: Seq[(String, Long)])
+      homeSizes: Seq[(String, Long)], cellDevices: Seq[(String, Long)],
+      cappedDevices: Long)
 
   /** Spark's ascending string order: UTF-8 bytes, nulls first. */
   private[graft] val cellOrder: Ordering[String] = (x: String, y: String) =>
@@ -285,94 +282,116 @@ object Interactions {
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Most distinct (cell, tw) rows one device keeps in the contact
+    * pass: a day has 144 buckets, so this is a device in a new ~0.5 m
+    * cell every 1.3 s all day. It only binds on poisoned devices (a
+    * stuck emitter, a shared default id); a device past it keeps its
+    * home and its cells but makes no contact, and [[contactCounts]]
+    * counts and logs it.
+    */
+  val DeviceCap = 65536
+
+  /** The default cell coder: the XXH64 hash of the cell name. A
+    * collision makes [[contactCounts]] throw; it never merges two cells.
+    */
+  val cellCode: Column => Column = xxhash64(_)
+
   /** The one pass over events behind [[contactCounts]], as one query
-    * whose rows are a tagged union (part, k1, k2, n):
-    *  - part 0: C, the distinct canonical (a < b) device pairs per
+    * whose rows are a tagged union (kind, k1, k2, n, lo, hi) of at most
+    * |cells|² + 2·|cells| + 1 rows, with cells and homes as their
+    * `code` (null for a null cell):
+    *  - kind 0: C, the distinct canonical (a < b) device pairs per
     *    (k1 = a_home, k2 = b_home);
-    *  - part 1: distinct devices per home cell k1;
-    *  - part 2: distinct devices per cell k1.
+    *  - kind 1: distinct devices per home cell k1;
+    *  - kind 2: distinct devices per cell k1, with lo and hi the
+    *    smallest and largest cell name seen with that code;
+    *  - kind 3: the devices past [[DeviceCap]].
     *
-    * Events are projected to (caid, cell, tw) and hash-partitioned by
-    * caid once. The (caid, cell, tw) presence, the (caid, cell) counts,
-    * the home argmax (the same `min_by(cell, (-n, cell))` as
-    * [[homeCells]]) and the presence ⋈ homes join all read that
-    * exchange, so the device-cardinality homes never shuffle and never
-    * broadcast (VERDICT r3 #3). One (cell, tw) exchange then groups the
-    * home-labeled presence rows (`min_k_distinct_tagged`, capped at
-    * [[GroupCap]]). No pair row is built: `tagged_stripes` turns each
-    * group into one row per device a and partner home hb holding a's
-    * larger partners of that home, and after one exchange on a,
-    * `co_counts` counts a's distinct partners per (a, ha, hb). The
-    * three parts are summed in one final aggregation (null devices
-    * count in no part, as `COUNT(DISTINCT)` skips them): at most
-    * |cells|² + 2·|cells| rows.
+    * It is one chain with no join and no branch:
+    *  - events are projected to (caid, cell, tw) and hash-partitioned
+    *    by caid once;
+    *  - `device_presence` reads each device once and emits its home
+    *    (the `min_by(cell, (-n, cell))` of [[homeCells]], on the cell
+    *    names), its cells and its distinct (cell, tw) rows labeled with
+    *    the home: tagged rows whose cells and homes are coded here;
+    *  - one exchange on (kind, k1, k2) groups them: for kind 0, the
+    *    devices of each (cell, tw) with their homes
+    *    (`min_k_distinct_tagged`, capped at [[GroupCap]]); for kinds
+    *    1-3, the sums;
+    *  - `tagged_stripes` turns each group into one row per device a and
+    *    partner home hb holding a's larger partners of that home; the
+    *    other kinds pass through with a = k1;
+    *  - after one exchange on a, `co_counts` counts a's distinct
+    *    partners per (a, ha, hb), so a pair met in several groups counts
+    *    once, and a last aggregation sums per (kind, ha, hb).
+    * Every key is a number: the sort-based fallbacks of the aggregates
+    * compare longs, never strings. Null devices count in no size and
+    * make no pair, as `COUNT(DISTINCT)` skips them.
     */
   private[graft] def contactCountsPass(spark: SparkSession, dir: String,
-      origin: Option[Long]): DataFrame = {
+      origin: Option[Long], code: Column => Column = cellCode): DataFrame = {
     val tw = origin.fold(lit(null).cast("long"))(o =>
       expr(s"(unix_micros(ts) - ${o}L) div 600000000"))
-    // every branch below reads this one exchange through `presence`,
-    // whose grouping keeps the three columns, so the optimizer prunes
-    // no branch's exchange differently and all of them reuse it
-    val presence = Tables.events(spark, dir)
+    def coded(c: Column): Column = when(c.isNotNull, code(c))
+    val kind = col("kind")
+    Tables.events(spark, dir)
       .select(col("user_id").as("caid"), col("event_type").as("cell"), tw.as("tw"))
       .repartition(col("caid"))
-      .groupBy(col("caid"), col("cell"), col("tw"))
-      .agg(count(lit(1)).as("n"))
-    val counts = presence.groupBy(col("caid"), col("cell")).agg(sum(col("n")).as("n"))
-    val homes = counts.groupBy(col("caid"))
-      .agg(min_by(col("cell"), struct((-col("n")).as("negn"), col("cell")))
-        .as("home_cell"))
-    // A full join: an inner one would infer `caid IS NOT NULL` and push
-    // it below the exchange of these two branches only. The rows it adds
-    // have a null caid, which min_k_distinct_tagged skips, so the members
-    // are the inner join's.
-    val members = presence.select(col("caid"), col("cell"), col("tw"))
-      .join(homes.hint("shuffle_hash"), Seq("caid"), "full")
-      .groupBy(col("cell"), col("tw"))
-      .agg(call_function("min_k_distinct_tagged",
-        col("caid"), col("home_cell"), lit(GroupCap + 1)).as("members"))
-      .where(size(col("members")) >= 2)
-      .withColumn("members",
-        when(size(col("members")) <= lit(GroupCap), col("members"))
-          .otherwise(slice(col("members"), 1, GroupCap)))
-    // C per anchor device: each group's stripes (a, ha, hb, ibs) carry
-    // a's larger partners of home hb, one exchange on a brings every
-    // stripe of a together, and co_counts counts a's distinct partners
-    // per hb, so a pair met in several groups counts once. A device has
-    // one home, so summing per (ha, hb) gives C exactly.
-    val stripes = members
-      .select(explode(call_function("tagged_stripes", col("members"))).as("s"))
-      .select(col("s.a").as("a"), col("s.ha").as("ha"), col("s.hb").as("hb"),
-        col("s.ibs").as("ibs"))
+      .groupBy(col("caid"))
+      .agg(call_function("device_presence", col("caid"), col("cell"), col("tw"),
+        lit(DeviceCap)).as("rows"))
+      .select(col("caid"), inline(col("rows")))
+      .select(kind, coded(col("key")).as("k1"), col("tw").as("k2"), col("caid"),
+        coded(col("home")).as("ha"), col("n"), when(kind === 2, col("key")).as("cell"))
+      .groupBy(kind, col("k1"), col("k2"))
+      .agg(call_function("min_k_distinct_tagged", col("caid"), col("ha"),
+          lit(GroupCap + 1)).as("members"),
+        sum(col("n")).as("n"), min(col("cell")).as("lo"), max(col("cell")).as("hi"))
+      // a group past GroupCap keeps its GroupCap smallest devices
+      .select(kind, col("k1"), col("n"), col("lo"), col("hi"), explode_outer(
+        call_function("tagged_stripes", slice(col("members"), 1, GroupCap))).as("s"))
+      .where(kind =!= 0 || col("s").isNotNull)
+      .select(kind, coalesce(col("s.a"), col("k1")).as("a"),
+        coalesce(col("s.ha"), col("k1")).as("ha"), col("s.hb").as("hb"),
+        col("s.ibs").as("ibs"), col("n"), col("lo"), col("hi"))
       .repartition(col("a"))
-      .groupBy(col("a"), col("ha"), col("hb"))
-      .agg(size(call_function("co_counts", col("ibs"), lit(1))).cast("long").as("n"))
-    val noKey = lit(null).cast("string").as("k2")
-    def device(present: Column): Column = when(present, 1L).otherwise(0L).as("n")
-    stripes.select(lit(0).as("part"), col("ha").as("k1"), col("hb").as("k2"), col("n"))
-      .unionAll(homes.select(lit(1), col("home_cell"), noKey, device(col("caid").isNotNull)))
-      // n > 0 always holds; reading n keeps this branch on the shared
-      // exchange (unread, the optimizer drops the presence aggregate,
-      // prunes tw and shuffles events again for this branch alone)
-      .unionAll(counts.select(lit(2), col("cell"), noKey,
-        device(col("caid").isNotNull && col("n") > 0)))
-      .groupBy(col("part"), col("k1"), col("k2"))
-      .agg(sum(col("n")).as("n"))
+      .groupBy(col("a"), col("ha"), col("hb"), kind)
+      .agg(size(call_function("co_counts", col("ibs"), lit(1))).cast("long").as("co"),
+        sum(col("n")).as("n"), min(col("lo")).as("lo"), max(col("hi")).as("hi"))
+      .groupBy(kind, col("ha").as("k1"), col("hb").as("k2"))
+      .agg(sum(when(kind === 0, col("co")).otherwise(col("n"))).as("n"),
+        min(col("lo")).as("lo"), max(col("hi")).as("hi"))
   }
 
   /** The contact counts of the events under `dir`: the origin (from
     * the parquet footers, or one collect without them), then
-    * [[contactCountsPass]]'s one collect. Everything after it (the
-    * mirror, the totals, the scaled sizes) is assembled on the driver.
+    * [[contactCountsPass]]'s one collect, decoded through its kind-2
+    * rows. Everything after it (the mirror, the totals, the scaled
+    * sizes) is assembled on the driver.
+    * @throws IllegalStateException when `code` gives two cells one code,
+    *   or a cell a null code
     */
-  def contactCounts(spark: SparkSession, dir: String): ContactCounts = {
-    val rows = contactCountsPass(spark, dir, originMicros(spark, dir)).collect()
+  def contactCounts(spark: SparkSession, dir: String,
+      code: Column => Column = cellCode): ContactCounts = {
+    val rows = contactCountsPass(spark, dir, originMicros(spark, dir), code).collect()
     def part(p: Int) = rows.iterator.filter(_.getInt(0) == p)
+    val names = part(2).map { r =>
+      val (lo, hi) = (r.getString(4), r.getString(5))
+      if (lo != hi) throw new IllegalStateException(
+        s"cell code collision: '$lo' and '$hi' both code to ${r.get(1)}")
+      if (r.isNullAt(1) && lo != null) throw new IllegalStateException(
+        s"cell '$lo' codes to null")
+      r.get(1) -> lo
+    }.toMap
+    val capped = part(3).map(_.getLong(3)).sum
+    if (capped > 0) org.slf4j.LoggerFactory.getLogger(getClass).warn(
+      s"$capped devices have more than $DeviceCap distinct (cell, tw) rows: " +
+        "they count in the sizes but make no contact")
     ContactCounts(
-      part(0).map(r => (r.getString(1), r.getString(2)) -> r.getLong(3)).toMap,
-      part(1).map(r => r.getString(1) -> r.getLong(3)).toSeq,
-      part(2).map(r => r.getString(1) -> r.getLong(3)).toSeq)
+      part(0).map(r => (names(r.get(1)), names(r.get(2))) -> r.getLong(3)).toMap,
+      part(1).map(r => names(r.get(1)) -> r.getLong(3)).toSeq,
+      part(2).map(r => r.getString(4) -> r.getLong(3)).toSeq,
+      capped)
   }
 
   /** M = C + Cᵀ: both directions of every counted pair, so an a = b

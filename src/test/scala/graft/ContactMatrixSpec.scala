@@ -1,7 +1,8 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{lit, when, xxhash64}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{ContactMatrixReference => Ref, Interactions, Scaling}
 
@@ -127,6 +128,57 @@ class ContactMatrixSpec extends AnyFunSuite {
     // the Q group of bucket 10 holds every Q device, capped or not
     val allQ = (1000L to 2025L).count(_ % 3 == 0).toLong
     assert(m(("Q", "Q")) == allQ * (allQ - 1))
+  }
+
+  test("contact counts: a coder collision throws, naming both cells") {
+    // A and B are each visited by several devices, and d3 visits both
+    val collide: Column => Column =
+      c => when(c === "A" || c === "B", lit(7L)).otherwise(xxhash64(c))
+    val e = intercept[IllegalStateException](Interactions.contactCounts(spark, fixture, collide))
+    assert(e.getMessage.contains("'A'") && e.getMessage.contains("'B'"), e.getMessage)
+    val toNull = intercept[IllegalStateException](
+      Interactions.contactCounts(spark, fixture, c => when(c =!= "H", xxhash64(c))))
+    assert(toNull.getMessage.contains("'H'"), toNull.getMessage)
+  }
+
+  // Cells A, B, C and a null cell, all in bucket 0 (minutes 0-9):
+  //  - d1 has two events at B and two at C: a tie, and B < C by name
+  //    while the coder below puts C's code first; its home is B;
+  //  - d2 has one event at A and one at the null cell: the null cell
+  //    ties first, so d2's home is null and d2 makes no pair;
+  //  - d3 (home C) meets d1 at C, d4 (home B) meets d1 at B, and d2
+  //    meets d3 at A.
+  private val ties: Seq[(java.lang.Long, String, Int)] = Seq(
+    (1L, "B", 0), (1L, "B", 1), (1L, "C", 2), (1L, "C", 3),
+    (2L, "A", 4), (2L, null, 5),
+    (3L, "C", 6), (3L, "C", 7), (3L, "A", 8),
+    (4L, "B", 9))
+
+  test("contact counts: home ties follow the cell names, not their codes; a null cell ties first") {
+    val dir = eventsDir(ties)
+    val reversed: Column => Column =
+      c => when(c === "B", lit(2L)).when(c === "C", lit(1L)).otherwise(xxhash64(c))
+    val counts = Interactions.contactCounts(spark, dir, reversed)
+    val homes = rows(Interactions.sizes(spark, dir)).map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(homes == Map("B" -> 2L, "C" -> 1L, (null: String) -> 1L), "homeCells")
+    assert(counts.homeSizes.toMap == homes)
+    assert(counts.pairs == Map(("B", "C") -> 1L, ("B", "B") -> 1L))
+    assertSame("total_vs_observed, reversed codes", Interactions.contactMatrix(spark, counts),
+      Ref.totalVsObserved(spark, dir), ordered = true)
+    assertMatrixSame(dir)
+  }
+
+  test("contact counts: a device past DeviceCap keeps its home and cells, makes no contact, and is counted") {
+    // d5 is at A once in every bucket from 0 to DeviceCap: one row past
+    // the cap. Uncapped, it would meet d1, d2, d3 at A in bucket 0.
+    val d5 = (0 to Interactions.DeviceCap).map(b =>
+      (java.lang.Long.valueOf(5L), "A", b * 10))
+    val full = Interactions.contactCounts(spark, fixture)
+    val capped = Interactions.contactCounts(spark, eventsDir(events ++ d5))
+    assert(full.cappedDevices == 0L && capped.cappedDevices == 1L)
+    assert(capped.pairs == full.pairs, "d5 meets nobody")
+    assert(capped.homeSizes.toMap == full.homeSizes.toMap.updated("A", 3L), "d5's home is A")
+    assert(capped.cellDevices.toMap == full.cellDevices.toMap.updated("A", 4L))
   }
 
   test("infected per block: the driver count equals the Spark join") {

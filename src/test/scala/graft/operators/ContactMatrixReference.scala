@@ -11,11 +11,12 @@ import graft.Tables
   */
 object ContactMatrixReference {
 
-  /** Observed contacts per (a_home, b_home), the r7 fused plan: homes
-    * enrich the presence rows before the (cell, tw) grouping, the
-    * home-labeled canonical pairs of each group come from a double
-    * explode, C counts distinct pairs, and M = C + Cᵀ is a
-    * union with the mirrored C summed per block pair.
+  /** Observed contacts per (a_home, b_home) as joins: the presence
+    * rows of devices with a home are grouped by (cell, tw) into their
+    * GroupCap smallest device ids, the canonical pairs of each group
+    * come from a double explode, both devices' homes are joined on,
+    * C counts distinct pairs, and M = C + Cᵀ is a union with the
+    * mirrored C summed per block pair.
     */
   def observedContacts(spark: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(spark, dir)
@@ -26,21 +27,23 @@ object ContactMatrixReference {
         col("user_id").as("caid"),
         col("event_type").as("cell"),
         expr("(unix_micros(ts) - unix_micros(origin_ts)) div 600000000").as("tw"))
-    val enriched = presence.join(homes.hint("shuffle_hash"), Seq("caid"))
-    val grouped = enriched.groupBy(col("cell"), col("tw"))
-      .agg(call_function("min_k_distinct_tagged",
-        col("caid"), col("home_cell"), lit(Interactions.GroupCap + 1)).as("members"))
+    val grouped = presence.join(homes, Seq("caid"))
+      .where(col("home_cell").isNotNull)
+      .groupBy(col("cell"), col("tw"))
+      .agg(call_function("min_k_distinct", col("caid"), lit(Interactions.GroupCap + 1))
+        .as("members"))
       .where(size(col("members")) >= 2)
-      .withColumn("members",
-        when(size(col("members")) <= lit(Interactions.GroupCap), col("members"))
-          .otherwise(slice(col("members"), 1, Interactions.GroupCap)))
+      .withColumn("members", slice(col("members"), 1, Interactions.GroupCap))
     val canon = grouped
-      .select(explode(col("members")).as("x"), col("members"))
-      .select(col("x"), explode(col("members")).as("y"))
-      .where(col("x.id") < col("y.id"))
-      .select(col("x.id").as("a_caid"), col("y.id").as("b_caid"),
-        col("x.tag").as("a_home"), col("y.tag").as("b_home"))
-    val c = canon.groupBy(col("a_home"), col("b_home"))
+      .select(explode(col("members")).as("a_caid"), col("members"))
+      .select(col("a_caid"), explode(col("members")).as("b_caid"))
+      .where(col("a_caid") < col("b_caid"))
+    // both homes are non-null (only devices with a home are grouped);
+    // the coalesce only says so to the schema
+    def home(side: String) = homes.select(col("caid").as(s"${side}_caid"),
+      coalesce(col("home_cell"), lit("")).as(s"${side}_home"))
+    val c = canon.join(home("a"), Seq("a_caid")).join(home("b"), Seq("b_caid"))
+      .groupBy(col("a_home"), col("b_home"))
       .agg(countDistinct(col("a_caid"), col("b_caid")).as("cnt"))
     c.select(col("a_home"), col("b_home"), col("cnt"))
       .unionAll(c.select(col("b_home").as("a_home"),
