@@ -77,8 +77,6 @@ object GraftFunctions {
       es => GramTfExpr(es(0), es(1))),
     ("gram_bucket_hist", "gram_bucket_hist(text, b) - per-doc uni+bigram md5-bucket histogram",
       es => GramBucketHistExpr(es(0), es(1))),
-    ("pair_structs", "pair_structs(items) - all unordered (ia < ib) pairs of a long array",
-      es => PairStructsExpr(es.head)),
     ("posting_pairs", "posting_pairs(ps) - canonical co-posting pairs with tf product and both norms",
       es => PostingPairsExpr(es.head)),
     ("tagged_stripes", "tagged_stripes(members) - per member and partner tag of an id-sorted array of (BIGINT id, BIGINT tag), the larger partners' ids",

@@ -6,48 +6,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructField, StructType}
 
-object PairHelpers {
-  /** All unordered pairs of a long array as (lo, hi) structs; equal
-    * values are skipped (callers pass collect_set outputs, so
-    * duplicates don't occur in practice).
-    */
-  def pairStructs(arr: ArrayData): ArrayData = {
-    val n = arr.numElements()
-    if (n < 2) return new GenericArrayData(Array.empty[Any])
-    // fail loudly, not with a wrapped-Int ArrayList crash: the n²/2
-    // output of an uncapped set is a caller contract violation (every
-    // operator caps its groups first — see the class doc)
-    if (n > 46340) throw new IllegalArgumentException(
-      s"pair_structs: input set of $n elements would emit ~${n.toLong * (n - 1) / 2} " +
-        "pairs — cap the group (min_k_distinct) before pairing")
-    // n ≤ 46340 keeps n*(n-1)/2 within Int range (46341² overflows),
-    // so this capacity expression cannot wrap negative
-    val out = new java.util.ArrayList[Any](n * (n - 1) / 2)
-    var i = 0
-    while (i < n - 1) {
-      if (!arr.isNullAt(i)) {
-        val a = arr.getLong(i)
-        var j = i + 1
-        while (j < n) {
-          // skip null slots: getLong on a null unboxes to 0, which
-          // would fabricate pairs with a phantom item id 0 for SQL
-          // callers passing nullable arrays
-          if (!arr.isNullAt(j)) {
-            val b = arr.getLong(j)
-            if (a != b) {
-              out.add(new GenericInternalRow(
-                Array[Any](math.min(a, b), math.max(a, b))))
-            }
-          }
-          j += 1
-        }
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
-  }
-}
-
 object TaggedStripeHelpers {
   /** The anchor-keyed ("stripes") form of an id-sorted
     * array<struct<id, tag>> (as [[MinKDistinctTaggedAgg]] emits): for
@@ -141,8 +99,9 @@ object TaggedStripeHelpers {
   * array<struct<id, tag>> of BIGINTs: one struct per member a and per
   * tag hb of its larger partners, carrying those partners' ids. Counting distinct
   * partners per (a, hb) after an exchange on a counts distinct pairs
-  * per (ha, hb) without building a pair row. Same capped-group contract
-  * as [[PairStructsExpr]].
+  * per (ha, hb) without building a pair row. The materialized array is
+  * bounded because the caller caps its group FIRST (min_k_distinct):
+  * do not feed this an uncapped set.
   */
 case class TaggedStripesExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -211,8 +170,8 @@ object PostingPairHelpers {
 
 /** `posting_pairs(ps)` → array<struct(doc_a, doc_b, p, na2, nb2)>:
   * canonical co-posting pairs with the tf product and both norms —
-  * one Generate row per surviving pair. Same capped-group contract as
-  * [[PairStructsExpr]] (callers df-cap the posting list first).
+  * one Generate row per surviving pair. The materialized pair array is
+  * bounded because callers df-cap the posting list first.
   */
 case class PostingPairsExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(StructType(Seq(
@@ -238,35 +197,6 @@ case class PostingPairsExpr(child: Expression) extends UnaryExpression {
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, a => s"graft.functions.PostingPairHelpers.postingPairs($a)")
   override def prettyName: String = "posting_pairs"
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
-/** `pair_structs(items)` → array<struct(ia, ib)>: every unordered
-  * pair of the input's long elements, canonically ordered (ia < ib).
-  *
-  * Versus the double-explode idiom (`explode(items)` × 2 + `ia < ib`
-  * filter) this emits exactly n(n-1)/2 rows instead of flowing n² rows
-  * and filtering half, and the subsequent `explode` of the struct
-  * array stays inside codegen (a custom Generator would push the whole
-  * Generate operator to CodegenFallback). The materialized pair array
-  * is bounded because every caller caps its group size FIRST (60-item
-  * CF histories, basket sizes, df-capped postings) — do not feed this
-  * an uncapped set.
-  */
-case class PairStructsExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("ia", LongType, nullable = false),
-    StructField("ib", LongType, nullable = false))), containsNull = false)
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case t => TypeCheckResult.TypeCheckFailure(
-      s"pair_structs expects ARRAY<BIGINT>, got ${t.sql}")
-  }
-  override def nullSafeEval(a: Any): Any =
-    PairHelpers.pairStructs(a.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.PairHelpers.pairStructs($a)")
   override protected def withNewChildInternal(c: Expression): Expression =
     copy(child = c)
 }

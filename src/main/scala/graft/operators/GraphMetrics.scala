@@ -20,7 +20,7 @@ import graft.{Op, Tables}
 object GraphMetrics {
 
   private[graft] def edges(spark: SparkSession, dir: String): DataFrame =
-    Interactions.empiricEdges(spark, dir) // canonical src < dst, distinct
+    Interactions.empiricEdges(spark, dir) // canonical src < dst, each once
 
   /** Degree per node (undirected). */
   def graphDegrees(spark: SparkSession, dir: String): DataFrame = {
@@ -902,10 +902,10 @@ object GraphMetrics {
     * path-enumerating.
     */
   private[graft] def weightedEdges(spark: SparkSession, dir: String): DataFrame =
-    Interactions.interactionPairsCanon(spark, dir)
-      .groupBy(col("a_caid"), col("b_caid")).agg(count(lit(1)).as("cnt"))
-      .select(col("a_caid").as("src"), col("b_caid").as("dst"),
-        when(col("cnt") >= 3, 1L).when(col("cnt") === 2, 2L)
+    // co is the pair's co-location multiplicity: the (cell, tw) groups it met in
+    Interactions.coLocated(spark, dir)
+      .select(col("ia").as("src"), col("ib").as("dst"),
+        when(col("co") >= 3, 1L).when(col("co") === 2, 2L)
           .otherwise(3L).as("cost"))
 
   def ssspBounded(spark: SparkSession, dir: String, rounds: Int = 3): DataFrame = {
@@ -1020,7 +1020,9 @@ object GraphMetrics {
     * [[collectAtMost]]; the only estimate is the device gate in front.
     *
     *  1. Gate ([[devicesUnderGate]]): a device universe far past the
-    *     bitset cap goes sparse before the co-location distinct runs.
+    *     bitset cap goes sparse before the co-location pairs are
+    *     counted. Below 1.25 × the cap in events rows (footer row
+    *     counts) the gate runs no job.
     *  2. Fits: the edge list (≤ [[MaxDriverEdges]]) lands on the
     *     driver in one job, so ids, n and d̄ come from it with no
     *     further job and the bitsets are built there
@@ -1070,17 +1072,23 @@ object GraphMetrics {
     if (rows.length <= cap) Some(rows) else None
   }
 
-  /** Graph nodes ⊆ distinct devices in events, and that bound is one
+  /** Graph nodes ⊆ distinct devices in events ≤ events rows. The rows
+    * come from the parquet footers with no job
+    * (`Interactions.eventsFooter`); when they pass the bound, so do the
+    * devices. Otherwise (or with more than `Interactions.FooterFiles`
+    * files, or an unreadable footer) the devices are estimated in one
     * column-pruned scan with no join. False ⇒ no driver route can fit,
-    * so the caller skips even the co-location distinct (at 100 TB it
-    * would otherwise compute the whole distinct only to overflow).
-    * The estimate's default rsd is 5%; the 1.25× margin keeps this
-    * one-sided — a near-cap graph passes and meets the exact bounds
-    * behind it.
+    * so the caller skips even the pair count (at 100 TB it would
+    * otherwise count every pair only to overflow). The estimate's
+    * default rsd is 5%; the 1.25× margin keeps this one-sided — a
+    * near-cap graph passes and meets the exact bounds behind it.
     */
-  private def devicesUnderGate(spark: SparkSession, dir: String): Boolean =
-    Tables.events(spark, dir).agg(approx_count_distinct(col("user_id")))
-      .collect()(0).getLong(0) <= MaxBitsetNodes * 1.25
+  private[graft] def devicesUnderGate(spark: SparkSession, dir: String): Boolean = {
+    val bound = MaxBitsetNodes * 1.25
+    Interactions.eventsFooter(spark, dir).exists(_.rows <= bound) ||
+      Tables.events(spark, dir).agg(approx_count_distinct(col("user_id")))
+        .collect()(0).getLong(0) <= bound
+  }
 
   /** Sorted distinct endpoints of a collected edge list. */
   private[graft] def nodeIds(edges: Array[(Long, Long)]): Array[Long] = {

@@ -22,17 +22,23 @@ import graft.{Op, Tables}
   * high-cardinality and bounded-skew by construction: presence is
   * grouped by it in one shuffle, and each group keeps at most
   * [[GroupCap]] devices in its aggregation buffer, so a poisoned key
-  * costs O(GroupCap) and the pairs of a group are built from that
-  * capped set.
+  * costs O(GroupCap). The bucket origin comes from the events' parquet
+  * footers ([[originMicros]]; one collect only when they lack `ts`
+  * statistics), never from a broadcast or a window.
+  *
+  * The co-location family (interaction pairs, empiric edges, the graph
+  * metrics' weighted edges) reads one pair source, [[coLocated]]: the
+  * capped groups are counted per anchor device by
+  * `Recommend.pairCounts`, so no pair row and no pair distinct exists.
+  * Isolated devices need no pairs at all.
   *
   * The contact matrix (observed contacts, sizes, total vs observed) is
-  * not a lazy plan: [[contactCounts]] reads the bucket origin from the
-  * events' parquet footers (one collect only when they lack `ts`
-  * statistics), runs [[contactCountsPass]], one device-keyed chain over
-  * events that counts contacts per anchor device without building pair
-  * rows, and collects |cells|²-bounded counts; the matrix is assembled
-  * from them on the driver as a local relation. R13Spec still checks
-  * the result against the two-join spelling in `InteractionsReference`.
+  * not a lazy plan: [[contactCounts]] reads the same origin, runs
+  * [[contactCountsPass]], one device-keyed chain over events that
+  * counts contacts per anchor device without building pair rows, and
+  * collects |cells|²-bounded counts; the matrix is assembled from them
+  * on the driver as a local relation. R13Spec still checks the result
+  * against the two-join spelling in `InteractionsReference`.
   */
 object Interactions {
 
@@ -40,9 +46,9 @@ object Interactions {
     * table. Buckets are anchored at the GLOBAL MIN timestamp exactly
     * like the reference's `TIME_BUCKET(INTERVAL '600 seconds', ts,
     * min_datetime)` (interaction_queries.py:11-17) — engine-side the
-    * origin is a scalar aggregate broadcast, never a single-partition
-    * window (SURVEY W5), and the dedup rides inside collect_set (see
-    * [[interactionPairs]]).
+    * origin is read from the parquet footers ([[originMicros]]), never a
+    * single-partition window (SURVEY W5), and the dedup rides inside
+    * min_k_distinct (see [[groupedSets]]).
     */
   private[operators] val presenceSql =
     """SELECT DISTINCT user_id AS caid, event_type AS cell,
@@ -64,7 +70,15 @@ object Interactions {
     */
   val GroupCap = 1024
 
-  /** @param guardMetric attach the named `observe` for capped groups.
+  /** The 10-minute bucket of `ts` from the origin in micros (null
+    * without one: no event has a timestamp).
+    */
+  private def bucket(origin: Option[Long]): Column =
+    origin.fold(lit(null).cast("long"))(o => expr(s"(unix_micros(ts) - ${o}L) div 600000000"))
+
+  /** The co-location groups: per (cell, tw), the id-sorted distinct
+    * devices present (`caids`), at least 2 and at most [[GroupCap]].
+    * @param guardMetric attach the named `observe` for capped groups.
     *   Only the REGISTERED query root may set it: a named observation
     *   appearing in two subtrees of one plan with different results
     *   (e.g. clustering_coefficient joining the pair relation against
@@ -73,33 +87,25 @@ object Interactions {
     *   (the actual OOM guard) and skip only the metric.
     */
   private def groupedSets(spark: SparkSession, dir: String,
-      guardMetric: Boolean): DataFrame = {
-    // No pre-distinct on presence either: collect_SET dedups caids per
+      guardMetric: Boolean): DataFrame =
+    // No pre-distinct on presence: min_k_distinct dedups caids per
     // (cell, tw) during partial aggregation, so a presence distinct
-    // exchange would be pure overhead — map-side set-merge ships the
-    // same bytes, one stage earlier (r2: one exchange fewer than r1 at
-    // every scale).
-    val ev = Tables.events(spark, dir)
-    val origin = ev.agg(min(col("ts")).as("origin_ts"))
-    val grouped = ev.crossJoin(broadcast(origin))
-      .select(
-        col("user_id").as("caid"),
-        col("event_type").as("cell"),
-        expr("(unix_micros(ts) - unix_micros(origin_ts)) div 600000000").as("tw"))
+    // exchange would be pure overhead.
+    Tables.events(spark, dir)
+      .select(col("user_id").as("caid"), col("event_type").as("cell"),
+        bucket(originMicros(spark, dir)).as("tw"))
       .groupBy(col("cell"), col("tw"))
       // Group-size guard, IN the aggregation buffer: co-location
       // physics bounds how many devices share one ~0.5 m cell within
       // 10 minutes, but a POISONED hot key (stuck sensor, default
-      // coordinate) would blow both the collect buffer and the n²
-      // in-group explode. min_k_distinct keeps the GroupCap+1 smallest
-      // distinct caids in O(cap) memory — the k-th+1 element only
-      // proves overflow; the slice below drops it — so the kept subset
-      // is the same deterministic sorted prefix the old
-      // collect_set→sort→slice spelling produced, without ever
-      // materializing the poisoned set. The overflow stays observable
-      // through the named metric so production degrades loudly. On
-      // sane data (every oracle fixture) the cap is unreachable and
-      // results are byte-identical to collect_set.
+      // coordinate) would blow both the buffer and the n² pairs of the
+      // group. min_k_distinct keeps the GroupCap+1 smallest distinct
+      // caids in O(cap) memory — the k-th+1 element only proves
+      // overflow; the slice below drops it — so the kept subset is a
+      // deterministic sorted prefix, and the poisoned set is never
+      // materialized. The overflow stays observable through the named
+      // metric so production degrades loudly. On sane data (every
+      // oracle fixture) the cap is unreachable.
       .agg(call_function("min_k_distinct", col("caid"), lit(GroupCap + 1))
         .as("caids"))
       .where(size(col("caids")) >= 2)
@@ -110,56 +116,37 @@ object Interactions {
       .withColumn("caids",
         when(size(col("caids")) <= lit(GroupCap), col("caids"))
           .otherwise(slice(col("caids"), 1, GroupCap)))
-    grouped
-  }
 
-  /** Co-located pair occurrences in BOTH directions (one row per
-    * ordered pair per co-location event): consumers that aggregate
-    * per-direction (observed contacts' home enrichment) read this.
+  /** The co-location family's one pair source: (ia, ib, co) for every
+    * canonical (ia < ib) pair of devices that met, with co the number
+    * of (cell, tw) groups they met in. The groups' `caids` are
+    * id-sorted and distinct, so `Recommend.pairCounts` counts each pair
+    * once per group after one exchange on the anchor device: no pair
+    * row is built and no pair distinct runs.
     */
-  private[operators] def interactionPairsRaw(spark: SparkSession, dir: String,
+  private[operators] def coLocated(spark: SparkSession, dir: String,
       guardMetric: Boolean = false): DataFrame =
-    groupedSets(spark, dir, guardMetric)
-      .select(explode(col("caids")).as("a_caid"), col("caids"))
-      .select(col("a_caid"), explode(col("caids")).as("b_caid"))
-      .where(col("a_caid") =!= col("b_caid"))
-
-  /** Canonical (a < b) co-located pair occurrences: half the explode
-    * output and half the downstream distinct's shuffle volume; callers
-    * that need both directions mirror AFTER deduplication (a narrow
-    * union — no extra exchange at any scale).
-    */
-  private[operators] def interactionPairsCanon(spark: SparkSession, dir: String,
-      guardMetric: Boolean = false): DataFrame =
-    // pair_structs emits exactly n(n-1)/2 canonical pairs per group in
-    // one codegen'd kernel — the double-explode + a<b idiom flowed
-    // n(n-1) rows through two Generates and discarded half (the
-    // item-item CF pair counts measurement; up to ~0.5M wasted rows per
-    // capped group)
-    groupedSets(spark, dir, guardMetric)
-      .select(explode(call_function("pair_structs", col("caids"))).as("p"))
-      .select(col("p.ia").as("a_caid"), col("p.ib").as("b_caid"))
+    Recommend.pairCounts(
+      groupedSets(spark, dir, guardMetric).select(col("caids").as("items")), 1)
 
   /** J1: distinct co-located (a_caid, b_caid) pairs (both directions,
     * matching the reference's `a.caid != b.caid` with no canonical
     * ordering — interaction_queries.py:21-28).
     *
-    * Implemented as ONE shuffle on (cell, tw): group to a caid set per
-    * co-location key, pair within the group with `pair_structs`, then
-    * one pair distinct. The naive self-join needs either a broadcast of
+    * ONE shuffle on (cell, tw) groups the devices of each co-location
+    * key, and one on the anchor device counts their pairs
+    * ([[coLocated]]). The naive self-join needs either a broadcast of
     * the whole presence table (impossible at 100 TB) or two more
     * shuffles; this shape scales because group sizes are physically
-    * bounded (devices co-present in one ~0.5 m cell within 10 minutes),
-    * so the n² pairs per group are O(1) per key and skew-free by
-    * construction.
+    * bounded (devices co-present in one ~0.5 m cell within 10 minutes).
     */
   def interactionPairs(spark: SparkSession, dir: String): DataFrame =
     // one explode (not a self-union) mirrors the canonical pairs, so
-    // the distinct subtree is evaluated exactly once
-    interactionPairsCanon(spark, dir, guardMetric = true).distinct()
+    // the pair source is evaluated exactly once
+    coLocated(spark, dir, guardMetric = true)
       .select(explode(array(
-        struct(col("a_caid"), col("b_caid")),
-        struct(col("b_caid").as("a_caid"), col("a_caid").as("b_caid")))).as("p"))
+        struct(col("ia").as("a_caid"), col("ib").as("b_caid")),
+        struct(col("ib").as("a_caid"), col("ia").as("b_caid")))).as("p"))
       .select(col("p.a_caid"), col("p.b_caid"))
 
   private val interactionPairsSql =
@@ -220,23 +207,34 @@ object Interactions {
     }
 
   /** At most this many events files have their footers read on the
-    * driver; a wider table pays the one-job collect instead.
+    * driver; a wider table pays a one-job collect or estimate instead.
     */
-  private val FooterFiles = 64
+  private[graft] val FooterFiles = 64
 
-  /** `originMicros` from the parquet footers of the events files,
-    * converted as [[Tables.events]] converts `ts`: a LongType `ts`
-    * (TIMESTAMP(NANOS) read as epoch nanos) is `div 1000`, a TIMESTAMP
-    * of MILLIS or MICROS is widened to micros. Some(None) when every
-    * row group's statistics show no non-null `ts` (or there is no row
-    * group). None, so the caller collects, when a file lacks `ts`
-    * statistics, `ts` is not INT64 (INT96) or another type, a minimum
-    * lies before 1900 (where Spark may rebase or reject legacy
-    * calendar values on read), there are more than [[FooterFiles]]
-    * files, or a footer cannot be read.
+  /** What the events files' parquet footers prove with no Spark job:
+    * `rows`, the row count (an upper bound on the devices), and
+    * `origin`, the bucket origin when the `ts` statistics prove it
+    * ([[eventsFooter]]).
     */
+  private[graft] final case class EventsFooter(rows: Long, origin: Option[Option[Long]])
+
+  /** `originMicros` from the parquet footers of the events files. */
   private[graft] def footerOriginMicros(spark: SparkSession,
-      dir: String): Option[Option[Long]] = try {
+      dir: String): Option[Option[Long]] = eventsFooter(spark, dir).flatMap(_.origin)
+
+  /** The events files' footers, read once for both facts. The origin
+    * is converted as [[Tables.events]] converts `ts`: a LongType `ts`
+    * (TIMESTAMP(NANOS) read as epoch nanos) is `div 1000`, a TIMESTAMP
+    * of MILLIS or MICROS is widened to micros. It is Some(None) when
+    * every row group's statistics show no non-null `ts` (or there is no
+    * row group), and None, so the caller collects, when a row group
+    * lacks `ts` statistics, `ts` is not INT64 (INT96) or another type,
+    * or a minimum lies before 1900 (where Spark may rebase or reject
+    * legacy calendar values on read). None when there are more than
+    * [[FooterFiles]] files or a footer cannot be read.
+    */
+  private[graft] def eventsFooter(spark: SparkSession,
+      dir: String): Option[EventsFooter] = try {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.metadata.ColumnChunkMetaData
     import org.apache.parquet.hadoop.util.HadoopInputFile
@@ -271,14 +269,16 @@ object Interactions {
     if (files.length > FooterFiles) None
     else {
       val conf = spark.sessionState.newHadoopConf()
-      val mins = files.toSeq.flatMap { f =>
+      val blocks = files.toSeq.flatMap { f =>
         val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
           new org.apache.hadoop.fs.Path(new java.net.URI(f)), conf))
-        try reader.getFooter.getBlocks.asScala.toSeq.map(b =>
+        try reader.getFooter.getBlocks.asScala.toSeq.map(b => b.getRowCount ->
           b.getColumns.asScala.find(_.getPath.toDotString == "ts").flatMap(rowGroupMin))
         finally reader.close()
       }
-      if (mins.contains(None)) None else Some(mins.flatten.flatten.minOption)
+      val mins = blocks.map(_._2)
+      Some(EventsFooter(blocks.map(_._1).sum,
+        if (mins.contains(None)) None else Some(mins.flatten.flatten.minOption)))
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
@@ -330,12 +330,10 @@ object Interactions {
     */
   private[graft] def contactCountsPass(spark: SparkSession, dir: String,
       origin: Option[Long], code: Column => Column = cellCode): DataFrame = {
-    val tw = origin.fold(lit(null).cast("long"))(o =>
-      expr(s"(unix_micros(ts) - ${o}L) div 600000000"))
     def coded(c: Column): Column = when(c.isNotNull, code(c))
     val kind = col("kind")
     Tables.events(spark, dir)
-      .select(col("user_id").as("caid"), col("event_type").as("cell"), tw.as("tw"))
+      .select(col("user_id").as("caid"), col("event_type").as("cell"), bucket(origin).as("tw"))
       .repartition(col("caid"))
       .groupBy(col("caid"))
       .agg(call_function("device_presence", col("caid"), col("cell"), col("tw"),
@@ -496,15 +494,11 @@ object Interactions {
 
   /** Empiric network edges
     * (/root/reference/scripts/MakeEmpiricNetworks.py:47-126): canonical
-    * undirected edges via LEAST/GREATEST + distinct over the
-    * co-location pairs.
+    * undirected edges (src < dst), each once — the pairs of
+    * [[coLocated]], which are canonical and distinct already.
     */
   def empiricEdges(spark: SparkSession, dir: String): DataFrame =
-    // canonical a < b occurrences ARE the undirected edges — one
-    // distinct, no least/greatest needed, half the r2 shuffle volume
-    interactionPairsCanon(spark, dir)
-      .select(col("a_caid").as("src"), col("b_caid").as("dst"))
-      .distinct()
+    coLocated(spark, dir).select(col("ia").as("src"), col("ib").as("dst"))
 
   private val empiricEdgesSql =
     s"""WITH pairs AS ($interactionPairsSql)
@@ -517,11 +511,13 @@ object Interactions {
     * MakeEmpiricNetworks.py:64-77 → left_anti).
     */
   def empiricIsolated(spark: SparkSession, dir: String): DataFrame = {
-    // anti-join doesn't care about pair multiplicity — no distinct
-    val pairs = interactionPairsRaw(spark, dir)
+    // a device has a partner exactly when it is in a kept group (every
+    // group holds ≥ 2 distinct devices), so no pair is needed
+    val grouped = groupedSets(spark, dir, guardMetric = false)
+      .select(explode(col("caids")).as("a_caid"))
     Tables.events(spark, dir)
       .select(col("user_id").as("caid")).distinct()
-      .join(pairs, col("caid") === col("a_caid"), "left_anti")
+      .join(grouped, col("caid") === col("a_caid"), "left_anti")
   }
 
   private val empiricIsolatedSql =

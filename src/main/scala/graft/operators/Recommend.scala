@@ -303,9 +303,10 @@ object Recommend {
     val skyX = RangeRank.withRunningMaxDescExclusive(gx, "x",
         col("ymax"), "msp")
       .where(col("msp").isNull || col("ymax") > col("msp"))
-      .select(col("x"), col("ymax"))
-    pts.join(skyX, pts("x") === skyX("x") && pts("y") === skyX("ymax"),
-        "left_semi")
+      .select(col("x").as("sky_x"), col("ymax"))
+    // sky_x names its own attribute: a predicate on pts("x") and a
+    // derived x would resolve both sides to one attribute
+    pts.join(skyX, col("x") === col("sky_x") && col("y") === col("ymax"), "left_semi")
       .select(col("c_custkey"), col("x").as("acctbal"),
         col("y").cast("double").as("total_spend"))
   }

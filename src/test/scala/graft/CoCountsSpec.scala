@@ -16,7 +16,7 @@ import graft.operators.{PairCountsReference => Ref, Recommend}
 /** Anchor-keyed pair counting: `Recommend.pairCounts` (stripes of
   * id-sorted sets, one exchange on the anchor, the `co_counts`
   * aggregate) returns exactly the pair-row counts of
-  * `PairCountsReference` (`pair_structs` + `groupBy(ia, ib).count` +
+  * `PairCountsReference` (double explode + `groupBy(ia, ib).count` +
   * threshold) for any ids, nulls and thresholds, and item_item_cosine
   * and market_basket equal their pair-row plans. Deterministic
   * pseudo-random trials (seeded LCG).

@@ -5,20 +5,23 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.EventsFixtures.eventsDir
 import graft.operators.{GraphMetrics, Interactions}
 
-/** The graph chooser's bounded-collect routes. After the device gate,
-  * every dense-capable graph query proves "the edge list fits on the
-  * driver" with ONE limit(cap+1) collect (GraphMetrics.collectAtMost);
-  * ids, n and d̄ then come from the collected edges and the adjacency
-  * is built on the driver with no further job. Only a graph past
-  * MaxDriverEdges builds its adjacency with the mergeable bitset_agg.
+/** The graph chooser's bounded-collect routes. After the device gate
+  * (footer row counts, else an estimate), every dense-capable graph
+  * query proves "the edge list fits on the driver" with ONE
+  * limit(cap+1) collect (GraphMetrics.collectAtMost); ids, n and d̄
+  * then come from the collected edges and the adjacency is built on
+  * the driver with no further job. Only a graph past MaxDriverEdges
+  * builds its adjacency with the mergeable bitset_agg.
   *
   * These specs pin (a) the Spark jobs that query construction runs,
   * on a 12 000-device fixture of 6 000 disjoint co-location pairs and
-  * for pagerank at sf0.01, and (b) that the two adjacency
-  * constructions give identical ids and bitset words, so the overflow
-  * route, which no fixture reaches, builds what the fits route builds.
+  * for pagerank and sssp_bounded at sf0.01, (b) when the device gate
+  * runs a job, and (c) that the two adjacency constructions give
+  * identical ids and bitset words, so the overflow route, which no
+  * fixture reaches, builds what the fits route builds.
   */
 class GraphChooserSpec extends AnyFunSuite {
 
@@ -69,11 +72,12 @@ class GraphChooserSpec extends AnyFunSuite {
     } finally sc.removeSparkListener(listener)
   }
 
-  test("graph_components on 12k devices: closed form, built in <= 7 Spark jobs") {
-    // device gate, then one bounded edge collect; n = 12000 ≤ the
-    // bitset cap and acceptDense = always for components ⇒ dense
+  test("graph_components on 12k devices: closed form, built in <= 5 Spark jobs") {
+    // device gate and origin from the footers, then one bounded edge
+    // collect; n = 12000 ≤ the bitset cap and acceptDense = always for
+    // components ⇒ dense
     val (df, jobs) = jobsToBuild(fixture)(GraphMetrics.graphComponents(spark, _))
-    assert(jobs <= 7, s"graphComponents construction ran $jobs Spark jobs")
+    assert(jobs <= 5, s"graphComponents construction ran $jobs Spark jobs")
     val rows = df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(rows.length == 2 * Pairs)
     // closed form: component of {2i, 2i+1} is 2i, size 2
@@ -83,10 +87,38 @@ class GraphChooserSpec extends AnyFunSuite {
     }
   }
 
-  test("pagerank at sf0.01: built in <= 7 Spark jobs") {
+  test("pagerank at sf0.01: built in <= 3 Spark jobs") {
+    // gate and origin from the footers; the edge collect is the
+    // (cell, tw) stage, the anchor stage and the result stage
     val (df, jobs) = jobsToBuild("/root/testdata/sf0.01")(GraphMetrics.pagerank(spark, _))
-    assert(jobs <= 7, s"pagerank construction ran $jobs Spark jobs")
+    assert(jobs <= 3, s"pagerank construction ran $jobs Spark jobs")
     assert(df.count() > 0)
+  }
+
+  test("sssp_bounded at sf0.01: built in <= 3 Spark jobs") {
+    // as pagerank: the weighted edges' bounded collect only
+    val (df, jobs) = jobsToBuild("/root/testdata/sf0.01")(GraphMetrics.ssspBounded(spark, _))
+    assert(jobs <= 3, s"ssspBounded construction ran $jobs Spark jobs")
+    assert(df.count() > 0)
+  }
+
+  test("device gate: no job under the footer row bound; the estimate runs past it") {
+    def gate(dir: String) = jobsToBuild(dir)(GraphMetrics.devicesUnderGate(spark, _))
+    // 10 000 events rows ≤ 1.25 × MaxBitsetNodes: no device can be over
+    assert(gate("/root/testdata/sf0.01") == (true, 0))
+    // every footer holds its row counts, with or without ts statistics
+    assert(gate(eventsDir("MICROS", (Seq(Some(5L)), true), (Seq(Some(1L), None), false)))
+      == (true, 0))
+    // more files than FooterFiles: the footers are not read
+    val (wide, wideJobs) = gate(eventsDir("MICROS",
+      Seq.fill(Interactions.FooterFiles + 1)((Seq(Some(1L)), true)): _*))
+    assert(wide && wideJobs > 0, s"$wideJobs jobs")
+    // 100 000 rows at sf0.1 are past the bound, its 1 500 devices are not
+    val (sf01, sf01Jobs) = gate("/root/testdata/sf0.1")
+    assert(sf01 && sf01Jobs > 0, s"$sf01Jobs jobs")
+    // 50 000 devices are past the bound: the estimate says so
+    val (many, manyJobs) = gate(eventsDir("MICROS", (Seq.fill(50000)(Some(1L)), true)))
+    assert(!many && manyJobs > 0, s"$manyJobs jobs")
   }
 
   test("driver-built and bitset_agg-built adjacency agree: sf0.001 and 12k fixture") {

@@ -1,16 +1,12 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.graftspec.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.EventsFixtures.eventsDir
 import graft.operators.Interactions
 
 /** The bucket origin `unix_micros(MIN(ts))` read from the events'
@@ -40,27 +36,6 @@ class OriginFooterSpec extends AnyFunSuite {
       ListenerBusDrain(sc)
       jobs.get
     } finally sc.removeSparkListener(listener)
-  }
-
-  /** An events table of one parquet file per entry of `files`: raw INT64
-    * `ts` values in `unit` (None is a null), each file with or without
-    * column statistics.
-    */
-  private def eventsDir(unit: String, files: (Seq[Option[Long]], Boolean)*): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-origin").toString
-    val schema = MessageTypeParser.parseMessageType(
-      s"message events { required int64 event_id; optional int64 ts (TIMESTAMP($unit,true)); }")
-    val rows = new SimpleGroupFactory(schema)
-    files.zipWithIndex.foreach { case ((ts, stats), f) =>
-      val w = ExampleParquetWriter.builder(new Path(s"$dir/events.parquet/part-$f.parquet"))
-        .withType(schema).withConf(new Configuration()).withStatisticsEnabled(stats).build()
-      try ts.zipWithIndex.foreach { case (t, i) =>
-        val g = rows.newGroup().append("event_id", i.toLong)
-        t.foreach(g.append("ts", _))
-        w.write(g)
-      } finally w.close()
-    }
-    dir
   }
 
   /** The origin as the one-row collect computes it. */

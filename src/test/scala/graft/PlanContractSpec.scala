@@ -7,7 +7,7 @@ import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{GenerateExec, SortExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper, QueryStageExec}
 import org.apache.spark.sql.execution.aggregate.{BaseAggregateExec, ObjectHashAggregateExec}
-import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.types.{LongType, StringType}
 import org.scalatest.funsuite.AnyFunSuite
@@ -57,16 +57,28 @@ class PlanContractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         h.expressions.map { case a: Attribute => a.name; case x => x.sql }
       }
 
+  /** The co-location pair source, node for node: the origin comes
+    * from the footers, so nothing is broadcast; events shuffle once, on
+    * (cell, tw), and the pairs are counted per anchor after one
+    * exchange on ia ([[assertAnchorKeyedCounts]]).
+    */
+  private def assertPairSource(name: String): SparkPlan = {
+    val tree = assertAnchorKeyedCounts(name, Seq("cell", "tw"), sf)
+    val p = finalText(tree)
+    assert(collect(tree) { case b: BroadcastExchangeLike => b }.isEmpty,
+      "no broadcast:\n" + p.take(3000))
+    val keys = hashExchangeKeys(tree)
+    assert(keys.count(_ == Seq("cell", "tw")) == 1, s"one (cell, tw) exchange: $keys")
+    tree
+  }
+
   test("interaction_pairs: one corpus shuffle, no fact-table broadcast") {
-    val p = finalPlan("interaction_pairs")
-    // the (cell, tw) grouping is the only exchange that carries the
-    // events fact table; the pair-level distinct adds its own, and
-    // nothing corpus-sized is ever broadcast
-    assert(count(p, "Exchange hashpartitioning(cell") == 1, p.take(2000))
-    // the only broadcast is the 1-row global-MIN origin (W5 pattern)
-    assert(count(p, "BroadcastExchange") == 1
-      && p.contains("BroadcastExchange IdentityBroadcastMode"),
-      "only the scalar origin row may broadcast — never the fact table")
+    assertPairSource("interaction_pairs")
+  }
+
+  test("empiric_edges: one corpus shuffle, pairs counted per anchor, no edge distinct") {
+    val keys = hashExchangeKeys(assertPairSource("empiric_edges"))
+    assert(!keys.contains(Seq("src", "dst")), s"no exchange on (src, dst): $keys")
   }
 
   test("observed_contacts: one per-device pass, no join, counts per anchor device") {
@@ -469,8 +481,9 @@ class PlanContractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     * `setKey`. No exchange carries a pair key (`pk` or (ia, ib)) and no
     * Generate runs a pair kernel: pair rows never exist.
     */
-  private def assertAnchorKeyedCounts(name: String, setKey: String): Unit = {
-    val tree = finalTree(name, sf01)
+  private def assertAnchorKeyedCounts(name: String, setKey: Seq[String],
+      sfDir: String = sf01): SparkPlan = {
+    val tree = finalTree(name, sfDir)
     val p = finalText(tree)
     val coAggs = collect(tree) {
       case a: ObjectHashAggregateExec
@@ -483,7 +496,7 @@ class PlanContractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
         hashKeys(anchor.head) == Seq("ia"),
         s"co_counts reads one hash exchange on ia: ${anchor.map(hashKeys)}\n" + p.take(3000))
       val sets = nearestExchanges(anchor.head)
-      assert(sets.size == 1 && hashKeys(sets.head) == Seq(setKey),
+      assert(sets.size == 1 && hashKeys(sets.head) == setKey,
         s"the ia exchange reads the $setKey-keyed sets exchange: ${sets.map(hashKeys)}\n" +
           p.take(3000))
     }
@@ -494,14 +507,15 @@ class PlanContractSpec extends AnyFunSuite with AdaptiveSparkPlanHelper {
     val generators = collect(tree) { case g: GenerateExec => g.generator.toString }
     assert(!generators.exists(g => pairKernels.exists(g.contains)),
       s"no Generate over a pair kernel: $generators")
+    tree
   }
 
   test("item_item_cosine: one ia exchange feeds co_counts, no pair rows") {
-    assertAnchorKeyedCounts("item_item_cosine", "u")
+    assertAnchorKeyedCounts("item_item_cosine", Seq("u"))
   }
 
   test("market_basket: one ia exchange feeds co_counts, no pair rows") {
-    assertAnchorKeyedCounts("market_basket", "okey")
+    assertAnchorKeyedCounts("market_basket", Seq("okey"))
   }
 
   test("grouped_topk_agg: bounded-heap agg — no window, no sort of the input") {

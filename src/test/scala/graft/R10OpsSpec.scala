@@ -20,19 +20,7 @@ class R10OpsSpec extends AnyFunSuite {
     s
   }
 
-  /** Events fixture with `n` distinct devices in ONE (cell, tw) group —
-    * the stuck-sensor / default-coordinate poisoning scenario.
-    */
-  private def hotCellFixture(n: Int): String = {
-    import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("r10hot").toString
-    (1 to n).map(i => (i.toLong, 0L, i.toLong, "hot", 1.0))
-      .toDF("event_id", "ts_s", "user_id", "event_type", "value")
-      .withColumn("ts", timestamp_seconds(col("ts_s"))).drop("ts_s")
-      .withColumn("props", lit("{}"))
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    dir
-  }
+  private def hotCellFixture(n: Int): String = EventsFixtures.hotCell(spark, n)
 
   test("interaction_pairs guard: poisoned hot cell degrades to the cap, loudly") {
     val over = Interactions.GroupCap + 476

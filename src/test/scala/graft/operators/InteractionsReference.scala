@@ -2,9 +2,69 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Tables
 
-/** Spellings of the interactions operators that only specs use. */
+/** Spellings of the interactions operators that only specs use: the
+  * pair-row plans that anchor-keyed counting (`Interactions.coLocated`)
+  * replaced. The origin is the broadcast `MIN(ts)` row and the pairs of
+  * each capped (cell, tw) group come from a double explode.
+  */
 object InteractionsReference {
+
+  /** Per (cell, tw), the GroupCap smallest distinct devices, groups of
+    * at least 2 devices only.
+    */
+  def groupedSets(spark: SparkSession, dir: String): DataFrame = {
+    val ev = Tables.events(spark, dir)
+    val origin = ev.agg(min(col("ts")).as("origin_ts"))
+    ev.crossJoin(broadcast(origin))
+      .select(col("user_id").as("caid"), col("event_type").as("cell"),
+        expr("(unix_micros(ts) - unix_micros(origin_ts)) div 600000000").as("tw"))
+      .groupBy(col("cell"), col("tw"))
+      .agg(call_function("min_k_distinct", col("caid"), lit(Interactions.GroupCap + 1))
+        .as("caids"))
+      .where(size(col("caids")) >= 2)
+      .withColumn("caids", slice(col("caids"), 1, Interactions.GroupCap))
+  }
+
+  /** Co-located pair occurrences in both directions: one row per
+    * ordered pair per group.
+    */
+  def rawPairs(spark: SparkSession, dir: String): DataFrame =
+    groupedSets(spark, dir)
+      .select(explode(col("caids")).as("a_caid"), col("caids"))
+      .select(col("a_caid"), explode(col("caids")).as("b_caid"))
+      .where(col("a_caid") =!= col("b_caid"))
+
+  /** Canonical (a < b) co-located pair occurrences: one row per pair
+    * per group.
+    */
+  def canonicalPairs(spark: SparkSession, dir: String): DataFrame =
+    rawPairs(spark, dir).where(col("a_caid") < col("b_caid"))
+
+  /** interaction_pairs: the distinct canonical pairs, mirrored. */
+  def interactionPairs(spark: SparkSession, dir: String): DataFrame = {
+    val c = canonicalPairs(spark, dir).distinct()
+    c.unionByName(c.select(col("b_caid").as("a_caid"), col("a_caid").as("b_caid")))
+  }
+
+  def empiricEdges(spark: SparkSession, dir: String): DataFrame =
+    canonicalPairs(spark, dir).select(col("a_caid").as("src"), col("b_caid").as("dst"))
+      .distinct()
+
+  /** empiric_isolated: the devices with no partner in any pair row. */
+  def empiricIsolated(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).select(col("user_id").as("caid")).distinct()
+      .join(rawPairs(spark, dir), col("caid") === col("a_caid"), "left_anti")
+
+  /** `GraphMetrics.weightedEdges`: the cost of a canonical pair from
+    * its pair-row count.
+    */
+  def weightedEdges(spark: SparkSession, dir: String): DataFrame =
+    canonicalPairs(spark, dir)
+      .groupBy(col("a_caid"), col("b_caid")).agg(count(lit(1)).as("cnt"))
+      .select(col("a_caid").as("src"), col("b_caid").as("dst"),
+        when(col("cnt") >= 3, 1L).when(col("cnt") === 2, 2L).otherwise(3L).as("cost"))
 
   /** Observed contacts per (a_home, b_home) in the r2–r6 two-join
     * spelling, kept as the reference of the equivalence spec (R13Spec):
@@ -29,7 +89,7 @@ object InteractionsReference {
     // halved shuffle wins, and both shapes are linear in the pair
     // count at any scale. The r7 fused spelling mirrors at the MATRIX
     // level instead, where the mirror is free.)
-    val pairs = Interactions.interactionPairsRaw(spark, dir)
+    val pairs = rawPairs(spark, dir)
     val homes = Interactions.homeCells(spark, dir)
     pairs
       .join(homes.withColumnRenamed("caid", "a_caid")

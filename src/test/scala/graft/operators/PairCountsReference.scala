@@ -7,8 +7,8 @@ import graft.Tables
 
 /** The pair-row plans that anchor-keyed counting (`Recommend.pairCounts`
   * over `co_counts`) replaced, kept as the reference it is compared
-  * against: every a < b pair of a set is one `pair_structs` row, the
-  * rows are exchanged on (ia, ib) and counted by a hash aggregate.
+  * against: every a < b pair of a set is one row of a double explode,
+  * the rows are exchanged on (ia, ib) and counted by a hash aggregate.
   */
 object PairCountsReference {
 
@@ -17,8 +17,9 @@ object PairCountsReference {
     */
   def pairCounts(sets: DataFrame, minCount: Int): DataFrame =
     sets
-      .select(explode(call_function("pair_structs", col("items"))).as("p"))
-      .select(col("p.ia").as("ia"), col("p.ib").as("ib"))
+      .select(explode(col("items")).as("ia"), col("items"))
+      .select(col("ia"), explode(col("items")).as("ib"))
+      .where(col("ia") < col("ib"))
       .repartition(col("ia"), col("ib"))
       .groupBy(col("ia"), col("ib"))
       .agg(count(lit(1)).as("co"))
