@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -47,13 +49,21 @@ object Bench {
     // 1.54× artifact vs 1.26× quiet-window gap recurs every round)
     val rawTimes = scala.collection.mutable.Map.empty[String, Vector[Double]]
       .withDefaultValue(Vector.empty)
+    // Janino compiles inside each query's timed runs: a warm session
+    // compiles none (SessionsSpec), so a non-zero count is a codegen
+    // cache regression showing in the artifact itself
+    val compiles = scala.collection.mutable.Map.empty[String, Long]
+      .withDefaultValue(0L)
+    def timedRun(op: Op): Double = {
+      val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      val t0 = System.nanoTime()
+      runOnce(op)
+      val t = (System.nanoTime() - t0) / 1e9
+      compiles(op.name) += CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0
+      t
+    }
     val timed = SparkEntry.benchQueries.map { op =>
-      def once(): Double = {
-        val t0 = System.nanoTime()
-        runOnce(op)
-        (System.nanoTime() - t0) / 1e9
-      }
-      var times = (1 to 5).map(_ => once())
+      var times = (1 to 5).map(_ => timedRun(op))
       // a VM stall window can span several of the 5 runs and poison
       // even the min; when the spread says the window was unstable,
       // buy 3 extra runs — each either confirms the min (stable again)
@@ -61,7 +71,7 @@ object Bench {
       // loop: appending runs can only widen max/min, so a re-checked
       // condition could never flip back.
       if (times.min > 0 && times.max / times.min > 2.5)
-        times = times ++ (1 to 3).map(_ => once())
+        times = times ++ (1 to 3).map(_ => timedRun(op))
       rawTimes(op.name) = rawTimes(op.name) ++ times
       val spread = if (times.min > 0) times.max / times.min else Double.NaN
       System.err.println(f"[bench] ${op.name}%-28s min=${times.min}%.3f " +
@@ -105,11 +115,7 @@ object Bench {
         while (attempt < 3 && !stable) {
           attempt += 1
           if (attempt > 1) Thread.sleep(5000)
-          val fresh = (1 to 3).map { _ =>
-            val t0 = System.nanoTime()
-            runOnce(op)
-            (System.nanoTime() - t0) / 1e9
-          }
+          val fresh = (1 to 3).map(_ => timedRun(op))
           rawTimes(name) = rawTimes(name) ++ fresh
           val fs = if (fresh.min > 0) fresh.max / fresh.min else Double.NaN
           stable = fresh.min > 0 && fs <= 2.5
@@ -162,7 +168,9 @@ object Bench {
       s""""$k":{"min":${num(ts.headOption.getOrElse(Double.NaN))},""" +
         s""""med":${num(med)},"spread":${num(sp)},"runs":${ts.size}}"""
     }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","stalled":$stalls,"run_stats":$stats$duckFields}""")
+    val cc = results.map { case (k, _) => "\"" + k + "\":" + compiles(k) }
+      .mkString("{", ",", "}")
+    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","stalled":$stalls,"run_stats":$stats$duckFields,"codegen_compiles":$cc}""")
     spark.stop()
   }
 

@@ -84,5 +84,28 @@ object Sessions {
       // sort-then-stream regime, which keeps ONE active buffer and
       // perfect locality. See BENCH.md.
       .config("spark.ui.enabled", "false")
+      // Janino class cache, one LRU per JVM. Spark's 100 entries are
+      // fewer than the engine's working set: one query_mix pass needs
+      // 102 classes, so every warm pass evicted and compiled 29 again
+      // (then ran them interpreted until the JIT caught up). A cold JVM
+      // compiles 557 classes over the 39 bench queries at sf0.01 plus
+      // one dailyRun; the cap is at least twice the working set, so a
+      // warm session compiles nothing (SessionsSpec). A static conf:
+      // Spark sizes the cache once per JVM, at the first codegen, from
+      // the session active then, so a JVM whose first session was built
+      // elsewhere (spark-shell, say) keeps Spark's 100.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      // Keep the whole-stage codegen id out of the class name. AQE
+      // numbers codegen stages in the order its query stages are
+      // created, which follows whichever concurrent stage finished
+      // first, so with the id in the name one pipeline gets a new class
+      // body, and a cache miss, each time that order changes
+      // (cusum_changepoint, dedup_lsh_eval, market_basket and
+      // radius_of_gyration recompiled on warm runs). The id stays in the
+      // plan (`*(n)`) and in the generated source's comment.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .getOrCreate()
+
+  /** `spark.sql.codegen.cache.maxEntries`, see `build`. */
+  private[graft] val CodegenCacheEntries = 2000
 }

@@ -810,12 +810,14 @@ object Similarity {
     val dtab = e.where(col("vec_id") < 10)
       .select(col("vec_id").as("query_id"), col("v").as("qv"))
       .crossJoin(broadcast(cb))
-      .select(col("query_id"), col("m"), col("k"),
+      .select(col("query_id"), col("m").as("qm"), col("k"),
         l2(sub(col("qv"), col("m")), col("cw")).as("qdist"))
     val wTop = Window.partitionBy(col("query_id"))
       .orderBy(col("adc_dist").asc, col("cand_id").asc)
+    // join on distinct names: `codes("m") === dtab("m")` names one `cb`
+    // attribute on both sides, a trivially true predicate
     codes.join(broadcast(dtab),
-        codes("m") === dtab("m") && codes("code") === dtab("k"))
+        col("m") === col("qm") && col("code") === col("k"))
       .where(col("query_id") =!= col("vec_id"))
       .groupBy(col("query_id"), col("vec_id").as("cand_id"))
       .agg(round(sum_order_free(col("qdist")), 9).as("adc_dist"))

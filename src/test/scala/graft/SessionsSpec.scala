@@ -1,10 +1,15 @@
 package graft
 
+import java.time.LocalDate
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.scalatest.funsuite.AnyFunSuite
+import graft.pipeline.Pipeline
+import graft.pipeline.Pipeline.RunConfig
 
 /** The session config every entry point ships with: the literal AQE and
-  * split-size confs, and shuffle compression derived from where
-  * `spark.local.dir` lives.
+  * split-size confs, shuffle compression derived from where
+  * `spark.local.dir` lives, and a codegen class cache that holds the
+  * engine's working set.
   */
 class SessionsSpec extends AnyFunSuite {
 
@@ -34,5 +39,35 @@ class SessionsSpec extends AnyFunSuite {
     assert(Sessions.isTmpfs("/dev/shm/x"))
     assert(!Sessions.isTmpfs("/dev/shm-backup"))
     assert(!Sessions.isTmpfs("/tmp/x"))
+  }
+
+  test("a warm session compiles no generated class") {
+    assert(spark.conf.get("spark.sql.codegen.cache.maxEntries") ==
+      Sessions.CodegenCacheEntries.toString)
+    assert(spark.conf.get("spark.sql.codegen.useIdInClassName") == "false")
+    val sf = "/root/testdata/sf0.001"
+    val cfg = RunConfig(sf, LocalDate.of(2024, 1, 20))
+    def noop(df: org.apache.spark.sql.DataFrame): Unit =
+      df.write.format("noop").mode("overwrite").save()
+    // (name, Janino compiles) for every bench query and a daily run
+    def round(): Seq[(String, Long)] = {
+      def compiled(name: String)(f: => Unit): (String, Long) = {
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        f
+        name -> (CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+      }
+      SparkEntry.benchQueries.map(op => compiled(op.name)(noop(op.run(spark, sf)))) :+
+        compiled("dailyRun") {
+          val (matrix, vertices, edges, status) =
+            Pipeline.dailyRun(spark, cfg, seeds = 0 until 3)
+          Seq(matrix, vertices, edges, status).foreach(noop)
+          noop(graft.sim.Seir.infectedPerBlock(status, vertices.selectExpr(
+            "CAST(node_id AS LONG) AS nodeId", "attrs['block'] AS block")))
+        }
+    }
+    round()
+    val warm = round().filter(_._2 > 0)
+    assert(warm.isEmpty, s"${warm.map(_._2).sum} classes compiled on the warm round: " +
+      warm.map { case (n, c) => s"$n=$c" }.mkString(", "))
   }
 }
