@@ -38,7 +38,4 @@ object CrossHash {
     */
   def timeBucketId(ts: Column, seconds: Long): Column =
     floor(unix_micros(ts) / (seconds * 1000000L)).cast("long")
-
-  def timeBucketIdSql(expr: String, seconds: Long): String =
-    s"CAST(floor(epoch_us($expr) / ${seconds * 1000000L}.0) AS BIGINT)"
 }

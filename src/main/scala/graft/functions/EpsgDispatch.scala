@@ -5,20 +5,18 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 
-/** EPSG-code → projection-kernel dispatch (r9, VERDICT r8 #5): the
-  * last reference-capability delta. The reference re-projects ANY CRS
-  * through geopandas (`to_crs("EPSG:4326")`,
-  * RadiusOfGyrationHandler.py:73-85); the engine has parameterized
-  * kernels for all three projection families real catalogs arrive in
-  * — conic ([[Lcc2sp]]), cylindrical ([[TmHelpers]] UTM/WebMercator),
-  * polar ([[PolarStereoNorth]]/[[PolarStereoSouth]]) — but until now
-  * a user had to pick the kernel by hand. [[EpsgRegistry.resolve]]
+/** EPSG-code → projection-kernel dispatch (r9): the engine's one CRS
+  * projection surface. The reference re-projects ANY CRS through
+  * geopandas (`to_crs("EPSG:4326")`, RadiusOfGyrationHandler.py:73-85);
+  * the engine has parameterized kernels for all three projection
+  * families real catalogs arrive in — conic ([[Lcc2sp]]), cylindrical
+  * ([[TmHelpers]] UTM/WebMercator), polar
+  * ([[PolarStereoNorth]]/[[PolarStereoSouth]]). [[EpsgRegistry.resolve]]
   * maps the common published codes onto those kernels behind ONE
   * uniform (lon,lat)↔(e,n) surface, and the `crs_epsg_*` expression
-  * family resolves the code ONCE at plan time (foldable-literal
-  * first argument, the [[LccCrsExpr]]/[[PsCrsExpr]] discipline), so
-  * per-row work is the same codegen'd straight-line math as the
-  * family-specific expressions.
+  * family resolves the code ONCE at plan time (foldable-literal first
+  * argument), so per-row work is one codegen'd call into the kernel
+  * object. Every CRS query in operators.Spatial projects through it.
   *
   * Covered codes (all parameters from the public EPSG registry):
   *   - 6365  Mexico ITRF2008 / LCC (the reference's catalog CRS)
@@ -38,22 +36,6 @@ trait PlanarCrs extends Serializable {
   def northing(lon: Double, lat: Double): Double
   def lonOf(easting: Double, northing: Double): Double
   def latOf(easting: Double, northing: Double): Double
-}
-
-/** Conic family member: delegates to a registered [[Lcc2sp]]. */
-final class LccPlanar(val p: Lcc2sp) extends PlanarCrs {
-  def easting(lon: Double, lat: Double): Double = p.easting(lon, lat)
-  def northing(lon: Double, lat: Double): Double = p.northing(lon, lat)
-  def lonOf(e: Double, n: Double): Double = p.lonOf(e, n)
-  def latOf(e: Double, n: Double): Double = p.latOf(e, n)
-}
-
-/** Polar family member: delegates to a registered aspect kernel. */
-final class PsPlanar(val p: PolarStereoProj) extends PlanarCrs {
-  def easting(lon: Double, lat: Double): Double = p.easting(lon, lat)
-  def northing(lon: Double, lat: Double): Double = p.northing(lon, lat)
-  def lonOf(e: Double, n: Double): Double = p.lonOf(e, n)
-  def latOf(e: Double, n: Double): Double = p.latOf(e, n)
 }
 
 /** Cylindrical family member: WGS84 UTM zone, either hemisphere.
@@ -87,10 +69,10 @@ object EpsgRegistry {
     * a typo'd code never reaches execution).
     */
   def resolve(code: Int): PlanarCrs = code match {
-    case 6365 => new LccPlanar(CrsRegistry.Epsg6365)
-    case 3347 => new LccPlanar(CrsRegistry.Epsg3347)
-    case 3413 => new PsPlanar(PolarStereoRegistry.Epsg3413)
-    case 3976 => new PsPlanar(PolarStereoRegistry.Epsg3976)
+    case 6365 => CrsRegistry.Epsg6365
+    case 3347 => CrsRegistry.Epsg3347
+    case 3413 => PolarStereoRegistry.Epsg3413
+    case 3976 => PolarStereoRegistry.Epsg3976
     case 3857 => WebMercPlanar
     case z if z >= 32601 && z <= 32660 => new UtmPlanar(z - 32600, south = false)
     case z if z >= 32701 && z <= 32760 => new UtmPlanar(z - 32700, south = true)

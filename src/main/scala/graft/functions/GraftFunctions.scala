@@ -97,14 +97,6 @@ object GraftFunctions {
         DevicePresenceAgg(es(0), es(1), es(2), cap.asInstanceOf[Number].intValue())
           .toAggregateExpression()
       }),
-    ("lcc_easting", "lcc_easting(lon, lat) - EPSG:6365 forward easting (m)",
-      es => LccEastingExpr(es(0), es(1))),
-    ("lcc_northing", "lcc_northing(lon, lat) - EPSG:6365 forward northing (m)",
-      es => LccNorthingExpr(es(0), es(1))),
-    ("lcc_lon", "lcc_lon(easting, northing) - EPSG:6365 inverse longitude (deg)",
-      es => LccLonExpr(es(0), es(1))),
-    ("lcc_lat", "lcc_lat(easting, northing) - EPSG:6365 inverse latitude (deg)",
-      es => LccLatExpr(es(0), es(1))),
     ("cuts_bucket", "cuts_bucket(key, cuts, asc) - binary-search range bucket over literal sorted cuts",
       es => {
         require(es(1).foldable && es(2).foldable,
@@ -116,38 +108,6 @@ object GraftFunctions {
           arr.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray(),
           asc.asInstanceOf[Boolean])
       }),
-    ("lcc_crs_easting", "lcc_crs_easting(crs, lon, lat) - parameterized LCC forward easting (m)",
-      es => LccCrsEastingExpr(es(0), es(1), es(2))),
-    ("lcc_crs_northing", "lcc_crs_northing(crs, lon, lat) - parameterized LCC forward northing (m)",
-      es => LccCrsNorthingExpr(es(0), es(1), es(2))),
-    ("lcc_crs_lon", "lcc_crs_lon(crs, easting, northing) - parameterized LCC inverse longitude (deg)",
-      es => LccCrsLonExpr(es(0), es(1), es(2))),
-    ("lcc_crs_lat", "lcc_crs_lat(crs, easting, northing) - parameterized LCC inverse latitude (deg)",
-      es => LccCrsLatExpr(es(0), es(1), es(2))),
-    ("ps_crs_easting", "ps_crs_easting(crs, lon, lat) - polar stereographic forward easting (m)",
-      es => PsCrsEastingExpr(es(0), es(1), es(2))),
-    ("ps_crs_northing", "ps_crs_northing(crs, lon, lat) - polar stereographic forward northing (m)",
-      es => PsCrsNorthingExpr(es(0), es(1), es(2))),
-    ("ps_crs_lon", "ps_crs_lon(crs, easting, northing) - polar stereographic inverse longitude (deg)",
-      es => PsCrsLonExpr(es(0), es(1), es(2))),
-    ("ps_crs_lat", "ps_crs_lat(crs, easting, northing) - polar stereographic inverse latitude (deg)",
-      es => PsCrsLatExpr(es(0), es(1), es(2))),
-    ("utm_easting", "utm_easting(lon, lat, zone) - WGS84 UTM forward easting (m)",
-      es => UtmEastingExpr(es(0), es(1), es(2))),
-    ("utm_northing", "utm_northing(lon, lat, zone) - WGS84 UTM forward northing (m)",
-      es => UtmNorthingExpr(es(0), es(1), es(2))),
-    ("utm_lon", "utm_lon(easting, northing, zone) - WGS84 UTM inverse longitude (deg)",
-      es => UtmLonExpr(es(0), es(1), es(2))),
-    ("utm_lat", "utm_lat(easting, northing, zone) - WGS84 UTM inverse latitude (deg)",
-      es => UtmLatExpr(es(0), es(1), es(2))),
-    ("webmerc_x", "webmerc_x(lon) - EPSG:3857 forward x (m)",
-      es => WebmercXExpr(es.head)),
-    ("webmerc_y", "webmerc_y(lat) - EPSG:3857 forward y (m)",
-      es => WebmercYExpr(es.head)),
-    ("webmerc_lon", "webmerc_lon(x) - EPSG:3857 inverse longitude (deg)",
-      es => WebmercLonExpr(es.head)),
-    ("webmerc_lat", "webmerc_lat(y) - EPSG:3857 inverse latitude (deg)",
-      es => WebmercLatExpr(es.head)),
     ("crs_epsg_easting", "crs_epsg_easting(code, lon, lat) - EPSG-dispatched forward easting (m)",
       es => EpsgEastingExpr(es(0), es(1), es(2))),
     ("crs_epsg_northing", "crs_epsg_northing(code, lon, lat) - EPSG-dispatched forward northing (m)",
@@ -323,11 +283,6 @@ object GraftFunctions {
     call_function("gram_hash_set", text, k)
   def gram_tf(text: Column, k: Column): Column =
     call_function("gram_tf", text, k)
-  def lcc_easting(lon: Column, lat: Column): Column =
-    call_function("lcc_easting", lon, lat)
-  def lcc_northing(lon: Column, lat: Column): Column =
-    call_function("lcc_northing", lon, lat)
-  def lcc_lon(e: Column, n: Column): Column = call_function("lcc_lon", e, n)
   def jaro_sim(a: Column, b: Column): Column = call_function("jaro_sim", a, b)
   def jaro_winkler_sim(a: Column, b: Column): Column =
     call_function("jaro_winkler_sim", a, b)
@@ -338,7 +293,6 @@ object GraftFunctions {
     call_function("char_jaccard", a, b)
   def hamming_dist(a: Column, b: Column): Column =
     call_function("hamming_dist", a, b)
-  def lcc_lat(e: Column, n: Column): Column = call_function("lcc_lat", e, n)
   def bloom_might_contain(key: Column, bloom: Column): Column =
     call_function("bloom_might_contain", key, bloom)
 

@@ -1645,9 +1645,6 @@ object H3Core {
     cur
   }
 
-  /** expected direct-child count of a parent (pentagons lose digit 1). */
-  def childCount(h: Long): Int = if (isPentagon(h)) 6 else 7
-
   def isPentagon(h: Long): Boolean =
     isPentagonBaseCell(getBaseCell(h)) && leadingNonZeroDigit(h) == 0
 

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   * geocentric Helmert step before the projection math
   * (`/root/reference/scripts/RadiusOfGyrationHandler.py:73-85` calls
   * `to_crs("EPSG:4326")` on arbitrary input CRS). The engine's
-  * projection kernels ([[Lcc2sp]], [[TmHelpers]], [[PolarStereoProj]])
+  * projection kernels ([[Lcc2sp]], [[TmHelpers]], [[PolarStereoNorth]])
   * all assume the GRS80/WGS84 datum family; this file supplies the
   * datum leg so a catalog published on a classical datum can reach
   * WGS84 (and back) without leaving codegen.
@@ -142,10 +142,9 @@ final case class HelmertToWgs84(
   def fromWgsLat(lon: Double, lat: Double): Double =
     shift(lon, lat, GeoEllipsoid.Wgs84, src, revX, revY, revZ)._2
 
-  /** Constants for the SQL mirror template (the SqlConsts discipline
-    * of [[CrsHelpers]]/[[Lcc2sp]]): every derived double the template
-    * splices as a literal, so the oracle replays the exact kernel
-    * arithmetic.
+  /** Constants for the SQL mirror template (the [[Lcc2sp.SqlC]]
+    * discipline): every derived double the template splices as a
+    * literal, so the oracle replays the exact kernel arithmetic.
     */
   object SqlC extends Serializable {
     val pi: Double = math.Pi

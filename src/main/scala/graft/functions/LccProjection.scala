@@ -1,28 +1,23 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
-/** Parameterized Lambert Conformal Conic 2SP (r7): the generalization
-  * of the hardwired EPSG:6365 pair in [[CrsHelpers]] to ARBITRARY
-  * published 2SP parameter sets — the reference's geopandas can
-  * re-project any registered CRS (RadiusOfGyrationHandler.py:73-85),
-  * so the engine's LCC must be a parameter family, not one instance.
-  * Same Snyder (USGS PP 1395 pp. 107-109) series, identical
-  * expression sequences to the original object (bit-parity for the
-  * EPSG:6365 instance is what keeps crs_reproject's oracle hash
-  * stable), instance-scoped derived constants, and a per-instance
-  * [[Lcc2sp.SqlC]] bundle so a DuckDB mirror can replay any instance
-  * with spliced literals.
+/** Lambert Conformal Conic 2SP over arbitrary published parameter sets
+  * (F20). The reference re-projects its catalog CRS, EPSG:6365 "Mexico
+  * ITRF2008 / LCC", to geographic with geopandas before every spatial
+  * join (RadiusOfGyrationHandler.py:73-85, FactPingsBaseGenerator.py:
+  * 60-129); here that is `crs_epsg_lon/lat(6365, e, n)` through
+  * [[EpsgRegistry]], run once per catalog row, never per ping.
+  *
+  * Math: Snyder, "Map Projections — A Working Manual" (USGS PP 1395),
+  * pp. 107-109, with instance-scoped derived constants and a
+  * per-instance [[Lcc2sp.SqlC]] bundle so a DuckDB mirror can replay
+  * any instance with spliced literals (the crs_reproject oracle hash
+  * depends on the exact expression order).
   */
 final class Lcc2sp(
     val aAxis: Double, val invFlat: Double,
     val lat0Deg: Double, val lon0Deg: Double,
     val lat1Deg: Double, val lat2Deg: Double,
-    val fE: Double, val fN: Double) extends Serializable {
+    val fE: Double, val fN: Double) extends PlanarCrs {
 
   private val A = aAxis
   private val F = 1.0 / invFlat
@@ -77,8 +72,8 @@ final class Lcc2sp(
   }
 
   /** Inverse: projected (m) → latitude degrees — the fixed 8-round
-    * t⁻¹ iteration (see [[CrsHelpers.lccLat]] for why the count is
-    * fixed: the SQL mirror must unroll the identical op sequence).
+    * t⁻¹ iteration (fixed so the SQL mirror can unroll the identical
+    * op sequence).
     */
   def latOf(easting: Double, northing: Double): Double = {
     val x = easting - fE
@@ -119,8 +114,8 @@ final class Lcc2sp(
 }
 
 /** Named LCC instances with parameters from the public EPSG registry.
-  * Adding a CRS is one line: the expressions, SQL-mirror builder and
-  * specs are all parameter-driven.
+  * Adding a CRS is one line here plus its code in
+  * [[EpsgRegistry.resolve]]; the SQL-mirror builder is parameter-driven.
   */
 object CrsRegistry {
   /** Mexico ITRF2008 / LCC (the reference's catalog CRS). */
@@ -133,82 +128,4 @@ object CrsRegistry {
     */
   val Epsg3347 = new Lcc2sp(6378137.0, 298.257222101,
     63.390675, -91.86666666666667, 49.0, 77.0, 6200000.0, 3000000.0)
-
-  val byName: Map[String, Lcc2sp] = Map(
-    "EPSG:6365" -> Epsg6365,
-    "EPSG:3347" -> Epsg3347)
-}
-
-/** (crs-literal, lon/e, lat/n) → double: the parameterized LCC
-  * expression family. The CRS name resolves to its [[Lcc2sp]] instance
-  * at construction; codegen binds the instance as a reference object,
-  * so the per-row work is the same straight-line math as the
-  * hardwired expressions.
-  */
-abstract class LccCrsExpr extends TernaryExpression {
-  def first: Expression
-  def second: Expression
-  def third: Expression
-  def call: String
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!(first.dataType == StringType && first.foldable))
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects a literal CRS name as its first argument")
-    val nm = first.eval()
-    if (nm == null || !CrsRegistry.byName.contains(nm.toString))
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: unknown CRS '$nm' (registered: " +
-          s"${CrsRegistry.byName.keys.mkString(", ")})")
-    if (second.dataType == DoubleType && third.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, double, double)")
-  }
-  protected lazy val proj: Lcc2sp =
-    CrsRegistry.byName(first.eval().asInstanceOf[UTF8String].toString)
-  def evalD(p: Lcc2sp, a: Double, b: Double): Double
-  override def nullSafeEval(c: Any, a: Any, b: Any): Any =
-    evalD(proj, a.asInstanceOf[Double], b.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("lccProj", proj, classOf[Lcc2sp].getName)
-    nullSafeCodeGen(ctx, ev, (_, a, b) =>
-      s"${ev.value} = $ref.$call($a, $b);")
-  }
-}
-
-case class LccCrsEastingExpr(first: Expression, second: Expression, third: Expression)
-    extends LccCrsExpr {
-  override def call: String = "easting"
-  override def prettyName: String = "lcc_crs_easting"
-  override def evalD(p: Lcc2sp, lon: Double, lat: Double): Double = p.easting(lon, lat)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class LccCrsNorthingExpr(first: Expression, second: Expression, third: Expression)
-    extends LccCrsExpr {
-  override def call: String = "northing"
-  override def prettyName: String = "lcc_crs_northing"
-  override def evalD(p: Lcc2sp, lon: Double, lat: Double): Double = p.northing(lon, lat)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class LccCrsLonExpr(first: Expression, second: Expression, third: Expression)
-    extends LccCrsExpr {
-  override def call: String = "lonOf"
-  override def prettyName: String = "lcc_crs_lon"
-  override def evalD(p: Lcc2sp, e: Double, n: Double): Double = p.lonOf(e, n)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class LccCrsLatExpr(first: Expression, second: Expression, third: Expression)
-    extends LccCrsExpr {
-  override def call: String = "latOf"
-  override def prettyName: String = "lcc_crs_lat"
-  override def evalD(p: Lcc2sp, e: Double, n: Double): Double = p.latOf(e, n)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }

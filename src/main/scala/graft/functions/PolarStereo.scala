@@ -1,11 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
-
 /** Parameterized Polar Stereographic, north polar aspect with a known
   * standard parallel ("variant B") — Snyder, USGS PP 1395 pp. 160-163
   * (eqs. 21-30..21-35, 15-9 for t, 14-15 for m). The polar family is
@@ -18,22 +12,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * inverse-latitude iteration (so a SQL mirror can unroll the
   * IDENTICAL op sequence), and a serializable SqlC literal bundle.
   * [[PolarStereoSouth]] realizes the south aspect as the exact
-  * φ→−φ / y→−y mirror of this kernel.
+  * φ→−φ / y→−y mirror of this kernel. Both aspects are
+  * [[PlanarCrs]] members that [[EpsgRegistry]] dispatches to.
   */
-/** The (lon,lat)↔(e,n) surface both polar aspects expose — the
-  * expression family dispatches through this.
-  */
-trait PolarStereoProj extends Serializable {
-  def easting(lon: Double, lat: Double): Double
-  def northing(lon: Double, lat: Double): Double
-  def lonOf(easting: Double, northing: Double): Double
-  def latOf(easting: Double, northing: Double): Double
-}
-
 final class PolarStereoNorth(
     val aAxis: Double, val invFlat: Double,
     val latCDeg: Double, val lon0Deg: Double,
-    val fE: Double, val fN: Double) extends PolarStereoProj {
+    val fE: Double, val fN: Double) extends PlanarCrs {
 
   private val A = aAxis
   private val F = 1.0 / invFlat
@@ -116,7 +101,7 @@ final class PolarStereoNorth(
 final class PolarStereoSouth(
     val aAxis: Double, val invFlat: Double,
     val latCDeg: Double, val lon0Deg: Double,
-    val fE: Double, val fN: Double) extends PolarStereoProj {
+    val fE: Double, val fN: Double) extends PlanarCrs {
   require(latCDeg < 0, "south aspect needs a southern standard parallel")
 
   private val mirror = new PolarStereoNorth(
@@ -160,88 +145,4 @@ object PolarStereoRegistry {
     */
   val Epsg3976 = new PolarStereoSouth(
     6378137.0, 298.257223563, -70.0, 0.0, 0.0, 0.0)
-
-  val byName: Map[String, PolarStereoNorth] = Map(
-    "EPSG:3413" -> Epsg3413)
-
-  val southByName: Map[String, PolarStereoSouth] = Map(
-    "EPSG:3976" -> Epsg3976)
-
-  val anyByName: Map[String, PolarStereoProj] = byName ++ southByName
-}
-
-/** (crs-literal, a, b) → double, the [[LccCrsExpr]] pattern for the
-  * polar family.
-  */
-abstract class PsCrsExpr extends TernaryExpression {
-  def first: Expression
-  def second: Expression
-  def third: Expression
-  def call: String
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult = {
-    if (!(first.dataType == StringType && first.foldable))
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName expects a literal CRS name as its first argument")
-    val nm = first.eval()
-    if (nm == null || !PolarStereoRegistry.anyByName.contains(nm.toString))
-      return TypeCheckResult.TypeCheckFailure(
-        s"$prettyName: unknown CRS '$nm' (registered: " +
-          s"${PolarStereoRegistry.anyByName.keys.mkString(", ")})")
-    if (second.dataType == DoubleType && third.dataType == DoubleType)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (string, double, double)")
-  }
-  protected lazy val proj: PolarStereoProj =
-    PolarStereoRegistry.anyByName(first.eval().asInstanceOf[UTF8String].toString)
-  def evalD(p: PolarStereoProj, a: Double, b: Double): Double
-  override def nullSafeEval(c: Any, a: Any, b: Any): Any =
-    evalD(proj, a.asInstanceOf[Double], b.asInstanceOf[Double])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("psProj", proj,
-      classOf[PolarStereoProj].getName)
-    nullSafeCodeGen(ctx, ev, (_, a, b) =>
-      s"${ev.value} = $ref.$call($a, $b);")
-  }
-}
-
-case class PsCrsEastingExpr(first: Expression, second: Expression, third: Expression)
-    extends PsCrsExpr {
-  override def call: String = "easting"
-  override def prettyName: String = "ps_crs_easting"
-  override def evalD(p: PolarStereoProj, lon: Double, lat: Double): Double =
-    p.easting(lon, lat)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class PsCrsNorthingExpr(first: Expression, second: Expression, third: Expression)
-    extends PsCrsExpr {
-  override def call: String = "northing"
-  override def prettyName: String = "ps_crs_northing"
-  override def evalD(p: PolarStereoProj, lon: Double, lat: Double): Double =
-    p.northing(lon, lat)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class PsCrsLonExpr(first: Expression, second: Expression, third: Expression)
-    extends PsCrsExpr {
-  override def call: String = "lonOf"
-  override def prettyName: String = "ps_crs_lon"
-  override def evalD(p: PolarStereoProj, e: Double, n: Double): Double =
-    p.lonOf(e, n)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class PsCrsLatExpr(first: Expression, second: Expression, third: Expression)
-    extends PsCrsExpr {
-  override def call: String = "latOf"
-  override def prettyName: String = "ps_crs_lat"
-  override def evalD(p: PolarStereoProj, e: Double, n: Double): Double =
-    p.latOf(e, n)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
 }

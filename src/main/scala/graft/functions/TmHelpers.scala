@@ -1,15 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types._
-
 /** Clean-room Transverse Mercator (UTM zones, WGS84) and Web
   * Mercator (EPSG:3857) — the generalization of the CRS family past
   * the single EPSG:6365 LCC pair (r6 verdict "missing" #2: the
   * reference's geopandas can re-project arbitrary CRS,
-  * /root/reference/scripts/RadiusOfGyrationHandler.py:73-85; the
+  * RadiusOfGyrationHandler.py:73-85; the
   * engine now covers the three projection families that appear in
   * Mexican/US geodata practice: LCC, UTM, Web Mercator).
   *
@@ -20,7 +15,8 @@ import org.apache.spark.sql.types._
   * (explicit x*x*x powers, rad/deg spelled as /180*π and *180/π) so
   * the DuckDB oracle can replay them term-for-term; derived constants
   * are exported via [[TmHelpers.SqlConsts]] and spliced as literals —
-  * the LCC discipline (CrsExpressions.scala).
+  * the [[Lcc2sp.SqlC]] discipline. [[EpsgRegistry]] dispatches UTM
+  * (326xx/327xx) and 3857 codes here.
   */
 object TmHelpers {
   private val A = 6378137.0 // WGS84 semi-major
@@ -136,7 +132,7 @@ object TmHelpers {
     (2 * math.atan(math.exp(y / A)) - Pi / 2) * 180.0 / Pi
 
   /** Constants a SQL mirror splices as literals (zero cross-engine
-    * constant drift — same discipline as CrsHelpers.SqlConsts).
+    * constant drift — same discipline as [[Lcc2sp.SqlC]]).
     */
   object SqlConsts {
     val a: Double = A
@@ -157,110 +153,4 @@ object TmHelpers {
     val halfPi: Double = Pi / 2
     def lon0Rad(zone: Int): Double = TmHelpers.lon0(zone)
   }
-}
-
-/** (lon, lat, zone) / (e, n, zone) → double, zone a foldable literal;
-  * codegen'd straight into the helper call.
-  */
-abstract class TmTernaryExpr extends TernaryExpression {
-  def helper: String
-  def first: Expression
-  def second: Expression
-  def third: Expression
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (first.dataType == DoubleType && second.dataType == DoubleType &&
-      third.dataType == IntegerType && third.foldable)
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects (double, double, int literal zone), got " +
-        s"(${first.dataType}, ${second.dataType}, ${third.dataType})")
-  override def nullSafeEval(a: Any, b: Any, z: Any): Any = evalD(
-    a.asInstanceOf[Double], b.asInstanceOf[Double], z.asInstanceOf[Int])
-  def evalD(a: Double, b: Double, zone: Int): Double
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b, z) =>
-      s"${ev.value} = graft.functions.TmHelpers.$helper($a, $b, $z);")
-}
-
-case class UtmEastingExpr(first: Expression, second: Expression, third: Expression)
-    extends TmTernaryExpr {
-  override def helper: String = "utmEasting"
-  override def prettyName: String = "utm_easting"
-  override def evalD(lon: Double, lat: Double, zone: Int): Double =
-    TmHelpers.utmEasting(lon, lat, zone)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class UtmNorthingExpr(first: Expression, second: Expression, third: Expression)
-    extends TmTernaryExpr {
-  override def helper: String = "utmNorthing"
-  override def prettyName: String = "utm_northing"
-  override def evalD(lon: Double, lat: Double, zone: Int): Double =
-    TmHelpers.utmNorthing(lon, lat, zone)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class UtmLonExpr(first: Expression, second: Expression, third: Expression)
-    extends TmTernaryExpr {
-  override def helper: String = "utmLon"
-  override def prettyName: String = "utm_lon"
-  override def evalD(e: Double, n: Double, zone: Int): Double =
-    TmHelpers.utmLon(e, n, zone)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-case class UtmLatExpr(first: Expression, second: Expression, third: Expression)
-    extends TmTernaryExpr {
-  override def helper: String = "utmLat"
-  override def prettyName: String = "utm_lat"
-  override def evalD(e: Double, n: Double, zone: Int): Double =
-    TmHelpers.utmLat(e, n, zone)
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): Expression = copy(f, s, t)
-}
-
-/** One-double-in, one-double-out Web Mercator expressions. */
-abstract class TmUnaryExpr extends UnaryExpression {
-  def helper: String
-  override def dataType: DataType = DoubleType
-  override def checkInputDataTypes(): TypeCheckResult =
-    if (child.dataType == DoubleType) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName expects double, got ${child.dataType}")
-  override def nullSafeEval(a: Any): Any = evalD(a.asInstanceOf[Double])
-  def evalD(a: Double): Double
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, a => s"graft.functions.TmHelpers.$helper($a)")
-}
-
-case class WebmercXExpr(child: Expression) extends TmUnaryExpr {
-  override def helper: String = "webmercX"
-  override def prettyName: String = "webmerc_x"
-  override def evalD(lon: Double): Double = TmHelpers.webmercX(lon)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class WebmercYExpr(child: Expression) extends TmUnaryExpr {
-  override def helper: String = "webmercY"
-  override def prettyName: String = "webmerc_y"
-  override def evalD(lat: Double): Double = TmHelpers.webmercY(lat)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class WebmercLonExpr(child: Expression) extends TmUnaryExpr {
-  override def helper: String = "webmercLon"
-  override def prettyName: String = "webmerc_lon"
-  override def evalD(x: Double): Double = TmHelpers.webmercLon(x)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
-}
-
-case class WebmercLatExpr(child: Expression) extends TmUnaryExpr {
-  override def helper: String = "webmercLat"
-  override def prettyName: String = "webmerc_lat"
-  override def evalD(y: Double): Double = TmHelpers.webmercLat(y)
-  override protected def withNewChildInternal(c: Expression): Expression = copy(c)
 }

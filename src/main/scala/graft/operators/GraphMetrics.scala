@@ -31,19 +31,17 @@ object GraphMetrics {
       .agg(count(lit(1)).as("degree"))
   }
 
-  // the canonical presence/pair CTE strings live in Interactions —
+  // the canonical presence/pair/edge CTE strings live in Interactions —
   // referenced, not re-pasted, so an edit to the pair definition
   // cannot silently leave these oracles validating a stale spec
   private val pairsSql = Interactions.pairsSelectSql
+  private val edgesSql = Interactions.edgesSelectSql
   private val presenceSql = Interactions.presenceSql
 
   private val graphDegreesSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs)
+       |edges AS ($edgesSql)
        |SELECT node, count(*) AS degree FROM (
        |  SELECT src AS node FROM edges
        |  UNION ALL
@@ -79,10 +77,7 @@ object GraphMetrics {
   private val graphTrianglesSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs)
+       |edges AS ($edgesSql)
        |SELECT count(*) AS n_triangles
        |FROM edges e1
        |JOIN edges e2 ON e1.dst = e2.src
@@ -230,10 +225,7 @@ object GraphMetrics {
   private val pagerankSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e AS (SELECT src, dst FROM edges0
        |      UNION ALL SELECT dst AS src, src AS dst FROM edges0),
        |deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
@@ -314,10 +306,7 @@ object GraphMetrics {
   private val graphBfsDepthSql =
     s"""WITH RECURSIVE p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e AS (SELECT src, dst FROM edges0
        |      UNION ALL SELECT dst AS src, src AS dst FROM edges0),
        |reach(node, depth) AS (
@@ -430,10 +419,7 @@ object GraphMetrics {
   private val labelPropagationSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e AS (SELECT src, dst FROM edges0
        |      UNION ALL SELECT dst AS src, src AS dst FROM edges0),
        |l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
@@ -548,10 +534,7 @@ object GraphMetrics {
   private val graphComponentsSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e2 AS (SELECT src, dst FROM edges0
        |       UNION ALL SELECT dst AS src, src AS dst FROM edges0
        |       UNION ALL SELECT src, src AS dst FROM edges0
@@ -609,10 +592,7 @@ object GraphMetrics {
   private val graphAssortativitySql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e AS (SELECT src, dst FROM edges0
        |      UNION ALL SELECT dst AS src, src AS dst FROM edges0),
        |deg AS (SELECT src, count(*) AS d FROM e GROUP BY 1),
@@ -687,10 +667,7 @@ object GraphMetrics {
   private val graphModularitySql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e AS (SELECT src, dst FROM edges0
        |      UNION ALL SELECT dst AS src, src AS dst FROM edges0),
        |l0 AS (SELECT DISTINCT src AS node, src AS label FROM e),
@@ -805,10 +782,7 @@ object GraphMetrics {
   private val kcoreMembershipSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges0 AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges0 AS ($edgesSql),
        |e AS (SELECT src, dst FROM edges0
        |      UNION ALL SELECT dst AS src, src AS dst FROM edges0),
        |a0 AS (SELECT DISTINCT src AS node FROM e),
@@ -861,10 +835,7 @@ object GraphMetrics {
   private val clusteringCoefficientSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges AS ($edgesSql),
        |tri AS (
        |  SELECT e1.src AS a, e1.dst AS b, e2.dst AS c
        |  FROM edges e1
@@ -1290,10 +1261,7 @@ object GraphMetrics {
   private val graphJaccardLinksSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges AS ($edgesSql),
        |adj AS (
        |  SELECT src AS node, dst AS nbr FROM edges
        |  UNION ALL
@@ -1435,10 +1403,7 @@ object GraphMetrics {
   private val adamicAdarLinksSql =
     s"""WITH p AS ($presenceSql),
        |pairs AS ($pairsSql),
-       |edges AS (
-       |  SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |    greatest(a_caid, b_caid) AS dst
-       |  FROM pairs),
+       |edges AS ($edgesSql),
        |adj AS (
        |  SELECT src AS node, dst AS nbr FROM edges
        |  UNION ALL

@@ -64,6 +64,15 @@ object Interactions {
       |FROM p a JOIN p b
       |  ON a.cell = b.cell AND a.tw = b.tw AND a.caid != b.caid""".stripMargin
 
+  /** Canonical undirected edges (src < dst), each once, selected from
+    * a CTE named `pairs` — the edge list of empiric_edges and of every
+    * graph oracle, kept in one string like [[pairsSelectSql]].
+    */
+  private[operators] val edgesSelectSql =
+    """SELECT DISTINCT least(a_caid, b_caid) AS src,
+      |  greatest(a_caid, b_caid) AS dst
+      |FROM pairs""".stripMargin
+
   /** Max devices kept per (cell, tw) co-location group — far above
     * anything physically possible in a ~0.5 m cell / 10 min window, so
     * it only ever binds on poisoned keys.
@@ -502,9 +511,7 @@ object Interactions {
 
   private val empiricEdgesSql =
     s"""WITH pairs AS ($interactionPairsSql)
-       |SELECT DISTINCT least(a_caid, b_caid) AS src,
-       |  greatest(a_caid, b_caid) AS dst
-       |FROM pairs""".stripMargin
+       |$edgesSelectSql""".stripMargin
 
   /** Isolated nodes — devices never co-located (the reference's
     * left-join + `WHERE b_caid IS NULL` anti pattern,

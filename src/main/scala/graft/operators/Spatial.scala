@@ -548,22 +548,25 @@ object Spatial {
     * ulp drift between JVM and DuckDB can't surface, and the hex cell
     * is indexed from the ROUNDED coordinates so cell parity follows
     * from coordinate parity. The SQL mirror replays the exact Snyder
-    * inverse with the engine's own constants ([[CrsHelpers.SqlConsts]])
-    * and the same fixed 8-round t⁻¹ iteration. Round-trip and
-    * invariants additionally spec-verified (R2Spec).
+    * inverse with the engine's own constants
+    * ([[graft.functions.Lcc2sp.SqlC]] of `CrsRegistry.Epsg6365`) and the
+    * same fixed 8-round t⁻¹ iteration. Round-trip and invariants
+    * additionally spec-verified (R2Spec).
     */
   def crsReproject(spark: SparkSession, dir: String): DataFrame =
     Tables.customer(spark, dir)
       .select(col("c_custkey"),
         (lit(2300000.0) + (col("c_custkey") % 4000).cast("double") * 100.0).as("easting"),
         (lit(800000.0) + (abs(col("c_acctbal")) % 9000.0) * 100.0).as("northing"))
-      .withColumn("lon", round(lcc_lon(col("easting"), col("northing")), 6))
-      .withColumn("lat", round(lcc_lat(col("easting"), col("northing")), 6))
+      .withColumn("lon", round(call_function("crs_epsg_lon",
+        lit(6365), col("easting"), col("northing")), 6))
+      .withColumn("lat", round(call_function("crs_epsg_lat",
+        lit(6365), col("easting"), col("northing")), 6))
       .withColumn("cell", hex_index(col("lat"), col("lon"), lit(9)))
 
   private val crsReprojectSql: String = {
     import HexSql._
-    import graft.functions.CrsHelpers.{SqlConsts => C}
+    val C = graft.functions.CrsRegistry.Epsg6365.SqlC
     def lit(v: Double): String = s"CAST($v AS DOUBLE)"
     // One fixed-point round: phi <- pi/2 - 2*atan(t * ((1-e*sin phi)/(1+e*sin phi))^(e/2))
     def step(phi: String): String =
@@ -594,6 +597,27 @@ object Spatial {
        |FROM frac""".stripMargin
   }
 
+  /** Forward then inverse through `crs_epsg_*(code, …)`: adds e, n
+    * (meters, 3 dp) and lon2, lat2 (degrees, 6 dp) to a frame with
+    * lon/lat columns; the inverse consumes the ROUNDED forward columns,
+    * so its oracle parity follows from theirs. `normZero` adds + 0.0 to
+    * each column, which turns IEEE −0.0 into +0.0: at lon = CM±90° a
+    * polar northing is −ρ·cos(π/2) ≈ −1e-10, which rounds to −0.0 in
+    * DuckDB but +0.0 through Spark's BigDecimal round (the
+    * embedding_whiten r8 lesson, applied on BOTH engines).
+    */
+  private def epsgRoundTrip(code: Int, df: DataFrame,
+      normZero: Boolean): DataFrame = {
+    def proj(fn: String, a: String, b: String, scale: Int): Column = {
+      val c = round(call_function(fn, lit(code), col(a), col(b)), scale)
+      if (normZero) c + lit(0.0) else c
+    }
+    df.withColumn("e", proj("crs_epsg_easting", "lon", "lat", 3))
+      .withColumn("n", proj("crs_epsg_northing", "lon", "lat", 3))
+      .withColumn("lon2", proj("crs_epsg_lon", "e", "n", 6))
+      .withColumn("lat2", proj("crs_epsg_lat", "e", "n", 6))
+  }
+
   /** F20 generalized (r6 verdict missing #2): the CRS family past the
     * single EPSG:6365 LCC pair — WGS84 UTM (Transverse Mercator,
     * Snyder pp. 60-64, zone 14N covering the reference's Mexico
@@ -609,21 +633,19 @@ object Spatial {
     * to 3 dp (mm), degrees to 6 dp (0.1 m), and the inverse consumes
     * the ROUNDED forward columns so its parity follows from theirs.
     */
-  def crsUtmWebmerc(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
+  def crsUtmWebmerc(spark: SparkSession, dir: String): DataFrame = {
+    val pts = Tables.customer(spark, dir)
       .select(col("c_custkey"),
         (lit(-102.0) + (col("c_custkey") % 600).cast("double") / 100.0).as("lon"),
         (lit(14.0) + (abs(col("c_acctbal")) % 1500.0) / 100.0).as("lat"))
-      .withColumn("utm_e", round(call_function("utm_easting",
-        col("lon"), col("lat"), lit(14)), 3))
-      .withColumn("utm_n", round(call_function("utm_northing",
-        col("lon"), col("lat"), lit(14)), 3))
-      .withColumn("lon2", round(call_function("utm_lon",
-        col("utm_e"), col("utm_n"), lit(14)), 6))
-      .withColumn("lat2", round(call_function("utm_lat",
-        col("utm_e"), col("utm_n"), lit(14)), 6))
-      .withColumn("wm_x", round(call_function("webmerc_x", col("lon")), 3))
-      .withColumn("wm_y", round(call_function("webmerc_y", col("lat")), 3))
+    epsgRoundTrip(32614, pts, normZero = false)
+      .withColumnRenamed("e", "utm_e")
+      .withColumnRenamed("n", "utm_n")
+      .withColumn("wm_x", round(call_function("crs_epsg_easting",
+        lit(3857), col("lon"), col("lat")), 3))
+      .withColumn("wm_y", round(call_function("crs_epsg_northing",
+        lit(3857), col("lon"), col("lat")), 3))
+  }
 
   private val crsUtmWebmercSql: String = {
     import graft.functions.TmHelpers.{SqlConsts => T}
@@ -690,18 +712,11 @@ object Spatial {
     * the ROUNDED forward columns (the crs_utm_webmerc discipline).
     */
   def crsLccParam(spark: SparkSession, dir: String): DataFrame =
-    Tables.part(spark, dir)
+    epsgRoundTrip(3347, Tables.part(spark, dir)
       .select(col("p_partkey"),
         (lit(-120.0) + (col("p_partkey") % 4000).cast("double") / 100.0).as("lon"),
-        (lit(46.0) + (col("p_partkey") % 2800).cast("double") / 100.0).as("lat"))
-      .withColumn("e", round(call_function("lcc_crs_easting",
-        lit("EPSG:3347"), col("lon"), col("lat")), 3))
-      .withColumn("n", round(call_function("lcc_crs_northing",
-        lit("EPSG:3347"), col("lon"), col("lat")), 3))
-      .withColumn("lon2", round(call_function("lcc_crs_lon",
-        lit("EPSG:3347"), col("e"), col("n")), 6))
-      .withColumn("lat2", round(call_function("lcc_crs_lat",
-        lit("EPSG:3347"), col("e"), col("n")), 6))
+        (lit(46.0) + (col("p_partkey") % 2800).cast("double") / 100.0).as("lat")),
+      normZero = false)
 
   /** Parameter-driven Snyder LCC forward+inverse SQL template: emits
     * the same fixed op sequences as [[graft.functions.Lcc2sp]] with
@@ -765,22 +780,11 @@ object Spatial {
     * derived constants through a parameter-driven template.
     */
   def crsPolarStereo(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
+    epsgRoundTrip(3413, Tables.customer(spark, dir)
       .select(col("c_custkey"),
         (lit(-180.0) + (col("c_custkey") % 7200).cast("double") / 20.0).as("lon"),
-        (lit(60.0) + (col("c_custkey") % 2600).cast("double") / 100.0).as("lat"))
-      // + 0.0 normalizes IEEE −0.0: at lon = CM±90° the northing is
-      // −ρ·cos(π/2) ≈ −1e-10, which rounds to −0.0 in DuckDB but +0.0
-      // through Spark's BigDecimal round — the embedding_whiten r8
-      // lesson, applied on BOTH engines
-      .withColumn("e", round(call_function("ps_crs_easting",
-        lit("EPSG:3413"), col("lon"), col("lat")), 3) + lit(0.0))
-      .withColumn("n", round(call_function("ps_crs_northing",
-        lit("EPSG:3413"), col("lon"), col("lat")), 3) + lit(0.0))
-      .withColumn("lon2", round(call_function("ps_crs_lon",
-        lit("EPSG:3413"), col("e"), col("n")), 6) + lit(0.0))
-      .withColumn("lat2", round(call_function("ps_crs_lat",
-        lit("EPSG:3413"), col("e"), col("n")), 6) + lit(0.0))
+        (lit(60.0) + (col("c_custkey") % 2600).cast("double") / 100.0).as("lat")),
+      normZero = true)
 
   /** Parameter-driven Snyder polar-stereographic forward+inverse SQL
     * template (the [[lccRoundTripSql]] discipline for the polar
@@ -838,18 +842,11 @@ object Spatial {
     * the mirrored op sequence so parity is bit-for-bit.
     */
   def crsPolarStereoSouth(spark: SparkSession, dir: String): DataFrame =
-    Tables.customer(spark, dir)
+    epsgRoundTrip(3976, Tables.customer(spark, dir)
       .select(col("c_custkey"),
         (lit(-180.0) + (col("c_custkey") % 7200).cast("double") / 20.0).as("lon"),
-        (lit(-60.0) - (col("c_custkey") % 2600).cast("double") / 100.0).as("lat"))
-      .withColumn("e", round(call_function("ps_crs_easting",
-        lit("EPSG:3976"), col("lon"), col("lat")), 3) + lit(0.0))
-      .withColumn("n", round(call_function("ps_crs_northing",
-        lit("EPSG:3976"), col("lon"), col("lat")), 3) + lit(0.0))
-      .withColumn("lon2", round(call_function("ps_crs_lon",
-        lit("EPSG:3976"), col("e"), col("n")), 6) + lit(0.0))
-      .withColumn("lat2", round(call_function("ps_crs_lat",
-        lit("EPSG:3976"), col("e"), col("n")), 6) + lit(0.0))
+        (lit(-60.0) - (col("c_custkey") % 2600).cast("double") / 100.0).as("lat")),
+      normZero = true)
 
   /** South-aspect SQL mirror: the [[psRoundTripSql]] sequence under
     * the mirror — tf at (−lat), n = FN − (0 − ρcosθ), λ from
@@ -930,20 +927,10 @@ object Spatial {
     val k = col("c_custkey")
     def pts(lon: Column, lat: Column): DataFrame =
       cust.select(k.as("key"), lon.as("lon"), lat.as("lat"))
-    def rt(code: Int, df: DataFrame, normZero: Boolean): DataFrame = {
-      def z(c: Column): Column = if (normZero) c + lit(0.0) else c
-      df.withColumn("code", lit(code))
-        .withColumn("e", z(round(call_function("crs_epsg_easting",
-          lit(code), col("lon"), col("lat")), 3)))
-        .withColumn("n", z(round(call_function("crs_epsg_northing",
-          lit(code), col("lon"), col("lat")), 3)))
-        .withColumn("lon2", z(round(call_function("crs_epsg_lon",
-          lit(code), col("e"), col("n")), 6)))
-        .withColumn("lat2", z(round(call_function("crs_epsg_lat",
-          lit(code), col("e"), col("n")), 6)))
-        .select(col("key"), col("code"), col("lon"), col("lat"),
+    def rt(code: Int, df: DataFrame, normZero: Boolean): DataFrame =
+      epsgRoundTrip(code, df, normZero)
+        .select(col("key"), lit(code).as("code"), col("lon"), col("lat"),
           col("e"), col("n"), col("lon2"), col("lat2"))
-    }
     rt(6365, pts(lit(-104.0) + (k % 1800).cast("double") / 100.0,
         lit(15.0) + (k % 1700).cast("double") / 100.0), normZero = false)
       .unionByName(rt(3347, pts(lit(-120.0) + (k % 4000).cast("double") / 100.0,
@@ -1232,59 +1219,14 @@ object Spatial {
     * bool_and over row-local HOF parses of the WKT — one distinct
     * exchange, two 1-row aggs, nothing corpus-sized collects.
     */
-  def h3BoundaryChecks(spark: SparkSession, dir: String): DataFrame = {
-    val pts = Tables.events(spark, dir)
-      .select(((col("value") % 120.0) - 60.0).as("lat"),
-        (((col("event_id") % 3600).cast("double") / 10.0) - 180.0).as("lon"))
-    val b = pts
-      .select(h3_index(col("lat"), col("lon"), lit(7)).as("cell"))
-      .where(col("cell").isNotNull)
-      .distinct()
-      .select(col("cell"),
-        h3_boundary_wkt(col("cell")).as("wkt"),
-        h3_is_pentagon(col("cell")).as("pent"),
-        h3_center_lat(col("cell")).as("clat"),
-        h3_center_lon(col("cell")).as("clon"))
-      .withColumn("vs",
-        split(regexp_extract(col("wkt"), "^POLYGON\\(\\((.*)\\)\\)$", 1), ", "))
-      .withColumn("vlat", expr("transform(vs, s -> cast(split(s, ' ')[1] as double))"))
-      .withColumn("vlon", expr("transform(vs, s -> cast(split(s, ' ')[0] as double))"))
-    val checks = b.agg(
-      bool_and(element_at(col("vs"), 1) === element_at(col("vs"), -1))
-        .as("ring_closed"),
-      bool_and(size(col("vs")) === when(col("pent"), 6).otherwise(7))
-        .as("vertex_arity"),
-      bool_and(expr("forall(vlat, v -> abs(v - clat) <= 0.15)") &&
-        expr("forall(vlon, v -> least(abs(v - clon), 360.0 - abs(v - clon))" +
-          " <= 0.30)")).as("verts_near_center"),
-      bool_and(h3_index(col("clat"), col("clon"), lit(7)) === col("cell"))
-        .as("center_roundtrip"),
-      count(lit(1)).as("n_cells"))
-    val nPts = pts.distinct().agg(count(lit(1)).as("n_pts"))
-    checks.crossJoin(broadcast(nPts))
-      .select(explode(array(
-        struct(lit("ring_closed").as("chk"), col("ring_closed").as("ok")),
-        struct(lit("vertex_arity").as("chk"), col("vertex_arity").as("ok")),
-        struct(lit("verts_near_center").as("chk"),
-          col("verts_near_center").as("ok")),
-        struct(lit("center_roundtrip").as("chk"),
-          col("center_roundtrip").as("ok")),
-        struct(lit("cell_count_bounded").as("chk"),
-          (col("n_cells") >= 1 && col("n_cells") <= col("n_pts")).as("ok"))))
-        .as("c"))
-      .select(col("c.chk").as("chk"), col("c.ok").as("ok"))
-  }
-
-  private val h3BoundaryChecksSql =
-    """SELECT chk, ok FROM (VALUES
-      |  ('ring_closed', true), ('vertex_arity', true),
-      |  ('verts_near_center', true), ('center_roundtrip', true),
-      |  ('cell_count_bounded', true)) AS t(chk, ok)""".stripMargin
+  def h3BoundaryChecks(spark: SparkSession, dir: String): DataFrame =
+    boundaryScorecard(spark, dir, h3_boundary_wkt,
+      size(col("vs")) === when(col("pent"), 6).otherwise(7))
 
   /** Scorecard form of the SUBSTRATE-exact boundary (r9 — closes the
     * last "missing" line: h3lib's own construction with Class III
     * distortion vertices at icosahedron-edge crossings, which the
-    * dual construction structurally lacks). Same fixed-check shape as
+    * dual construction structurally lacks). Same fixed checks as
     * [[h3BoundaryChecks]]; arity here is a band (6 substrate vertices
     * + up to 4 inserted edge crossings at Class III res 7; pentagons
     * exactly 10). The sharp substrate properties — derived
@@ -1293,7 +1235,18 @@ object Spatial {
     * H3SubstrateBoundarySpec, which also guarantees crossings are
     * exercised (random fixture points may or may not hit a fold).
     */
-  def h3BoundaryExactChecks(spark: SparkSession, dir: String): DataFrame = {
+  def h3BoundaryExactChecks(spark: SparkSession, dir: String): DataFrame =
+    boundaryScorecard(spark, dir, h3_boundary_exact_wkt,
+      when(col("pent"), size(col("vs")) === 11)
+        .otherwise(size(col("vs")).between(7, 11)))
+
+  /** The five-row (chk, ok) scorecard both boundary queries share:
+    * `boundary` renders a cell's WKT ring, `arityOk` judges its vertex
+    * list `vs` (closing vertex included) against the pentagon flag
+    * `pent`.
+    */
+  private def boundaryScorecard(spark: SparkSession, dir: String,
+      boundary: Column => Column, arityOk: Column): DataFrame = {
     val pts = Tables.events(spark, dir)
       .select(((col("value") % 120.0) - 60.0).as("lat"),
         (((col("event_id") % 3600).cast("double") / 10.0) - 180.0).as("lon"))
@@ -1302,7 +1255,7 @@ object Spatial {
       .where(col("cell").isNotNull)
       .distinct()
       .select(col("cell"),
-        h3_boundary_exact_wkt(col("cell")).as("wkt"),
+        boundary(col("cell")).as("wkt"),
         h3_is_pentagon(col("cell")).as("pent"),
         h3_center_lat(col("cell")).as("clat"),
         h3_center_lon(col("cell")).as("clon"))
@@ -1313,8 +1266,7 @@ object Spatial {
     val checks = b.agg(
       bool_and(element_at(col("vs"), 1) === element_at(col("vs"), -1))
         .as("ring_closed"),
-      bool_and(when(col("pent"), size(col("vs")) === 11)
-        .otherwise(size(col("vs")).between(7, 11))).as("vertex_arity"),
+      bool_and(arityOk).as("vertex_arity"),
       bool_and(expr("forall(vlat, v -> abs(v - clat) <= 0.15)") &&
         expr("forall(vlon, v -> least(abs(v - clon), 360.0 - abs(v - clon))" +
           " <= 0.30)")).as("verts_near_center"),
@@ -1336,7 +1288,8 @@ object Spatial {
       .select(col("c.chk").as("chk"), col("c.ok").as("ok"))
   }
 
-  private val h3BoundaryExactChecksSql =
+  /** Oracle of both boundary scorecards: every check holds. */
+  private val boundaryScorecardSql =
     """SELECT chk, ok FROM (VALUES
       |  ('ring_closed', true), ('vertex_arity', true),
       |  ('verts_near_center', true), ('center_roundtrip', true),
@@ -1671,8 +1624,8 @@ object Spatial {
     Op("hex_cells", hexCells, Some(hexCellsSql)),
     Op("h3_cells", h3CellsVerdict, Some(h3CellsVerdictSql)),
     Op("h3_rg", h3RgVerdict, Some(h3RgVerdictSql)),
-    Op("h3_boundary", h3BoundaryChecks, Some(h3BoundaryChecksSql)),
-    Op("h3_boundary_exact", h3BoundaryExactChecks, Some(h3BoundaryExactChecksSql)),
+    Op("h3_boundary", h3BoundaryChecks, Some(boundaryScorecardSql)),
+    Op("h3_boundary_exact", h3BoundaryExactChecks, Some(boundaryScorecardSql)),
     Op("h3_polyfill", h3PolyfillChecks, Some(h3PolyfillChecksSql)),
     Op("h3_compact", h3CompactChecks, Some(h3CompactChecksSql)),
     Op("hex_kring_neighbors", hexKringNeighbors, Some(hexKringNeighborsSql)),

@@ -9,8 +9,7 @@ import org.apache.spark.sql.functions._
   * engine composes stages lazily and only materializes at declared
   * checkpoints, but it supports the same physical formats:
   * parquet scans/globs (S1-S3), Hive-partitioned datasets with
-  * partition pruning (S2/S8), CSV with schema inference (S4/S10),
-  * and a bench-log append table (S14).
+  * partition pruning (S2/S8) and CSV with schema inference (S4/S10).
   */
 object Sources {
 
@@ -31,10 +30,6 @@ object Sources {
     */
   def csv(spark: SparkSession, path: String): DataFrame =
     spark.read.option("header", "true").option("inferSchema", "true").csv(path)
-
-  /** S7/S9: parquet sink (overwrite). */
-  def writeParquet(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).parquet(path)
 
   /** S8: partitioned parquet sink — the reference's
     * `partition_cols=["year","month","day","cve_zm"]` layout
@@ -180,16 +175,4 @@ object Sources {
       .select(col("feature.properties.*"),
         col("feature.geometry.type").as("geometry_type"),
         to_json(col("feature.geometry")).as("geometry"))
-
-  /** S14: bench-log append table (same three-column schema as the
-    * reference's Benchmark DuckDB table —
-    * /root/reference/src/utils/stopwatch.py:63-79).
-    */
-  def logBench(spark: SparkSession, path: String, start: java.sql.Timestamp,
-      end: java.sql.Timestamp, elapsedSecs: Double): Unit = {
-    import spark.implicits._
-    Seq((start, end, elapsedSecs))
-      .toDF("start_date", "end_date", "elapsed_time")
-      .write.mode(SaveMode.Append).parquet(path)
-  }
 }

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.functions.{call_function, col, floor, lit, when}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions._
 
@@ -12,23 +14,11 @@ import graft.functions._
 class EpsgDispatchSpec extends AnyFunSuite {
 
   test("dispatch delegates bit-exactly to the family kernels") {
-    // conic: EPSG:6365 == the registered Lcc2sp instance
-    val lcc = EpsgRegistry.resolve(6365)
-    val lccRef = CrsRegistry.Epsg6365
-    for ((lon, lat) <- Seq((-99.1, 19.4), (-103.3, 20.7), (-89.6, 21.0))) {
-      assert(lcc.easting(lon, lat) == lccRef.easting(lon, lat))
-      assert(lcc.northing(lon, lat) == lccRef.northing(lon, lat))
-      val (e, n) = (lccRef.easting(lon, lat), lccRef.northing(lon, lat))
-      assert(lcc.lonOf(e, n) == lccRef.lonOf(e, n))
-      assert(lcc.latOf(e, n) == lccRef.latOf(e, n))
-    }
-    // polar, both aspects
-    val psN = EpsgRegistry.resolve(3413)
-    assert(psN.easting(-45.0, 70.0)
-      == PolarStereoRegistry.Epsg3413.easting(-45.0, 70.0))
-    val psS = EpsgRegistry.resolve(3976)
-    assert(psS.northing(10.0, -75.0)
-      == PolarStereoRegistry.Epsg3976.northing(10.0, -75.0))
+    // conic and polar codes resolve to the registered kernel instances
+    assert(EpsgRegistry.resolve(6365) eq CrsRegistry.Epsg6365)
+    assert(EpsgRegistry.resolve(3347) eq CrsRegistry.Epsg3347)
+    assert(EpsgRegistry.resolve(3413) eq PolarStereoRegistry.Epsg3413)
+    assert(EpsgRegistry.resolve(3976) eq PolarStereoRegistry.Epsg3976)
     // cylindrical: UTM north == the zone helpers, FN = 0
     val utm14 = EpsgRegistry.resolve(32614)
     assert(utm14.easting(-99.0, 19.4) == TmHelpers.utmEasting(-99.0, 19.4, 14))
@@ -84,6 +74,55 @@ class EpsgDispatchSpec extends AnyFunSuite {
     // and a non-literal code fails analysis too (plan-time dispatch only)
     intercept[Exception] {
       df.selectExpr("crs_epsg_easting(CAST(lon AS INT), lon, lat)").collect()
+    }
+  }
+
+  test("crs_epsg_* return the kernel's doubles, codegen'd and interpreted") {
+    // (lon0, lat0, dLon, dLat) of a 5 x 5 grid inside each code's domain
+    val grids = Seq(
+      6365 -> (-110.0, 15.0, 5.5, 4.0), 3347 -> (-120.0, 46.0, 15.0, 7.0),
+      3413 -> (-180.0, 60.0, 90.0, 6.0), 3976 -> (-180.0, -85.0, 90.0, 6.0),
+      32614 -> (-102.0, 14.0, 1.5, 3.75), 32723 -> (-48.0, -25.0, 1.5, 5.0),
+      3857 -> (-149.95, -69.95, 75.0, 35.0))
+    def bits(d: Double): Long = java.lang.Double.doubleToLongBits(d)
+    val base = Sessions.build("epsg-spec", "2")
+    for (codegen <- Seq(true, false)) {
+      // a child session, so the codegen confs stay out of the shared one
+      val s = base.newSession()
+      s.conf.set("spark.sql.codegen.wholeStage", codegen.toString)
+      s.conf.set("spark.sql.codegen.factoryMode",
+        if (codegen) "CODEGEN_ONLY" else "NO_CODEGEN")
+      s.conf.set("spark.sql.codegen.fallback", "false")
+      for ((code, (lon0, lat0, dLon, dLat)) <- grids) {
+        val p = EpsgRegistry.resolve(code)
+        def f(fn: String, a: String, b: String) =
+          call_function(s"crs_epsg_$fn", lit(code), col(a), col(b))
+        // row 25 has a null lat: every output must be null
+        val df = s.range(0, 26)
+          .select(col("id"),
+            (lit(lon0) + (col("id") % 5).cast("double") * dLon).as("lon"),
+            when(col("id") < 25,
+              lit(lat0) + floor(col("id") / 5).cast("double") * dLat).as("lat"))
+          .select(col("id"), col("lon"), col("lat"),
+            f("easting", "lon", "lat").as("e"), f("northing", "lon", "lat").as("n"))
+          .select(col("id"), col("lon"), col("lat"), col("e"), col("n"),
+            f("lon", "e", "n").as("lon2"), f("lat", "e", "n").as("lat2"))
+        val wholeStage = df.queryExecution.executedPlan
+          .collect { case w: WholeStageCodegenExec => w }.nonEmpty
+        assert(wholeStage == codegen, s"EPSG:$code codegen=$codegen plan")
+        val rows = df.orderBy("id").collect()
+        assert(rows.length == 26)
+        val where = s"EPSG:$code codegen=$codegen"
+        for (r <- rows.take(25)) {
+          val (lon, lat, e, n) =
+            (r.getDouble(1), r.getDouble(2), r.getDouble(3), r.getDouble(4))
+          assert(bits(e) == bits(p.easting(lon, lat)), s"$where easting($lon, $lat)")
+          assert(bits(n) == bits(p.northing(lon, lat)), s"$where northing($lon, $lat)")
+          assert(bits(r.getDouble(5)) == bits(p.lonOf(e, n)), s"$where lon($e, $n)")
+          assert(bits(r.getDouble(6)) == bits(p.latOf(e, n)), s"$where lat($e, $n)")
+        }
+        assert((2 to 6).forall(rows(25).isNullAt), s"$where null lat")
+      }
     }
   }
 }

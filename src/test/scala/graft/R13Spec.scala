@@ -197,19 +197,9 @@ class R13Spec extends AnyFunSuite {
         math.abs(TmHelpers.webmercLat(TmHelpers.webmercY(lat)) - lat) < 1e-12)
   }
 
-  test("parameterized LCC: EPSG:6365 bit-parity, EPSG:3347 invariants") {
-    import graft.functions.{CrsHelpers, CrsRegistry}
-    // the refactored delegation must be bit-identical to the original
-    // hardwired math (the crs_reproject oracle hash depends on it)
-    for (lon <- Seq(-101.3, -98.0); lat <- Seq(15.2, 27.9)) {
-      val e = CrsRegistry.Epsg6365.easting(lon, lat)
-      val n = CrsRegistry.Epsg6365.northing(lon, lat)
-      assert(e == CrsHelpers.lccEasting(lon, lat))
-      assert(n == CrsHelpers.lccNorthing(lon, lat))
-      assert(CrsRegistry.Epsg6365.lonOf(e, n) == CrsHelpers.lccLon(e, n))
-      assert(CrsRegistry.Epsg6365.latOf(e, n) == CrsHelpers.lccLat(e, n))
-    }
-    // second instance: central-meridian easting is the false easting,
+  test("parameterized LCC: EPSG:3347 invariants") {
+    import graft.functions.CrsRegistry
+    // central-meridian easting is the false easting,
     // lat0 northing is the false northing, round-trip < 1e-7 deg
     val ca = CrsRegistry.Epsg3347
     assert(math.abs(ca.easting(ca.lon0Deg, 60.0) - ca.fE) < 1e-6)

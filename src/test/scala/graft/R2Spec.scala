@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.file.Files
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.GraftFunctions.vec_dot
@@ -59,33 +59,34 @@ class R2Spec extends AnyFunSuite {
 
   test("LCC (EPSG:6365) forward/inverse: round-trip, origin, monotonicity") {
     import spark.implicits._
-    import graft.functions.GraftFunctions.{lcc_easting, lcc_lat, lcc_lon, lcc_northing}
+    def epsg(fn: String, a: Column, b: Column): Column =
+      call_function(s"crs_epsg_$fn", lit(6365), a, b)
     // Mexico-ish grid
     val pts = (for {
       lonI <- -117 to -87 by 3
       latI <- 14 to 32 by 2
     } yield (lonI.toDouble, latI.toDouble)).toDF("lon", "lat")
     val rt = pts
-      .withColumn("e", lcc_easting(col("lon"), col("lat")))
-      .withColumn("n", lcc_northing(col("lon"), col("lat")))
-      .withColumn("lon2", lcc_lon(col("e"), col("n")))
-      .withColumn("lat2", lcc_lat(col("e"), col("n")))
+      .withColumn("e", epsg("easting", col("lon"), col("lat")))
+      .withColumn("n", epsg("northing", col("lon"), col("lat")))
+      .withColumn("lon2", epsg("lon", col("e"), col("n")))
+      .withColumn("lat2", epsg("lat", col("e"), col("n")))
       .withColumn("err",
         greatest(abs(col("lon2") - col("lon")), abs(col("lat2") - col("lat"))))
     assert(rt.agg(max(col("err"))).head().getDouble(0) < 1e-9,
       "round-trip must recover degrees to 1e-9")
     // projection origin maps to the false origin exactly
     val o = Seq((-102.0, 12.0)).toDF("lon", "lat")
-      .select(lcc_easting(col("lon"), col("lat")).as("e"),
-        lcc_northing(col("lon"), col("lat")).as("n"))
+      .select(epsg("easting", col("lon"), col("lat")).as("e"),
+        epsg("northing", col("lon"), col("lat")).as("n"))
       .head()
     assert(math.abs(o.getDouble(0) - 2500000.0) < 1e-6)
     assert(math.abs(o.getDouble(1)) < 1e-6)
     // monotone: easting grows with lon (east of nothing special),
     // northing grows with lat
     val m = Seq((-103.0, 20.0), (-101.0, 20.0), (-102.0, 21.0)).toDF("lon", "lat")
-      .select(lcc_easting(col("lon"), col("lat")).as("e"),
-        lcc_northing(col("lon"), col("lat")).as("n"))
+      .select(epsg("easting", col("lon"), col("lat")).as("e"),
+        epsg("northing", col("lon"), col("lat")).as("n"))
       .collect()
     assert(m(0).getDouble(0) < 2500000.0 && m(1).getDouble(0) > 2500000.0)
     assert(m(2).getDouble(1) > m(0).getDouble(1))
